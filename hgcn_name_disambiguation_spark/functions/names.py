@@ -6,7 +6,6 @@
 - Jaro-Winkler: no Spark built-in -> Arrow-batched pandas UDF
   (vectorized per batch; pure-python kernel from the published
   Jaro 1989 / Winkler 1990 formulas).
-- Levenshtein similarity: built-in ``F.levenshtein`` (JVM-side).
 """
 
 from __future__ import annotations
@@ -95,14 +94,6 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
         return v
 
     return pd.Series(map(jw, zip(a, b)), dtype="float64")
-
-
-def levenshtein_sim(a: Column, b: Column) -> Column:
-    """1 - lev/maxlen via the JVM built-in — stays in codegen."""
-    maxlen = F.greatest(F.length(a), F.length(b))
-    return F.when(maxlen == 0, F.lit(1.0)).otherwise(
-        1.0 - F.levenshtein(a, b) / maxlen
-    )
 
 
 def name_tier(block_key_col: Column) -> Column:

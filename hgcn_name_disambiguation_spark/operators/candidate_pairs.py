@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..config import PipelineConfig, DEFAULT_CONFIG
 from ..functions.names import block_key as _name_key
-from .util import adaptive_broadcast as _adaptive_broadcast
 
 
 def _plain_self_pairs(
@@ -365,10 +364,10 @@ def _unified_channel_index(
     their own df-window exchange + self-join + pair aggregation —
     4 scans / ~4 index exchanges / 4 pair aggs for the combined graph.
     Exploding ALL channel keys from one scan into a typed (typ, key)
-    index collapses that to one scan, one window exchange (whose
-    hash partitioning the self-join reuses — the index is materialized
-    by ``localCheckpoint``, which preserves the physical partitioning,
-    so the join adds NO exchange), and one pair aggregation.
+    index collapses that to one scan, one window exchange, and one
+    pair aggregation. The index stays lazy: the window's exchange is
+    shared by the norms branch and both self-join sides through
+    ReuseExchange, so the join adds no exchange of its own.
 
     Per-channel semantics are preserved exactly:
     - author keys: normalized via the blocking-key function, focal

@@ -1,72 +1,15 @@
-"""M5 — cluster -> author-ID reporting (SURVEY §2.4 A6-A7, §2.5 W1-W2,
-§2.1 S8-S9 sinks).
+"""M5 — cluster reporting (SURVEY §2.5 W2, §2.1 S8 sink).
 
 Reference semantics, made deterministic:
-- A6 majority vote + W1 greedy unique assignment
-  (``name_disambiguation.py:205-226,703-723``): per predicted cluster
-  count truth-ID occurrences; assign each ID to its best cluster. The
-  reference's dict-iteration greedy is nondeterministic; we define the
-  order as (count DESC, cluster ASC) via a window — documented delta.
-- A7 singleton top-up (``:726-734``): truth IDs that won no cluster
-  get fresh singleton clusters.
-- W2 dense re-indexing (``:229-232,737-739``): clusters re-keyed to
-  dense "0","1",... per block by (size DESC, cluster ASC).
-- S8 clusters JSON sink (``:236-239,742-744``) and S9 metrics CSV sink
-  (``:1265-1303``, AM_nok format).
+- W2 dense re-indexing (``name_disambiguation.py:229-232,737-739``):
+  clusters re-keyed to dense "0","1",... per block by (size DESC,
+  cluster ASC).
+- S8 clusters JSON sink (``:236-239,742-744``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
-
-
-def majority_vote_assignment(
-    clustered: DataFrame,
-    truth_col: str = "label",
-    cluster_col: str = "cluster_id",
-) -> DataFrame:
-    """W1/A6: one row per (block_key, truth id) — the cluster that id
-    is assigned to, rank-1 by (count DESC, cluster ASC)."""
-    counts = (
-        clustered.where(F.col(truth_col).isNotNull())
-        .groupBy("block_key", truth_col, cluster_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = Window.partitionBy("block_key", truth_col).orderBy(
-        F.desc("n"), F.asc(cluster_col)
-    )
-    return (
-        counts.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") == 1)
-        .select(
-            "block_key",
-            F.col(truth_col).alias("author_id"),
-            F.col(cluster_col).alias("cluster_id"),
-            "n",
-        )
-    )
-
-
-def with_singleton_topup(
-    assignment: DataFrame, all_ids: DataFrame
-) -> DataFrame:
-    """A7: union in (block_key, author_id) rows absent from the
-    assignment, each as its own fresh cluster (cluster_id =
-    'singleton-<author_id>' — stable, collision-free)."""
-    missing = all_ids.join(
-        assignment.select("block_key", "author_id"),
-        ["block_key", "author_id"],
-        "left_anti",
-    )
-    topped = missing.select(
-        "block_key",
-        "author_id",
-        F.concat(F.lit("singleton-"), F.col("author_id").cast("string")).alias(
-            "cluster_id"
-        ),
-        F.lit(0).alias("n"),
-    )
-    return assignment.unionByName(topped)
 
 
 def dense_cluster_index(clusters: DataFrame) -> DataFrame:
@@ -94,54 +37,8 @@ def clusters_report(clustered: DataFrame) -> DataFrame:
     )
 
 
-def venue_paper_counts(pubs: DataFrame) -> DataFrame:
-    """A10: venue -> paper-count table.
-
-    The reference ships these as data artifacts
-    (``experimental-results/confNum{0-4,All}.txt``: TAB-separated
-    ``venue<TAB>count`` rows, no generating code in the repo — an
-    upstream AMiner-pipeline product). One aggregation regenerates
-    them from any pubs frame; ``venue`` is the parser-normalized
-    venue, and NULL venues (the reference's "null"/"Unknown"
-    placeholders) are excluded since the artifact files carry only
-    real venue strings.
-    """
-    return (
-        pubs.where(F.col("venue").isNotNull())
-        .groupBy("venue")
-        .agg(F.count(F.lit(1)).alias("paper_count"))
-    )
-
-
-def write_venue_counts(pubs: DataFrame, path: str) -> None:
-    """A10 sink in the artifact's TSV shape (venue<TAB>count)."""
-    venue_paper_counts(pubs).orderBy("venue").coalesce(1).write.mode(
-        "overwrite"
-    ).option("sep", "\t").csv(path)
-
-
 def write_clusters_json(clustered: DataFrame, path: str) -> None:
     """S8: JSON sink, one file tree partitioned by block."""
     clusters_report(clustered).write.mode("overwrite").partitionBy(
         "block_key"
     ).json(path)
-
-
-def write_metrics_csv(metrics: DataFrame, path: str) -> None:
-    """S9: AM_nok-format CSV — per-block rows plus an 'Average' row
-    (``name_disambiguation.py:1269-1299``)."""
-    per = metrics.select(
-        F.col("block_key").alias("name"),
-        F.round("precision", 4).alias("precision"),
-        F.round("recall", 4).alias("recall"),
-        F.round("f1", 4).alias("f1"),
-    )
-    avg = metrics.agg(
-        F.lit("Average").alias("name"),
-        F.round(F.avg("precision"), 4).alias("precision"),
-        F.round(F.avg("recall"), 4).alias("recall"),
-        F.round(F.avg("f1"), 4).alias("f1"),
-    )
-    avg.unionByName(per).coalesce(1).write.mode("overwrite").option(
-        "header", True
-    ).csv(path)

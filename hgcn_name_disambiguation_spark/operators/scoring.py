@@ -11,8 +11,8 @@ as the default.
 
 Everything here is built-in column arithmetic — whole-stage codegen,
 no Python in the hot path. The optional ``enrich_scores`` adds
-Jaro-Winkler (pandas UDF) + token-Jaccard + Levenshtein features for
-precision on borderline pairs.
+Jaro-Winkler (pandas UDF) + token-Jaccard features for precision on
+borderline pairs.
 """
 
 from __future__ import annotations
@@ -64,9 +64,9 @@ def enrich_scores(
     band: tuple[float, float] | None = None,
 ) -> DataFrame:
     """Join pub attributes onto pairs and add string-sim features:
-    token Jaccard (built-in array ops), venue Levenshtein similarity
-    (JVM built-in), title Jaro-Winkler (Arrow pandas UDF — only stage
-    that crosses into Python, and only for pairs inside ``band``).
+    token Jaccard (built-in array ops) and title Jaro-Winkler (Arrow
+    pandas UDF — only stage that crosses into Python, and only for
+    pairs inside ``band``).
 
     score_enriched = 0.7*score + 0.3*mean(jaccard, jw).
     """

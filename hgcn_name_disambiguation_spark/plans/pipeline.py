@@ -45,7 +45,7 @@ from ..operators.clustering import (
     refine_clusters,
     two_phase_components,
 )
-from ..operators.evaluate import metrics_summary, pairwise_metrics
+from ..operators.evaluate import pairwise_metrics
 from ..operators.name_constraints import (
     incompatible_cut,
     resolve_signature_classes,
@@ -361,24 +361,6 @@ def _semantic_merge_stage(
     )
 
 
-def compute_matches(
-    pubs: DataFrame,
-    edges: DataFrame,
-    config: PipelineConfig = DEFAULT_CONFIG,
-) -> MatchContext:
-    """Back-compat alias for build_match_context."""
-    return build_match_context(pubs, edges, config)
-
-
-def cluster_matches(
-    pubs: DataFrame,
-    ctx: MatchContext,
-    config: PipelineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """Back-compat alias for cluster_from_context."""
-    return cluster_from_context(pubs, ctx, config)
-
-
 def run_pipeline(
     repo_files: DataFrame, config: PipelineConfig = DEFAULT_CONFIG
 ) -> PipelineResult:
@@ -415,7 +397,3 @@ def verify_content_sha(repo_files: DataFrame, clustered: DataFrame) -> bool:
     missing = src.exceptAll(out).count()
     extra = out.exceptAll(src).count()
     return missing == 0 and extra == 0
-
-
-def summarize(result: PipelineResult) -> DataFrame:
-    return metrics_summary(result.metrics)

@@ -26,12 +26,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, else all
-    cores). On a real cluster, pass ``master=None`` AND launch via
-    spark-submit: the builder then inherits the submit-time master.
+    ``master=None`` under spark-submit (the driver then attaches to the
+    submit-time JVM, whose ``PYSPARK_GATEWAY_PORT`` is set) sets no
+    master, so the session inherits ``--master``. Launched by plain
+    ``python``, it defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, else
+    all cores).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if master is None:
+    if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         try:
@@ -40,10 +42,11 @@ def get_spark(
             n = os.cpu_count() or 8
         shuffle_partitions = max(n, 8)
 
+    builder = SparkSession.builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

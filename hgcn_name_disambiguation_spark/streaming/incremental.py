@@ -1,20 +1,21 @@
-"""Structured Streaming surface.
+"""Structured Streaming surface: foreachBatch sinks that keep author
+clusters current as new repo_files rows arrive.
 
 The reference is batch-only (SURVEY §2.10: no streaming constructs
 anywhere), so this module is forward-looking capability, not parity:
 
-- incremental_disambiguation: foreachBatch incremental ER — each
-  micro-batch of new repo_files rows is parsed, matched against the
-  accumulated store, and re-clustered per touched block only. This is
-  the standard "incremental entity resolution" shape: new rows can
-  only change clusters in blocks they land in, so each batch
-  re-resolves touched blocks, not the world.
-- windowed_event_counts: watermark + sliding window aggregation
-  (the canonical late-data-tolerant rollup).
-- sessionize_stream: session_window with watermark.
+- IncrementalDisambiguator: incremental ER — each micro-batch of new
+  rows is parsed, matched against the accumulated store, and
+  re-clustered per touched block only. New rows can only change
+  clusters in blocks they land in, so each batch re-resolves touched
+  blocks, not the world; the result equals the batch pipeline on the
+  union of all rows seen so far.
+- StreamingClusterAssigner: bounded-latency assignment — each
+  micro-batch is attributed to an existing clustered snapshot
+  (``operators/assign.py``) without re-clustering.
 
-All are exercised in tests with file sources + memory/foreachBatch
-sinks via processAllAvailable() — the synchronous local harness.
+Both are exercised in tests with file sources + foreachBatch sinks via
+processAllAvailable() — the synchronous local harness.
 """
 
 from __future__ import annotations
@@ -25,135 +26,6 @@ from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..operators.candidate_pairs import combined_edges
 from ..operators.parse import parse_publications
 from ..plans.pipeline import build_match_context, cluster_from_context
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "5 minutes",
-    slide: str = "1 minute",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked sliding-window counts per event_type."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
-    )
-
-
-def sessionize_stream(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """session_window sessionization (streaming analogue of the batch
-    q08 lag/cumsum form)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-
-
-def streaming_exact_dedup(
-    docs: DataFrame,
-    *,
-    event_time: str = "ts",
-    watermark: str = "1 hour",
-    content_col: str = "text",
-) -> DataFrame:
-    """Streaming twin of the batch exact dedup (operators/dedup.py
-    q13): emit each document whose content sha256 has not been seen
-    within the watermark horizon.
-
-    `dropDuplicatesWithinWatermark` keys the state store on the hash
-    only for the watermark window, so state is bounded by (ingest
-    rate x horizon), not by corpus size — the property that matters
-    when the stream is a 100-TB crawl. Exactly-once within the
-    horizon; re-crawls older than the horizon re-emit (by design —
-    the batch dedup over the accumulated sink is the global pass).
-    The hash is computed JVM-side (sha2), no Python in the hot path.
-    """
-    return (
-        docs.withColumn(
-            "content_sha", F.sha2(F.col(content_col).cast("binary"), 256)
-        )
-        .withWatermark(event_time, watermark)
-        .dropDuplicatesWithinWatermark(["content_sha"])
-    )
-
-
-def streaming_contaminated_ids(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 5,
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming twin of the batch decontamination (curation.
-    contamination_flags / q42), flag-stream form: emit the doc_id of
-    every stream document sharing ANY word n-gram shingle with a
-    STATIC eval/benchmark set.
-
-    Shape: explode shingles, stream-static LEFT SEMI against the
-    (tiny, broadcast) eval shingle frame, distinct-free — stateless,
-    so it survives an unbounded crawl with zero state store. The
-    filtered-docs form needs a per-doc aggregate or a stream-stream
-    anti-join (both unsupported/stateful); production pipelines either
-    consume this flag stream at the sink or run the batch
-    ``contamination_flags`` inside ``foreachBatch``, where every
-    micro-batch is a plain DataFrame. Shingling uses the array kernel
-    (``dedup.shingles`` — transform/sequence expressions; the batch
-    op's window-LEAD index form is not streamable), so batch and
-    stream agree on what "contaminated" means.
-    """
-    from ..operators.dedup import normalized_text, shingles
-
-    sh = lambda df: df.select(  # noqa: E731
-        "doc_id",
-        F.explode(
-            shingles(normalized_text(F.col(text_col)), n)
-        ).alias("shingle"),
-    )
-    doc_sh = sh(docs)
-    eval_sh = sh(eval_docs).select("shingle").distinct()
-    return doc_sh.join(
-        F.broadcast(eval_sh), "shingle", "left_semi"
-    ).select("doc_id", "shingle")
-
-
-def streaming_contamination_clean(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 5,
-    text_col: str = "text",
-) -> DataFrame:
-    """Filtered-docs decontamination form: keep stream documents with
-    ZERO shingle overlap against the eval set, as a pure narrow filter.
-
-    The eval shingles are collected ONCE at query-build time into a
-    plan literal (benchmarks are MBs against an unbounded corpus — the
-    asymmetry the batch op broadcasts on) and the per-row check is
-    ``arrays_overlap`` against the doc's own shingle array: JVM-side,
-    stateless, no join at all, so every Structured Streaming output
-    mode accepts it. For eval sets too big for a plan literal, use
-    ``streaming_contaminated_ids`` + a sink-side exclusion instead.
-    """
-    from ..operators.dedup import shingles
-    from ..operators.dedup import normalized_text
-
-    eval_sh = [
-        r["shingle"]
-        for r in (
-            eval_docs.select(
-                F.explode(
-                    shingles(normalized_text(F.col(text_col)), n)
-                ).alias("shingle")
-            )
-            .distinct()
-            .collect()
-        )
-    ]
-    lit_arr = F.array(*[F.lit(s) for s in sorted(eval_sh)]) if eval_sh else F.array().cast("array<string>")
-    doc_arr = shingles(normalized_text(F.col(text_col)), n)
-    return docs.where(~F.arrays_overlap(doc_arr, lit_arr))
 
 
 class IncrementalDisambiguator:

@@ -1,53 +1,12 @@
-"""Structured Streaming tests: file source -> memory/foreachBatch sink,
+"""Structured Streaming tests: file source -> foreachBatch sink,
 driven synchronously with processAllAvailable()."""
-
-import json
-
-from pyspark.sql import functions as F
 
 from hgcn_name_disambiguation_spark.fixtures.generator import (
     REPO_FILES_SCHEMA,
     generate_repo_files,
 )
 from hgcn_name_disambiguation_spark.plans.pipeline import run_pipeline
-from hgcn_name_disambiguation_spark.streaming.incremental import (
-    IncrementalDisambiguator,
-    windowed_event_counts,
-)
-
-
-def test_windowed_event_counts(spark, tmp_path):
-    src = str(tmp_path / "events_src")
-    rows = [
-        {"ts": f"2024-01-01 00:{m:02d}:00", "event_type": t, "value": 1.0}
-        for m in range(0, 30, 2)
-        for t in ["click", "view"]
-    ]
-    df = spark.createDataFrame(rows).withColumn("ts", F.col("ts").cast("timestamp"))
-    df.write.mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema(df.schema).parquet(src)
-    )
-    agg = windowed_event_counts(stream, window="10 minutes", slide="10 minutes")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("win_counts")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql(
-            "SELECT window.start AS s, event_type, n FROM win_counts"
-        ).collect()
-    finally:
-        q.stop()
-    counts = {(str(r.s), r.event_type): r.n for r in got}
-    # 5 events per type per 10-minute tumble
-    assert counts[("2024-01-01 00:00:00", "click")] == 5
-    assert counts[("2024-01-01 00:10:00", "view")] == 5
-    assert counts[("2024-01-01 00:20:00", "click")] == 5
+from hgcn_name_disambiguation_spark.streaming.incremental import IncrementalDisambiguator
 
 
 def test_incremental_matches_batch(spark, tmp_path):
@@ -90,229 +49,3 @@ def test_incremental_matches_batch(spark, tmp_path):
         for r in batch.select("block_key", "pub_id", "cluster_id").collect()
     )
     assert got == want
-
-
-def test_block_pressure_monitor_state_across_batches(spark, tmp_path):
-    """applyInPandasWithState: state (running n, signature set) must
-    accumulate ACROSS micro-batches, pair_budget = C(n,2), and the
-    gate_pressure flag must flip once n crosses amb_gate_min_n."""
-    import dataclasses
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from hgcn_name_disambiguation_spark.config import DEFAULT_CONFIG
-    from hgcn_name_disambiguation_spark.streaming.stateful import (
-        block_pressure_monitor,
-    )
-
-    schema = StructType(
-        [
-            StructField("block_key", StringType()),
-            StructField("author_sig", StringType()),
-        ]
-    )
-    src = str(tmp_path / "pubs_src")
-    b1 = [("john smith", f"sig{i % 3}") for i in range(4)] + [
-        ("lei wang", "a")
-    ]
-    b2 = [("john smith", f"extra{i}") for i in range(3)]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    cfg = dataclasses.replace(DEFAULT_CONFIG, amb_gate_min_n=6)
-    stream = spark.readStream.schema(schema).parquet(src)
-    per_batch: list = []
-    q = (
-        block_pressure_monitor(stream, cfg)
-        .writeStream.outputMode("update")
-        .foreachBatch(lambda df, bid: per_batch.append(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(b2, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rows = {
-        (b_i, r.block_key): r
-        for b_i, batch in enumerate(per_batch)
-        for r in batch
-        if batch
-    }
-    js1 = rows[(0, "john smith")]
-    assert js1.n_pubs == 4 and js1.pair_budget == 6
-    assert js1.n_signatures == 3 and not js1.gate_pressure
-    assert rows[(0, "lei wang")].n_pubs == 1
-
-    js2 = rows[(1, "john smith")]
-    assert js2.n_pubs == 7, "state did not accumulate across batches"
-    assert js2.pair_budget == 21
-    assert js2.n_signatures == 6  # {sig0-2} from b1 union {extra0-2}
-    assert js2.gate_pressure  # 7 >= amb_gate_min_n=6
-    assert (1, "lei wang") not in rows, "untouched block re-emitted"
-
-
-def test_streaming_exact_dedup(spark, tmp_path):
-    """Streaming exact dedup: duplicate content within the watermark
-    horizon is emitted once; distinct content all passes."""
-    from hgcn_name_disambiguation_spark.streaming.incremental import (
-        streaming_exact_dedup,
-    )
-
-    src = str(tmp_path / "docs_src")
-    rows = [
-        {"ts": f"2024-01-01 00:{m:02d}:00", "doc_id": m,
-         "text": f"doc body {m % 7}"}  # 7 distinct bodies over 20 docs
-        for m in range(20)
-    ]
-    df = spark.createDataFrame(rows).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    df.write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    out = streaming_exact_dedup(stream, watermark="2 hours")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql("SELECT text, content_sha FROM dedup_out").collect()
-    finally:
-        q.stop()
-    assert len(got) == 7
-    assert len({r.content_sha for r in got}) == 7
-    # matches the batch distinct-on-sha result
-    batch = df.select(
-        F.sha2(F.col("text").cast("binary"), 256).alias("s")
-    ).distinct().count()
-    assert batch == 7
-
-
-def test_streaming_decontamination(spark, tmp_path):
-    """Stream-static decontamination, both forms: the flag stream
-    (stateless semi-join) marks exactly the docs sharing a 3-gram with
-    the static eval set; the literal-array filter keeps exactly the
-    clean ones — and both agree with the batch operator's verdicts."""
-    from hgcn_name_disambiguation_spark.operators.curation import (
-        contamination_flags,
-    )
-    from hgcn_name_disambiguation_spark.streaming.incremental import (
-        streaming_contaminated_ids,
-        streaming_contamination_clean,
-    )
-
-    bench = "alpha beta gamma delta epsilon"
-    rows = [
-        {"doc_id": 0, "text": "intro alpha beta gamma outro words"},  # hit
-        {"doc_id": 1, "text": "totally clean body of running text"},
-        {"doc_id": 2, "text": bench},                                  # hit
-        {"doc_id": 3, "text": "another clean one with fresh tokens"},
-    ]
-    docs = spark.createDataFrame(rows)
-    src = str(tmp_path / "decon_src")
-    docs.write.mode("overwrite").parquet(src)
-    ev = spark.createDataFrame([{"doc_id": 100, "text": bench}])
-
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-
-    flags = streaming_contaminated_ids(stream, ev, n=3)
-    q1 = (
-        flags.writeStream.outputMode("append").format("memory")
-        .queryName("decon_flags").start()
-    )
-    clean = streaming_contamination_clean(stream, ev, n=3)
-    q2 = (
-        clean.writeStream.outputMode("append").format("memory")
-        .queryName("decon_clean").start()
-    )
-    try:
-        q1.processAllAvailable()
-        q2.processAllAvailable()
-        hit_ids = {
-            r.doc_id for r in spark.sql(
-                "SELECT DISTINCT doc_id FROM decon_flags").collect()
-        }
-        kept = {
-            r.doc_id for r in spark.sql(
-                "SELECT doc_id FROM decon_clean").collect()
-        }
-    finally:
-        q1.stop()
-        q2.stop()
-    assert hit_ids == {0, 2}
-    assert kept == {1, 3}
-    # batch/stream agreement on the contamination verdict
-    batch = {
-        r["doc_id"]
-        for r in contamination_flags(docs, ev, n=3).collect()
-        if r["contaminated"] == 1
-    }
-    assert batch == hit_ids
-
-
-def test_streaming_code_curation(spark, tmp_path):
-    """The code-curation screens (quality metrics, secret scan) are
-    stateless narrow projections, so they run UNCHANGED on a stream in
-    append mode — assert bit-identical batch/stream results."""
-    from hgcn_name_disambiguation_spark.operators.code_quality import (
-        code_quality_metrics,
-        scan_secrets,
-    )
-
-    src = str(tmp_path / "code_src")
-    rows = [
-        ("r0", "a.py", "c1", "py", "def f():\n    return 1"),
-        ("r0", "b.py", "c1", "py", 'k = "AKIA' + "ABCDEFGHIJKLMNOP" + '"'),
-        ("r1", "gen.py", "c1", "py",
-         "# Auto-Generated by tool, DO NOT EDIT\n" + "x" * 40),
-        ("r1", "long.py", "c1", "py", "z" * 1200),
-    ]
-    df = spark.createDataFrame(
-        rows, "repo string, path string, commit string, lang string,"
-        " content string"
-    )
-    df.write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    q1 = (
-        code_quality_metrics(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("cq_stream")
-        .start()
-    )
-    q2 = (
-        scan_secrets(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sec_stream")
-        .start()
-    )
-    try:
-        q1.processAllAvailable()
-        q2.processAllAvailable()
-        got_cq = sorted(
-            map(tuple, spark.sql("SELECT * FROM cq_stream").collect())
-        )
-        got_sec = sorted(
-            map(tuple, spark.sql("SELECT * FROM sec_stream").collect())
-        )
-    finally:
-        q1.stop()
-        q2.stop()
-    assert got_cq == sorted(map(tuple, code_quality_metrics(df).collect()))
-    assert got_sec == sorted(map(tuple, scan_secrets(df).collect()))
-    # the screens actually fired
-    keep = {(r[1], r[-1]) for r in got_cq}  # (path, keep)
-    assert ("gen.py", 0) in keep and ("long.py", 0) in keep
-    assert ("a.py", 1) in keep
