@@ -888,6 +888,80 @@ def remove_dup_spans(
     )
 
 
+def _dot(a: Column, b: Column) -> Column:
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def _norm(a: Column) -> Column:
+    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def cosine(a: Column, b: Column) -> Column:
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def sample_centroids(
+    corpus: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    num_cells: int = 16,
+    seed: int = 42,
+    hash_mode: str = "xxhash64",
+) -> list[tuple[int, list[float]]]:
+    """Deterministic seeded corpus sample used as coarse-quantizer
+    centroids for ``semantic_dedup``.
+
+    Centroid selection = hash-threshold FILTER (keep the 1/mod slice of
+    seeded hash values) + hash-min-k on the slice; the min-k compiles
+    to TakeOrderedAndProject (per-partition heap, no shuffle / no full
+    sort). If the corpus is too small to fill the slice, the slice
+    widens geometrically. Result is the global hash-min-k of the slice
+    — deterministic under any partitioning/layout; the driver holds
+    exactly ``num_cells`` rows. ``hash_mode='md5'`` uses md5-hex
+    prefix slices so a DuckDB oracle can replicate the draw."""
+    if hash_mode == "md5":
+        keyed = corpus.select(
+            F.col(id_col).alias("cid"),
+            F.col(vec_col).alias("cvec"),
+            F.md5(
+                F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string"))
+            ).alias("_h"),
+        )
+        cents = []
+        for pl in (3, 2, 1, 0):
+            sliced = (
+                keyed.where(F.substring("_h", 1, pl) == "0" * pl)
+                if pl
+                else keyed
+            )
+            cents = (
+                sliced.orderBy("_h", "cid").limit(num_cells).collect()
+            )
+            if len(cents) >= num_cells:
+                break
+    else:
+        keyed = corpus.select(
+            F.col(id_col).alias("cid"),
+            F.col(vec_col).alias("cvec"),
+            F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)).alias("_h"),
+        )
+        mod = 1 << 14
+        cents = []
+        while True:
+            cents = (
+                keyed.where(F.pmod("_h", F.lit(mod)) == 0)
+                .orderBy("_h", "cid")
+                .limit(num_cells)
+                .collect()
+            )
+            if len(cents) >= num_cells or mod == 1:
+                break
+            mod = max(1, mod >> 4)
+    return [(i, [float(x) for x in r.cvec]) for i, r in enumerate(cents)]
+
+
 def semantic_dedup(
     emb: DataFrame,
     theta: float = 0.95,
@@ -922,8 +996,6 @@ def semantic_dedup(
     Returns one row per item: (id, cell, n_theta_nbrs, kept).
     Integer/boolean outputs only — hash-stable across engines.
     """
-    from .similarity import cosine, sample_centroids
-
     if num_cells is None:
         n = emb.count()  # one scalar: sizes the quantizer from the data
         num_cells = max(4, -(-n // rows_per_cell))

@@ -386,3 +386,58 @@ def mad_anomalies(
             F.col("adev").cast("long").alias("adev"),
         )
     )
+
+
+def token_entropy(
+    df: DataFrame,
+    group_col: str,
+    text_col: str = "text",
+) -> DataFrame:
+    """Per-group token-distribution Shannon entropy in integer
+    micro-nats (round 5) — the corpus-diversity number a mixing
+    report publishes next to composition counts: low entropy flags
+    templated/boilerplate-heavy sources, high entropy flags diverse
+    ones (Shannon 1948; the nat-denominated form).
+
+        H = ln(N) - (sum_t c_t * ln(c_t)) / N
+
+    over the group's token counts c_t (N = total tokens). Encoding is
+    the q50/q59/q66 integer micro-unit pattern: each term contributes
+    c_t * floor(1e6 * ln(c_t)) — a BIGINT — and the mean is exact
+    integer `div`, so the output is order-insensitive and replays
+    bit-for-bit in a second engine (a free-floating DOUBLE mean would
+    not; the only residual risk is an ln value within one ulp of a
+    1e-6 boundary, ~1e-10 odds per distinct count).
+
+    Returns (group_col, n_tokens, n_distinct_tokens,
+    entropy_micro_nats). Scale shape: one map-side-combined count
+    shuffle on (group, token) + one per-group agg over the count
+    frame — bounded by vocabulary, never corpus size.
+    """
+    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+    toks = df.select(
+        F.col(group_col).alias("grp"),
+        F.explode(F.split(norm, " ")).alias("token"),
+    ).where(F.col("token") != "")
+    counts = toks.groupBy("grp", "token").agg(
+        F.count(F.lit(1)).alias("c")
+    )
+    g = counts.groupBy("grp").agg(
+        F.sum("c").cast("long").alias("n_tokens"),
+        F.count(F.lit(1)).cast("long").alias("n_distinct_tokens"),
+        F.sum(
+            F.col("c")
+            * F.floor(F.lit(1_000_000.0) * F.log(F.col("c"))).cast("long")
+        ).alias("_s"),
+    )
+    return g.select(
+        F.col("grp").alias(group_col),
+        "n_tokens",
+        "n_distinct_tokens",
+        (
+            F.floor(F.lit(1_000_000.0) * F.log(F.col("n_tokens"))).cast(
+                "long"
+            )
+            - F.expr("_s div n_tokens")
+        ).alias("entropy_micro_nats"),
+    )

@@ -4,7 +4,10 @@ re-implemented as oracle (name_disambiguation.py:111-133)."""
 import itertools
 import random
 
-from hgcn_name_disambiguation_spark.operators.evaluate import pairwise_metrics
+from hgcn_name_disambiguation_spark.operators.evaluate import (
+    metrics_summary,
+    pairwise_metrics,
+)
 
 
 def _oracle_prf(truth, pred):
@@ -37,3 +40,38 @@ def test_pairwise_metrics_matches_bruteforce(spark):
     for b, (p, r_, f1) in expected.items():
         gp, gr, gf = got[b]
         assert abs(gp - p) < 1e-9 and abs(gr - r_) < 1e-9 and abs(gf - f1) < 1e-9
+
+    summary = metrics_summary(pairwise_metrics(df)).first()
+    want_f1 = sum(v[2] for v in expected.values()) / 2
+    assert abs(summary.avg_f1 - want_f1) < 1e-9
+    assert summary.n_blocks == 2
+
+
+def test_fs_channel_weights_hand_computed(spark):
+    from hgcn_name_disambiguation_spark.operators.evaluate import (
+        fs_channel_weights,
+    )
+    import math
+
+    # channel A: m = 3/4, u = 1/4; channel B: m_num = 0 (clamped to 1).
+    rows = [
+        (True, "A", True), (True, "A", True), (True, "A", True),
+        (True, "A", False),
+        (False, "A", True), (False, "A", False), (False, "A", False),
+        (False, "A", False),
+        (True, "B", False), (True, "B", False),
+        (False, "B", True), (False, "B", False),
+    ]
+    df = spark.createDataFrame(rows, ["truth", "channel", "agree"])
+    out = {r["channel"]: r for r in fs_channel_weights(df).collect()}
+    a = out["A"]
+    assert (a["n_match"], a["n_unmatch"], a["m_num"], a["u_num"]) == (
+        4, 4, 3, 1,
+    )
+    assert (a["m_ppm"], a["u_ppm"]) == (750000, 250000)
+    fln = lambda c: math.floor(1_000_000 * math.log(c))
+    assert a["weight_micro_nats"] == fln(3) - fln(4) - fln(1) + fln(4)
+    b = out["B"]
+    assert (b["m_num"], b["u_num"], b["m_ppm"]) == (0, 1, 0)
+    # clamp: ln(max(0,1)) = 0 -> weight = -fln(2) - fln(1) + fln(2) = 0
+    assert b["weight_micro_nats"] == fln(1) - fln(2) - fln(1) + fln(2)

@@ -224,7 +224,7 @@ def test_profile_invariants_random_frame(spark):
 
 
 def test_token_entropy_hand_computed(spark):
-    from hgcn_name_disambiguation_spark.operators.textstats import (
+    from hgcn_name_disambiguation_spark.operators.profile import (
         token_entropy,
     )
 

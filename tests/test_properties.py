@@ -1,9 +1,10 @@
 """Property-based tests (hypothesis) for pure-Python kernels.
 
-These guard invariant CLASSES rather than examples: a structural
-property can break for every input while each example-level test
-still passes. No Spark session: all targets are pure Python, so
-hundreds of generated examples run in milliseconds.
+These guard invariant CLASSES rather than examples — motivated by the
+round-3 hyperplane bug, where every example-level test passed while a
+structural property (hash avalanche -> bucket spread) was silently
+broken for every input. No Spark session: all targets are pure Python,
+so hundreds of generated examples run in milliseconds.
 """
 
 from __future__ import annotations
@@ -11,6 +12,29 @@ from __future__ import annotations
 from hypothesis import given, settings, strategies as st
 
 from hgcn_name_disambiguation_spark.functions.text import porter_stem
+from hgcn_name_disambiguation_spark.operators.dedup import _M64, _mix64
+
+
+@given(st.integers(min_value=0, max_value=_M64))
+def test_mix64_range_and_determinism(x):
+    y = _mix64(x)
+    assert 0 <= y <= _M64
+    assert _mix64(x) == y
+
+
+@settings(max_examples=300)
+@given(
+    st.integers(min_value=0, max_value=_M64),
+    st.integers(min_value=0, max_value=63),
+)
+def test_mix64_single_bit_avalanche(x, bit):
+    """Flipping ONE input bit must flip many output bits. The broken
+    round-1/2 generator was linear in its inputs (zero avalanche),
+    which collapsed every LSH bucket; splitmix64's finalizer gives
+    ~32 flipped bits on average — 12 is a safe floor for any input."""
+    y1 = _mix64(x)
+    y2 = _mix64(x ^ (1 << bit))
+    assert bin(y1 ^ y2).count("1") >= 12
 
 
 @settings(max_examples=300)

@@ -1,4 +1,4 @@
-"""Structured Streaming tests: file source -> foreachBatch sink,
+"""Structured Streaming tests: file source -> memory/foreachBatch sink,
 driven synchronously with processAllAvailable()."""
 
 from hgcn_name_disambiguation_spark.fixtures.generator import (
@@ -49,3 +49,61 @@ def test_incremental_matches_batch(spark, tmp_path):
         for r in batch.select("block_key", "pub_id", "cluster_id").collect()
     )
     assert got == want
+
+
+def test_streaming_code_curation(spark, tmp_path):
+    """The code-curation screens (quality metrics, secret scan) are
+    stateless narrow projections, so they run UNCHANGED on a stream in
+    append mode — assert bit-identical batch/stream results."""
+    from hgcn_name_disambiguation_spark.operators.code_quality import (
+        code_quality_metrics,
+        scan_secrets,
+    )
+
+    src = str(tmp_path / "code_src")
+    rows = [
+        ("r0", "a.py", "c1", "py", "def f():\n    return 1"),
+        ("r0", "b.py", "c1", "py", 'k = "AKIA' + "ABCDEFGHIJKLMNOP" + '"'),
+        ("r1", "gen.py", "c1", "py",
+         "# Auto-Generated by tool, DO NOT EDIT\n" + "x" * 40),
+        ("r1", "long.py", "c1", "py", "z" * 1200),
+    ]
+    df = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string,"
+        " content string"
+    )
+    df.write.mode("overwrite").parquet(src)
+
+    stream = spark.readStream.schema(df.schema).parquet(src)
+    q1 = (
+        code_quality_metrics(stream)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("cq_stream")
+        .start()
+    )
+    q2 = (
+        scan_secrets(stream)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("sec_stream")
+        .start()
+    )
+    try:
+        q1.processAllAvailable()
+        q2.processAllAvailable()
+        got_cq = sorted(
+            map(tuple, spark.sql("SELECT * FROM cq_stream").collect())
+        )
+        got_sec = sorted(
+            map(tuple, spark.sql("SELECT * FROM sec_stream").collect())
+        )
+    finally:
+        q1.stop()
+        q2.stop()
+    assert got_cq == sorted(map(tuple, code_quality_metrics(df).collect()))
+    assert got_sec == sorted(map(tuple, scan_secrets(df).collect()))
+    # the screens actually fired
+    keep = {(r[1], r[-1]) for r in got_cq}  # (path, keep)
+    assert ("gen.py", 0) in keep and ("long.py", 0) in keep
+    assert ("a.py", 1) in keep
