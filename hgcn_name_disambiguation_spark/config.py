@@ -135,16 +135,6 @@ class PipelineConfig:
     salt_buckets: int = 8
     salt_df_threshold: int = 64
 
-    # --- connected components ---
-    cc_max_iterations: int = 25
-    # localCheckpoint cadence (rounds): 1 = truncate lineage eagerly
-    # every round — measured fastest in local mode (every=3 with
-    # persist() in between cost +2s/+38% on the sf0.1 flagship CC: the
-    # deeper in-between plans outweigh the saved checkpoint I/O here).
-    # On a real cluster with reliable-checkpoint-to-HDFS costs, raise
-    # it to trade plan depth for checkpoint traffic.
-    cc_checkpoint_every: int = 1
-
     # --- name-constraint channel (operators.name_constraints) ---
     # Extract the focal author's given-name signature per pub (e.g.
     # "John R. Smith" in block "john smith" -> ['john','r']), resolve

@@ -17,15 +17,90 @@ Five tiers, cheapest-first — the standard corpus-dedup ladder:
                            bucketed by random-hyperplane LSH signs.
 
 Every operator returns canonical (id_a < id_b) pair frames or cluster
-assignments; clustering dedup groups reuses the engine's
-connected-components operator (clustering.py).
+assignments; dedup groups are the connected components of one global
+pair graph (``_connected_components``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .clustering import connected_components
+
+def _canon(edges: DataFrame) -> DataFrame:
+    """Canonical undirected edge list (u > v), no self-loops, distinct."""
+    u = F.greatest("src", "dst").alias("u")
+    v = F.least("src", "dst").alias("v")
+    return (
+        edges.select(u, v)
+        .where(F.col("u") != F.col("v"))
+        .dropDuplicates(["u", "v"])
+    )
+
+
+def _large_star(edges: DataFrame) -> DataFrame:
+    """For each u: connect every strictly-larger neighbor to
+    min(N(u) ∪ {u})."""
+    bidir = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    mins = (
+        bidir.groupBy("u")
+        .agg(F.min("v").alias("mv"))
+        .select("u", F.least("mv", "u").alias("m"))
+    )
+    return (
+        bidir.join(mins, "u")
+        .where(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("src"), F.col("m").alias("dst"))
+    )
+
+
+def _small_star(edges: DataFrame) -> DataFrame:
+    """For each u (over smaller neighbors N⁻(u)): connect u and all of
+    N⁻(u) to min(N⁻(u))."""
+    mins = edges.groupBy("u").agg(F.min("v").alias("m"))
+    nbr_edges = edges.join(mins, "u").select(
+        F.col("v").alias("src"), F.col("m").alias("dst")
+    )
+    self_edges = mins.select(F.col("u").alias("src"), F.col("m").alias("dst"))
+    return nbr_edges.union(self_edges)
+
+
+def _is_star_forest(edges: DataFrame) -> bool:
+    """The large-star/small-star iteration is at its fixpoint exactly
+    when the canonical edge set is a star forest: every u points at a
+    single v and no v is itself a u."""
+    deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("c"))
+    vs = edges.select(F.col("v").alias("u")).distinct()
+    nonstar = (
+        deg.where(F.col("c") > 1)
+        .select("u")
+        .unionByName(deg.join(vs, "u", "left_semi").select("u"))
+    )
+    return nonstar.isEmpty()
+
+
+def _connected_components(edges: DataFrame) -> DataFrame:
+    """edges(src, dst) -> (node, component) for every node in any edge;
+    component = min node id of the component.
+
+    Dedup pair graphs have no block key to split them, so this is the
+    distributed alternating large-star/small-star iteration (Kiveris et
+    al., "Connected Components in MapReduce and Beyond", SoCC'14): at
+    most 25 rounds, each truncating lineage with an eager
+    ``localCheckpoint`` and probing for the star-forest fixpoint.
+    """
+    cur = _canon(edges).localCheckpoint(eager=True)
+    if not _is_star_forest(cur):  # degenerate inputs converge at once
+        for _ in range(25):
+            cur = _canon(_small_star(_canon(_large_star(cur))))
+            cur = cur.localCheckpoint(eager=True)
+            if _is_star_forest(cur):
+                break
+    # At fixpoint every edge is (node -> component root).
+    comp = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
+    roots = cur.select(F.col("v").alias("node")).distinct().withColumn(
+        "component", F.col("node")
+    )
+    return comp.unionByName(roots).dropDuplicates(["node"])
 
 
 def normalized_text(text: Column) -> Column:
@@ -682,13 +757,13 @@ def embedding_neardup_pairs(
 
 
 def dedup_clusters(pairs: DataFrame) -> DataFrame:
-    """Resolve near-dup pairs into groups via the engine's
-    large-star/small-star CC; keeper = min doc id per group."""
+    """Resolve near-dup pairs into groups via connected components;
+    keeper = min doc id per group."""
     edges = pairs.select(
         F.col("id_a").cast("string").alias("src"),
         F.col("id_b").cast("string").alias("dst"),
     )
-    comp = connected_components(edges)
+    comp = _connected_components(edges)
     return comp.select(
         F.col("node").alias("doc_id"), F.col("component").alias("group_id")
     )
@@ -703,8 +778,8 @@ def canonical_keep_list(
     document's near-dup component and singletons keep themselves.
 
     Composes any pair emitter (minhash_lsh_pairs / simhash_pairs /
-    ngram_jaccard_pairs / embedding near-dup) with the engine's
-    large-star/small-star CC; the canonical choice is re-derived as
+    ngram_jaccard_pairs / embedding near-dup) with connected
+    components; the canonical choice is re-derived as
     the NUMERIC min over the component (component ids are min STRING
     node — '10' < '9' lexicographically — so the representative is
     recomputed, not reused). Filter is_canonical to materialize the
@@ -714,7 +789,7 @@ def canonical_keep_list(
         F.col("id_a").cast("string").alias("src"),
         F.col("id_b").cast("string").alias("dst"),
     )
-    comp = connected_components(edges)
+    comp = _connected_components(edges)
     ids = docs.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(id_col).cast("string").alias("_node"),
@@ -1369,9 +1444,8 @@ def fork_families(
     min_containment_ppm: int = 500_000,
 ) -> DataFrame:
     """Transitive fork families: threshold the repo_fork_pairs graph
-    at min_containment_ppm and resolve connected components (the same
-    large-star/small-star fixpoint as the ER path — a fork of a fork
-    belongs to the original's family), then union every repo from
+    at min_containment_ppm and resolve connected components (a fork
+    of a fork belongs to the original's family), then union every repo from
     `repos` that joined no family as its own singleton. family_id is
     the lexicographic MIN repo of the component — deterministic under
     any partitioning or input order.
@@ -1381,7 +1455,7 @@ def fork_families(
     edges = pairs.where(
         F.col("containment_ppm") >= min_containment_ppm
     ).select(F.col("repo_a").alias("src"), F.col("repo_b").alias("dst"))
-    cc = connected_components(edges).select(
+    cc = _connected_components(edges).select(
         F.col("node").alias("repo"), F.col("component").alias("family_id")
     )
     allr = repos.select(F.col(repo_col).alias("repo")).distinct()

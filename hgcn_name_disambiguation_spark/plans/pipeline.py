@@ -7,8 +7,9 @@ sequential loop (``name_disambiguation.py:785``,
 
   repo_files --parse--> pubs --edges--> combined_edges --fuse-->
   scored pairs --[name constraints + ambiguity-adaptive threshold]-->
-  match graph --CC (two-phase)--> clustered pubs --[auto-calibrated
-  cluster refine]--> final clusters --evaluate--> per-block P/R/F1
+  match graph --CC (per-block union-find)--> clustered pubs
+  --[auto-calibrated cluster refine]--> final clusters --evaluate-->
+  per-block P/R/F1
 
 The adaptive layer (round 3) is what separates this engine from the
 reference's one-global-threshold design; every decision is a measured
@@ -23,9 +24,9 @@ numbers):
    blocks modest title similarity is accepted as a match,
 3. an evidence-richness gate turns the recall levers OFF in
    dense-evidence corpora where they would over-merge,
-4. clustering is two-phase connected components (strong evidence
-   first; weak bridges contracted), then tier-aware cluster-level
-   agglomeration (clustering.refine_clusters).
+4. clustering is connected components of the match graph, one
+   union-find per block (clustering.connected_components), then
+   tier-aware cluster-level agglomeration (clustering.refine_clusters).
 
 Each stage is exposed separately for checkpoint/resume (plans.stages);
 this module is the pure dataflow.
@@ -33,18 +34,14 @@ this module is the pure dataflow.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig, DEFAULT_CONFIG
 from ..functions.names import name_tier
 from ..operators.candidate_pairs import combined_edges
-from ..operators.clustering import (
-    _SEP,
-    refine_clusters,
-    two_phase_components,
-)
+from ..operators.clustering import assign_clusters, refine_clusters
 from ..operators.evaluate import pairwise_metrics
 from ..operators.name_constraints import (
     incompatible_cut,
@@ -74,15 +71,11 @@ class MatchContext:
              after constraints, the ambiguity gate, and the rare-tier
              rescue.
     traits:  per-block (tier, gated, sparse) — drives refine.
-    strong_matches: the high-evidence subset of matches (the two-phase
-             CC seeds its first phase with these).
     """
 
     scored: DataFrame
     matches: DataFrame
     traits: DataFrame
-    strong_matches: DataFrame
-    comp1: DataFrame | None = None
 
 
 def build_match_context(
@@ -113,8 +106,8 @@ def build_match_context(
     else:
         flagged = flagged.withColumn("sig_cut", F.lit(False))
     # Materialize the flagged pair frame ONCE: every downstream branch
-    # (strong/weak/rescue splits, richness, bridges, refine evidence)
-    # consumes it, and without truncation each action re-pays both the
+    # (strong/weak/rescue splits, richness, refine evidence) consumes
+    # it, and without truncation each action re-pays both the
     # execution AND the multi-second Catalyst planning of the full
     # scoring+constraint expression tree (measured: the planning time,
     # not the data, dominated small-input runs). At cluster scale this
@@ -140,36 +133,17 @@ def build_match_context(
     )
 
     keep = F.col("is_match") & ~F.col("sig_cut")
-    strong = flagged.where(keep & ~F.col("is_weak"))
     sel = lambda df: df.select(  # noqa: E731
         "block_key", "id_a", "id_b", F.col(score_col).alias("score")
     )
-    strong_matches = sel(strong)
+    strong = sel(flagged.where(keep & ~F.col("is_weak")))
 
     if config.weak_bridge_gate:
         # gate statistics come from the strong-evidence components:
         # per amb-tier block, is the strong graph fragmented?
-        node = lambda c: F.concat_ws(_SEP, F.col("block_key"), c)  # noqa: E731
-        from ..operators.clustering import connected_components
-
-        comp1 = connected_components(
-            strong_matches.select(
-                node(F.col("id_a")).alias("src"),
-                node(F.col("id_b")).alias("dst"),
-            ),
-            config=config,
-        )
-        keyed = pubs.select(
-            "block_key", "pub_id", node(F.col("pub_id")).alias("_node")
-        )
-        assigned = keyed.join(
-            comp1, keyed["_node"] == comp1["node"], "left"
-        ).select(
-            "block_key",
-            F.coalesce("component", "_node").alias("_comp"),
-        )
+        assigned = assign_clusters(pubs.select("block_key", "pub_id"), strong)
         bstats = (
-            assigned.groupBy("block_key", "_comp")
+            assigned.groupBy("block_key", "cluster_id")
             .agg(F.count(F.lit(1)).alias("_cn"))
             .groupBy("block_key")
             .agg(
@@ -231,17 +205,11 @@ def build_match_context(
         else flagged.where(F.lit(False))
     )
     matches = (
-        strong_matches.unionByName(sel(weak_kept))
+        strong.unionByName(sel(weak_kept))
         .unionByName(sel(rescue))
         .dropDuplicates(["block_key", "id_a", "id_b"])
     )
-    return MatchContext(
-        flagged,
-        matches,
-        traits,
-        strong_matches,
-        comp1=comp1 if config.weak_bridge_gate else None,
-    )
+    return MatchContext(flagged, matches, traits)
 
 
 def cluster_from_context(
@@ -249,41 +217,11 @@ def cluster_from_context(
     ctx: MatchContext,
     config: PipelineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """Match context -> pubs with ``cluster_id``: two-phase CC (strong
-    components + contracted bridges), then auto-calibrated cluster
-    refinement. Unmatched pubs become singleton clusters (P7)."""
-    node = lambda bk, pid: F.concat_ws(_SEP, bk, pid)  # noqa: E731
-    to_nodes = lambda df: df.select(  # noqa: E731
-        node(F.col("block_key"), F.col("id_a")).alias("src"),
-        node(F.col("block_key"), F.col("id_b")).alias("dst"),
-    )
-    bridges = ctx.matches.join(
-        ctx.strong_matches.select("block_key", "id_a", "id_b"),
-        ["block_key", "id_a", "id_b"],
-        "left_anti",
-    )
-    comp = two_phase_components(
-        to_nodes(ctx.strong_matches),
-        to_nodes(bridges),
-        config,
-        # the ambiguity gate already ran the strong-graph CC — phase 1
-        # is reused, not recomputed
-        comp1=ctx.comp1,
-    )
-    keyed = pubs.withColumn(
-        "_node", node(F.col("block_key"), F.col("pub_id"))
-    )
-    clustered = (
-        keyed.join(comp, keyed["_node"] == comp["node"], "left")
-        .withColumn(
-            "cluster_id",
-            F.coalesce(
-                F.split_part(F.col("component"), F.lit(_SEP), F.lit(2)),
-                F.col("pub_id"),
-            ),
-        )
-        .drop("node", "component", "strong_component", "_node")
-    )
+    """Match context -> pubs with ``cluster_id``: connected components
+    of the match graph (one union-find per block), then auto-calibrated
+    cluster refinement and the semantic merge. Unmatched pubs become
+    singleton clusters (P7)."""
+    clustered = assign_clusters(pubs, ctx.matches)
     if config.cluster_refine_rounds > 0:
         clustered = refine_clusters(
             clustered, ctx.scored, config, traits=ctx.traits
@@ -372,18 +310,6 @@ def run_pipeline(
     return PipelineResult(
         pubs, edges, ctx.scored, ctx.matches, clustered, metrics
     )
-
-
-def with_matches(ctx: MatchContext, matches: DataFrame) -> MatchContext:
-    """Swap in an externally materialized match frame (stage resume)
-    while keeping the context's traits/flags; strong_matches must stay
-    a subset of matches, so it is re-derived as the intersection."""
-    strong = ctx.strong_matches.join(
-        matches.select("block_key", "id_a", "id_b"),
-        ["block_key", "id_a", "id_b"],
-        "left_semi",
-    )
-    return replace(ctx, matches=matches, strong_matches=strong)
 
 
 def verify_content_sha(repo_files: DataFrame, clustered: DataFrame) -> bool:

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -109,11 +109,7 @@ def disambiguation_stages(runner: StageRunner, config=None) -> StageRunner:
     from ..operators.candidate_pairs import combined_edges
     from ..operators.evaluate import pairwise_metrics
     from ..operators.parse import parse_publications
-    from ..plans.pipeline import (
-        build_match_context,
-        cluster_from_context,
-        with_matches,
-    )
+    from ..plans.pipeline import build_match_context, cluster_from_context
 
     cfg = config or DEFAULT_CONFIG
     # the match context built by the 'matches' stage is reused by
@@ -134,7 +130,7 @@ def disambiguation_stages(runner: StageRunner, config=None) -> StageRunner:
         # cluster from the CHECKPOINTED match frame (durable stage
         # boundary), not the in-memory plan that produced it
         return cluster_from_context(
-            d["pubs"], with_matches(ctx, d["matches"]), cfg
+            d["pubs"], replace(ctx, matches=d["matches"]), cfg
         )
 
     runner.add("pubs", lambda d: parse_publications(d["repo_files"], cfg))

@@ -9,9 +9,11 @@ so hundreds of generated examples run in milliseconds.
 
 from __future__ import annotations
 
+import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from hgcn_name_disambiguation_spark.functions.text import porter_stem
+from hgcn_name_disambiguation_spark.operators.clustering import _union_find
 from hgcn_name_disambiguation_spark.operators.dedup import _M64, _mix64
 
 
@@ -59,3 +61,57 @@ def test_porter_stem_stays_lowercase_alpha(w):
     # suffix stripping may rewrite (e.g. 'at' -> 'ate') but never grows
     # a word by more than one character
     assert len(s) <= len(w) + 1
+
+
+_block_edges = st.lists(
+    st.tuples(
+        st.sampled_from(["a", "b"]),
+        st.sampled_from([f"p{i}" for i in range(8)]),
+        st.sampled_from([f"p{i}" for i in range(8)]),
+    ),
+    min_size=1,
+    max_size=30,
+)
+
+
+def _kernel(edges):
+    """Run the per-block connected-components kernel the way the
+    grouped map does: once per block, outputs concatenated."""
+    out = {}
+    for bk in sorted({e[0] for e in edges}):
+        pdf = pd.DataFrame(
+            [e for e in edges if e[0] == bk], columns=["block_key", "src", "dst"]
+        )
+        for r in _union_find(pdf).itertuples(index=False):
+            assert (r.block_key, r.node) not in out
+            out[(r.block_key, r.node)] = r.component
+    return out
+
+
+def _oracle(edges):
+    """Components by repeated min-label propagation to a fixpoint."""
+    label = {(b, n): n for b, u, v in edges if u != v for n in (u, v)}
+    changed = True
+    while changed:
+        changed = False
+        for b, u, v in edges:
+            if u == v:
+                continue
+            m = min(label[(b, u)], label[(b, v)])
+            for n in (u, v):
+                if label[(b, n)] != m:
+                    label[(b, n)] = m
+                    changed = True
+    return label
+
+
+@settings(max_examples=300)
+@given(_block_edges, st.randoms(use_true_random=False))
+def test_union_find_kernel_equals_oracle_in_any_edge_order(edges, rnd):
+    """The CC kernel gives every node of a non-self-loop edge its
+    block's min-node component id, whatever the edge order."""
+    want = _oracle(edges)
+    assert _kernel(edges) == want
+    shuffled = list(edges)
+    rnd.shuffle(shuffled)
+    assert _kernel(shuffled) == want

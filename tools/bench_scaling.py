@@ -100,7 +100,7 @@ def run_once(input_path: str, json_out: str, label: str) -> None:
     # --- timed: threshold + connected components to final clusters ---
     t1 = time.perf_counter()
     matches = threshold_matches(scored, cfg, score_col="score_enriched")
-    clustered = assign_clusters(pubs, matches, cfg)
+    clustered = assign_clusters(pubs, matches)
     n_rows = clustered.count()
     cc_wall = time.perf_counter() - t1
 
@@ -325,7 +325,7 @@ def write_report(summary: dict, lo: dict, hi: dict, ratio: float) -> None:
         "fresh JVM via `spark-submit --py-files` — at two executor-slot",
         "counts. Throughput = candidate-pairs-scored/sec over the scoring",
         "phase (inverted-index joins + fusion + Arrow-batched Jaro-Winkler",
-        "enrichment); e2e adds threshold + large-star/small-star CC.",
+        "enrichment); e2e adds threshold + per-block union-find CC.",
         "",
         "| run | cores | pubs | pairs scored | scoring wall (s) | pairs/sec | map-phase pairs/sec | e2e wall (s) |",
         "|---|---|---|---|---|---|---|---|",
