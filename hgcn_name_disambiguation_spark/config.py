@@ -202,12 +202,6 @@ class PipelineConfig:
     refine_min_edges_rare: int = 1
     refine_min_edges_common: int = 2
     refine_min_edges_amb: int = 2
-    # legacy single-threshold knobs (used when tier columns are absent,
-    # e.g. refine_clusters called standalone without block traits)
-    cluster_merge_tau: float = 0.10
-    # a cluster-pair merge additionally needs >= this many distinct
-    # cross pair-edges (corroboration; 1 disables the gate).
-    cluster_merge_min_edges: int = 2
 
     # --- corpus-internal semantic channel (operators.semantic) ---
     # Word2Vec trained on the corpus's OWN title+venue token sequences

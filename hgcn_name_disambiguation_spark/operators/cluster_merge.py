@@ -37,65 +37,39 @@ least one live rule since round 5):
    is vetoed — exactly the false-merge class the guard exists to
    prevent (round-5 fix).
 
-Scale stance: every step is keyed by (block_key[, cluster]) — the
-centroid agg is one map-side-combinable shuffle over (block, cluster,
-component-pos); the candidate join is per-block clusters x clusters,
-bounded by ``semantic_merge_max_clusters`` (blocks over the cap keep
-their CC clusters unmerged; on the reference corpus every such block
-is amb-tier and already theta-gated off). The union-find runs as one
-Arrow-batched cogroup keyed by block_key over CLUSTER-level frames
-(edges <= cap^2 per block, distinct signatures bounded by given-name
-variants) — block-parallel, never dense in the number of pubs.
+Scale stance: blocks never interact, so the members of every
+eligible block (with doc vector, focal signature and the block's rule
+knobs) go to one grouped-map pandas kernel (``_merge_block``) that runs
+all merge rounds for its block in one Python worker: one shuffle of
+pub-level rows, no per-round joins, checkpoints or actions. The kernel
+holds the block's clusters x clusters cosine matrix, bounded by
+``semantic_merge_max_clusters`` (blocks over the cap keep their CC
+clusters unmerged; on the reference corpus every such block is
+amb-tier and already theta-gated off); the maxdoc rule compares member
+vectors only for cluster pairs inside its cosine window.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
 
 
-def _centroids(members: DataFrame, doc_vecs: DataFrame) -> DataFrame:
-    """(block_key, cluster_id, cvec, cnorm) — mean member doc vector.
-
-    posexplode + hash agg, same shape as semantic.document_vectors:
-    JVM-side, shuffles on (block, cluster, pos) with map-side combine.
-    """
-    withvec = members.join(
-        doc_vecs.select("block_key", "pub_id", "vec"),
-        ["block_key", "pub_id"],
-    )
-    comp = withvec.select(
-        "block_key",
-        "cluster_id",
-        F.posexplode("vec").alias("pos", "val"),
-    )
-    cent = (
-        comp.groupBy("block_key", "cluster_id", "pos")
-        .agg(F.avg("val").alias("cval"))
-        .groupBy("block_key", "cluster_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("pos", "cval"))
-            ).alias("_comps")
-        )
-        .select(
-            "block_key",
-            "cluster_id",
-            F.transform(F.col("_comps"), lambda c: c["cval"]).alias("cvec"),
-        )
-        .withColumn(
-            "cnorm",
-            F.sqrt(
-                F.aggregate(
-                    "cvec", F.lit(0.0), lambda acc, x: acc + x * x
-                )
-            ),
-        )
-        .where(F.col("cnorm") > 0)
-    )
-    return cent
+def _spark_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Dot products over the last axis of two broadcastable arrays,
+    summed left to right from 0.0 — the order of Spark's ``aggregate``
+    over ``zip_with`` products — so a cosine at a rule threshold
+    compares exactly as it does in SQL (a BLAS dot sums in another
+    order)."""
+    out = 0.0
+    for k in range(a.shape[-1]):
+        out = out + a[..., k] * b[..., k]
+    return out
 
 
 def _py_sig_compatible(a, b) -> bool:
@@ -114,28 +88,22 @@ def _py_sig_compatible(a, b) -> bool:
     return True
 
 
-def _merge_components(edges: pd.DataFrame, sigpd: pd.DataFrame) -> pd.DataFrame:
-    """Per-block greedy merge closure (cogroup kernel).
+def _merge_components(edges, sigs) -> dict[str, str]:
+    """Per-block greedy merge closure: edges (ca, cb, cos) and member
+    (cluster_id, sig) pairs -> {cluster_id: representative} for every
+    cluster of an edge.
 
-    Edges (ca, cb, cos) are processed in descending-cosine order
-    (ties broken by (ca, cb) for determinism) through a union-find;
-    a union is applied only when the two components' accumulated
-    distinct signature sets are pairwise compatible. The component
-    representative is the minimum cluster_id — the same choice the
-    previous connected-components closure made, so unconstrained
-    blocks partition identically.
+    Edges are processed in descending-cosine order (ties broken by
+    (ca, cb) for determinism) through a union-find; a union is applied
+    only when the two components' accumulated distinct signature sets
+    are pairwise compatible. The representative is the component's
+    minimum cluster_id, so unconstrained blocks partition exactly as
+    connected components would.
     """
-    cols = ["block_key", "cluster_id", "_merged"]
-    if edges.empty:
-        return pd.DataFrame(columns=cols)
-    bk = edges["block_key"].iloc[0]
-
     sig_of: dict[str, set[tuple]] = {}
-    for cid, sig in zip(sigpd["cluster_id"], sigpd["sig"]):
-        # pandas renders a missing list cell as a float NaN
-        if sig is None or isinstance(sig, float):
-            continue
-        sig_of.setdefault(cid, set()).add(tuple(sig))
+    for cid, sig in sigs:
+        if sig is not None and len(sig):
+            sig_of.setdefault(cid, set()).add(tuple(sig))
 
     parent: dict[str, str] = {}
 
@@ -146,10 +114,7 @@ def _merge_components(edges: pd.DataFrame, sigpd: pd.DataFrame) -> pd.DataFrame:
         return x
 
     comp_sigs: dict[str, set[tuple]] = {}
-    for _, e in edges.sort_values(
-        ["cos", "ca", "cb"], ascending=[False, True, True]
-    ).iterrows():
-        ca, cb = e["ca"], e["cb"]
+    for ca, cb, _ in sorted(edges, key=lambda e: (-e[2], e[0], e[1])):
         for c in (ca, cb):
             if c not in parent:
                 parent[c] = c
@@ -168,251 +133,145 @@ def _merge_components(edges: pd.DataFrame, sigpd: pd.DataFrame) -> pd.DataFrame:
     groups: dict[str, list[str]] = {}
     for c in parent:
         groups.setdefault(find(c), []).append(c)
-    rows = []
-    for members_ in groups.values():
-        rep = min(members_)
-        for c in members_:
-            rows.append((bk, c, rep))
-    return pd.DataFrame(rows, columns=cols)
+    return {c: min(g) for g in groups.values() for c in g}
 
 
-def _merge_mapping(
-    clustered: DataFrame,
-    doc_vecs: DataFrame,
-    sigs: DataFrame,
-    eligible: DataFrame,
+def _accepted_edges(
+    cur: list[str],
+    vecs: list,
+    nvecs: list,
+    knobs: tuple[float, float, float],
     config: PipelineConfig,
-) -> DataFrame:
-    """One merge round: (block_key, cluster_id, _merged) for every
-    cluster that appears in an ACCEPTED merge edge.
+) -> list[tuple[str, str, float]]:
+    """One round's merge edges (ca, cb, cos), ca < cb, over
+    the block's current clusters ``cur`` (one id per member).
 
-    Edge acceptance is the OR of three rules over centroid cosine
-    (``eligible`` carries the per-block knobs: theta, mfloor,
-    maxdoc_theta — a value > 1.0 disables that rule for the block):
+    Centroid = mean of the member doc vectors (members without a
+    vector don't contribute; a zero-norm centroid never merges). Edge
+    acceptance is the OR of three rules over centroid cosine (``knobs``
+    = the block's theta, mfloor, maxdoc_theta — a value > 1.0 disables
+    that rule):
 
       theta:  cos >= theta (round-4 flat rule).
-      mutual: the two clusters are each other's top-1 partner, cos >=
-              mfloor, and the margin over both endpoints' second-best
-              clears semantic_merge_mutual_margin (the singleton
-              variant when either side is smaller than
-              semantic_merge_mutual_min_size). Relative evidence:
-              absolute cosine scales differ per block, mutual-top1 +
-              margin does not.
+      mutual: the two clusters are each other's top-1 partner (ranked
+              by cosine, ties to the smaller id), cos >= mfloor, and
+              the margin over both endpoints' second-best (-2.0 when
+              there is none) clears semantic_merge_mutual_margin (the
+              singleton variant when either side has fewer than
+              semantic_merge_mutual_min_size members). Relative
+              evidence: absolute cosine scales differ per block,
+              mutual-top1 + margin does not.
       maxdoc: cos in [semantic_merge_maxdoc_floor, theta) and the best
-              MEMBER document pair clears maxdoc_theta.
-
-    Scale notes: the mutual rule ranks the SAME per-block pair frame
-    the theta rule already builds (two row_number windows keyed by
-    (block, cluster) — no new shuffle volume, cap^2 bounded); the
-    maxdoc member join fans out only pairs inside the [floor, theta)
-    cosine window, each bounded by the two member counts.
+              normalized MEMBER document pair clears maxdoc_theta.
     """
-    members = clustered.join(
-        F.broadcast(eligible),
-        clustered["block_key"] == eligible["_ebk"],
-        "left_semi",
-    ).select("block_key", "pub_id", "cluster_id")
-
-    # mega-block bound: blocks whose cluster count exceeds the cap
-    # never enter the pair join (counted by the caller via eligible)
-    counts = members.groupBy("block_key").agg(
-        F.countDistinct("cluster_id").alias("_nc")
-    )
-    ok_blocks = counts.where(
-        F.col("_nc") <= config.semantic_merge_max_clusters
-    ).select("block_key")
-    members = members.join(F.broadcast(ok_blocks), "block_key", "left_semi")
-
-    cent = _centroids(members, doc_vecs).localCheckpoint(eager=False)
-
-    a = cent.alias("a")
-    b = cent.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.block_key") == F.col("b.block_key"))
-            & (F.col("a.cluster_id") < F.col("b.cluster_id")),
-        )
-        .join(
-            F.broadcast(eligible),
-            F.col("a.block_key") == eligible["_ebk"],
-        )
-        .select(
-            F.col("a.block_key").alias("block_key"),
-            F.col("a.cluster_id").alias("ca"),
-            F.col("b.cluster_id").alias("cb"),
-            (
-                F.aggregate(
-                    F.zip_with(
-                        F.col("a.cvec"),
-                        F.col("b.cvec"),
-                        lambda x, y: x * y,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / (F.col("a.cnorm") * F.col("b.cnorm"))
-            ).alias("cos"),
-            eligible["theta"],
-            eligible["mfloor"],
-            eligible["maxdoc_theta"],
-        )
+    theta, mfloor, maxdoc_theta = knobs
+    members: dict[str, list[int]] = {}
+    for i, c in enumerate(cur):
+        members.setdefault(c, []).append(i)
+    cids, cents = [], []
+    for c in sorted(members):
+        vs = [vecs[i] for i in members[c] if vecs[i] is not None]
+        if not vs:
+            continue
+        mean = reduce(np.add, vs) / len(vs)
+        if _spark_dot(mean, mean) > 0:
+            cids.append(c)
+            cents.append(mean)
+    n = len(cids)
+    if n < 2:
+        return []
+    cent = np.stack(cents)
+    norm = np.sqrt(_spark_dot(cent, cent))
+    cos = _spark_dot(cent[:, None], cent[None, :]) / (
+        norm[:, None] * norm[None, :]
     )
 
-    # --- mutual-top1 + margin (windows over the symmetrized frame) ---
-    from pyspark.sql import Window
+    # rank partners by (-cos, id): cids is sorted, so a stable sort
+    # breaks ties to the smaller id; the diagonal sorts last
+    rank = np.where(np.eye(n, dtype=bool), -np.inf, cos)
+    order = np.argsort(-rank, axis=1, kind="stable")
+    best = order[:, 0]
+    second = cos[np.arange(n), order[:, 1]] if n > 2 else np.full(n, -2.0)
+    sizes = np.array([len(members[c]) for c in cids])
 
-    sym = pairs.select(
-        "block_key", F.col("ca").alias("src"), F.col("cb").alias("dst"), "cos"
-    ).unionByName(
-        pairs.select(
-            "block_key",
-            F.col("cb").alias("src"),
-            F.col("ca").alias("dst"),
-            "cos",
+    ia, ib = np.triu_indices(n, 1)
+    c = cos[ia, ib]
+    min_size = config.semantic_merge_mutual_min_size
+    need = np.where(
+        (sizes[ia] >= min_size) & (sizes[ib] >= min_size),
+        config.semantic_merge_mutual_margin,
+        config.semantic_merge_mutual_margin_singleton,
+    )
+    accept = (c >= theta) | (
+        (c >= mfloor)
+        & (best[ia] == ib)
+        & (best[ib] == ia)
+        & (c - np.maximum(second[ia], second[ib]) >= need)
+    )
+    if maxdoc_theta <= 1.0:
+        window = (
+            ~accept & (c >= config.semantic_merge_maxdoc_floor) & (c < theta)
         )
-    )
-    w = Window.partitionBy("block_key", "src").orderBy(
-        F.desc("cos"), F.asc("dst")
-    )
-    ranked = sym.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= 2
-    )
-    top1 = ranked.where(F.col("rn") == 1).select(
-        "block_key", "src", F.col("dst").alias("best")
-    )
-    # a block with exactly two centroided clusters has no second-best:
-    # the replica convention (and the measured rule) treats the missing
-    # top-2 as -2.0, i.e. the margin always clears
-    top2 = ranked.where(F.col("rn") == 2).select(
-        "block_key", "src", F.col("cos").alias("second")
-    )
-    sizes = members.groupBy("block_key", "cluster_id").agg(
-        F.count("*").alias("sz")
-    )
+        for p in np.flatnonzero(window):
+            na, nb = (
+                [nvecs[i] for i in members[cids[x]] if nvecs[i] is not None]
+                for x in (ia[p], ib[p])
+            )
+            accept[p] = bool(na and nb) and (
+                _spark_dot(np.stack(na)[:, None], np.stack(nb)[None, :]).max()
+                >= maxdoc_theta
+            )
+    return [(cids[ia[p]], cids[ib[p]], c[p]) for p in np.flatnonzero(accept)]
 
-    cand = (
-        pairs.join(
-            top1.withColumnsRenamed({"src": "ca", "best": "_best_a"}),
-            ["block_key", "ca"],
-            "left",
-        )
-        .join(
-            top1.withColumnsRenamed({"src": "cb", "best": "_best_b"}),
-            ["block_key", "cb"],
-            "left",
-        )
-        .join(
-            top2.withColumnsRenamed({"src": "ca", "second": "_sec_a"}),
-            ["block_key", "ca"],
-            "left",
-        )
-        .join(
-            top2.withColumnsRenamed({"src": "cb", "second": "_sec_b"}),
-            ["block_key", "cb"],
-            "left",
-        )
-        .join(
-            sizes.withColumnsRenamed({"cluster_id": "ca", "sz": "_sz_a"}),
-            ["block_key", "ca"],
-        )
-        .join(
-            sizes.withColumnsRenamed({"cluster_id": "cb", "sz": "_sz_b"}),
-            ["block_key", "cb"],
-        )
-    )
 
-    # --- maxdoc (member-level best pair, [floor, theta) window only) ---
-    ndocs = (
-        members.join(
-            doc_vecs.select("block_key", "pub_id", "vec"),
-            ["block_key", "pub_id"],
-        )
-        .withColumn(
-            "_n",
-            F.sqrt(
-                F.aggregate("vec", F.lit(0.0), lambda acc, x: acc + x * x)
-            ),
-        )
-        .where(F.col("_n") > 0)
-        .select(
-            "block_key",
-            "cluster_id",
-            F.transform("vec", lambda x: x / F.col("_n")).alias("nvec"),
-        )
-    )
-    md_window = pairs.where(
-        (F.col("maxdoc_theta") <= 1.0)
-        & (F.col("cos") < F.col("theta"))
-        & (F.col("cos") >= F.lit(config.semantic_merge_maxdoc_floor))
-    ).select("block_key", "ca", "cb")
-    da = ndocs.withColumnsRenamed({"cluster_id": "ca", "nvec": "_va"})
-    db = ndocs.withColumnsRenamed({"cluster_id": "cb", "nvec": "_vb"})
-    maxdoc = (
-        md_window.join(da, ["block_key", "ca"])
-        .join(db, ["block_key", "cb"])
-        .select(
-            "block_key",
-            "ca",
-            "cb",
-            F.aggregate(
-                F.zip_with("_va", "_vb", lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("_dot"),
-        )
-        .groupBy("block_key", "ca", "cb")
-        .agg(F.max("_dot").alias("_maxdoc"))
-    )
-    cand = cand.join(maxdoc, ["block_key", "ca", "cb"], "left")
+def _merge_block(
+    members: pd.DataFrame, config: PipelineConfig
+) -> pd.DataFrame:
+    """One eligible block's semantic merge (grouped-map kernel):
+    members (block_key, pub_id, cluster_id, vec, sig, theta, mfloor,
+    maxdoc_theta) -> (block_key, cluster_id, _merged) for every cluster
+    whose id changed.
 
-    margin = F.col("cos") - F.greatest(
-        F.coalesce(F.col("_sec_a"), F.lit(-2.0)),
-        F.coalesce(F.col("_sec_b"), F.lit(-2.0)),
+    Up to ``max(1, semantic_merge_rounds)`` rounds, stopping early when
+    no cluster changes: accept edges over the current clusters'
+    centroids, then close them with the greedy signature-checked
+    union-find. Centroids, sizes and signature sets are recomputed
+    from the merged clusters every round, so clusters joined in round
+    1 present a sharper centroid to round 2."""
+    cols = ["block_key", "cluster_id", "_merged"]
+    start = members["cluster_id"].tolist()
+    if len(set(start)) > config.semantic_merge_max_clusters:
+        return pd.DataFrame(columns=cols)
+    bk = members["block_key"].iloc[0]
+    knobs = tuple(
+        float(members[k].iloc[0]) for k in ("theta", "mfloor", "maxdoc_theta")
     )
-    need_margin = F.when(
-        (F.col("_sz_a") >= config.semantic_merge_mutual_min_size)
-        & (F.col("_sz_b") >= config.semantic_merge_mutual_min_size),
-        F.lit(config.semantic_merge_mutual_margin),
-    ).otherwise(F.lit(config.semantic_merge_mutual_margin_singleton))
-    accept = (
-        (F.col("cos") >= F.col("theta"))
-        | (
-            (F.col("maxdoc_theta") <= 1.0)
-            & (F.col("cos") >= F.lit(config.semantic_merge_maxdoc_floor))
-            & (F.coalesce(F.col("_maxdoc"), F.lit(-2.0))
-               >= F.col("maxdoc_theta"))
-        )
-        | (
-            (F.col("cos") >= F.col("mfloor"))
-            & (F.col("_best_a") == F.col("cb"))
-            & (F.col("_best_b") == F.col("ca"))
-            & (margin >= need_margin)
-        )
-    )
-    edges = cand.where(accept).select("block_key", "ca", "cb", "cos")
+    sigs = members["sig"].tolist()
+    vecs = [
+        None if v is None else np.asarray(v, float) for v in members["vec"]
+    ]
+    # unit member vectors for the maxdoc rule (zero vectors never count)
+    nvecs = []
+    for v in vecs:
+        vn = None if v is None else np.sqrt(_spark_dot(v, v))
+        nvecs.append(v / vn if vn else None)
 
-    # distinct per-cluster signatures — the union-find's constraint
-    # input (given-name variants bound rows far below member counts)
-    csigs = (
-        members.join(
-            sigs.select("block_key", "pub_id", "sig"),
-            ["block_key", "pub_id"],
+    cur = start
+    for _ in range(max(1, config.semantic_merge_rounds)):
+        rep = _merge_components(
+            _accepted_edges(cur, vecs, nvecs, knobs, config), zip(cur, sigs)
         )
-        .where(F.col("sig").isNotNull() & (F.size("sig") > 0))
-        .select("block_key", "cluster_id", "sig")
-        .dropDuplicates(["block_key", "cluster_id", "sig"])
-    )
-
-    # greedy by-cosine union-find with accumulated-signature checks,
-    # one Arrow batch per block over cluster-level rows
-    return (
-        edges.groupBy("block_key")
-        .cogroup(csigs.groupBy("block_key"))
-        .applyInPandas(
-            _merge_components,
-            schema="block_key string, cluster_id string, _merged string",
-        )
+        nxt = [rep.get(c, c) for c in cur]
+        if nxt == cur:
+            break
+        cur = nxt
+    moved = {a: b for a, b in zip(start, cur) if a != b}
+    return pd.DataFrame(
+        {
+            "block_key": [bk] * len(moved),
+            "cluster_id": list(moved),
+            "_merged": list(moved.values()),
+        }
     )
 
 
@@ -435,57 +294,39 @@ def semantic_cluster_merge(
     them from tier + sparsity; missing columns default to "off", so a
     plain (block_key, theta) frame reproduces the round-4 flat-theta
     behavior). Returns ``clustered`` with ``cluster_id`` rewritten for
-    merged clusters (representative = the component id,
+    merged clusters (representative = the component's min cluster id,
     deterministic).
     """
-    # eligible is block-level (tiny at any scale); materialize it so
-    # its lineage — often shared with `clustered` via the traits frame
-    # — can't alias-collide with the centroid self-join inside.
-    for col, off in (("mfloor", 2.0), ("maxdoc_theta", 2.0)):
+    for col in ("mfloor", "maxdoc_theta"):
         if col not in eligible.columns:
-            eligible = eligible.withColumn(col, F.lit(off))
-    eligible = eligible.select(
-        F.col("block_key").alias("_ebk"), "theta", "mfloor", "maxdoc_theta"
-    ).localCheckpoint(eager=True)
-
-    # doc_vecs' lineage embeds the tokenize/IDF/word2vec transform;
-    # every mapping round reads it twice (centroids + the maxdoc
-    # member join), so truncate it once — stored partitions, computed
-    # on first use, reused by every later consumer.
-    doc_vecs = doc_vecs.localCheckpoint(eager=False)
-
-    # lazy-checkpoint the pub-level input: round 1's mapping job
-    # materializes it, so round 2 (and the caller's final action)
-    # re-reads stored partitions instead of recomputing the whole
-    # upstream pipeline once per round — the same per-round lineage
-    # truncation the CC loop uses.
-    out = clustered.localCheckpoint(eager=False)
-    live = eligible
-    for _ in range(max(1, config.semantic_merge_rounds)):
-        # the mapping is cluster-level (tiny); eager-checkpoint it so
-        # the fixpoint probe below doesn't recompute the round and the
-        # next round's lineage restarts from materialized rows
-        mapping = _merge_mapping(
-            out, doc_vecs, sigs, live, config
-        ).localCheckpoint(eager=True)
-        touched = mapping.where(
-            F.col("cluster_id") != F.col("_merged")
-        ).select(F.col("block_key").alias("_ebk")).distinct()
-        if touched.isEmpty():
-            break
-        out = (
-            out.join(mapping, ["block_key", "cluster_id"], "left")
-            .withColumn(
-                "cluster_id",
-                F.coalesce(F.col("_merged"), F.col("cluster_id")),
-            )
-            .drop("_merged")
+            eligible = eligible.withColumn(col, F.lit(2.0))
+    members = (
+        clustered.select("block_key", "pub_id", "cluster_id")
+        .join(
+            F.broadcast(
+                eligible.select("block_key", "theta", "mfloor", "maxdoc_theta")
+            ),
+            "block_key",
         )
-        # a block with no accepted edge this round has identical
-        # centroids/pairs next round and would map to the same empty
-        # result — restrict the next pass to blocks that merged, so
-        # round 2+ costs scale with the merge frontier, not the corpus
-        live = live.join(touched, "_ebk", "semi").localCheckpoint(
-            eager=True
+        .join(
+            doc_vecs.select("block_key", "pub_id", "vec"),
+            ["block_key", "pub_id"],
+            "left",
         )
-    return out
+        .join(
+            sigs.select("block_key", "pub_id", "sig"),
+            ["block_key", "pub_id"],
+            "left",
+        )
+    )
+    mapping = members.groupBy("block_key").applyInPandas(
+        lambda pdf: _merge_block(pdf, config),
+        schema="block_key string, cluster_id string, _merged string",
+    )
+    return (
+        clustered.join(mapping, ["block_key", "cluster_id"], "left")
+        .withColumn(
+            "cluster_id", F.coalesce(F.col("_merged"), F.col("cluster_id"))
+        )
+        .drop("_merged")
+    )

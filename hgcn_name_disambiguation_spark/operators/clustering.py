@@ -13,10 +13,13 @@ resolves in 0.6–0.8 s on one core of a 4-vCPU Xeon host.
 
 The component id is the lexicographic MIN node id of the component
 (== min pub id), giving stable deterministic cluster ids (SURVEY W2
-note).
+note). ``refine_clusters`` has the same shape: one cogroup kernel per
+block runs all of its merge rounds.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -24,11 +27,10 @@ from pyspark.sql import DataFrame, functions as F
 from ..config import PipelineConfig, DEFAULT_CONFIG
 
 
-def _union_find(edges: pd.DataFrame) -> pd.DataFrame:
-    """One block's edges (block_key, src, dst) -> (block_key, node,
-    component) for every node of a non-self-loop edge. A root is always
-    linked under the smaller root, so every root is its component's
-    minimum node."""
+def _min_roots(pairs) -> dict[str, str]:
+    """Union-find over (u, v) pairs -> {node: component} for every node
+    of a non-self-loop pair. A root is always linked under the smaller
+    root, so every root is its component's minimum node."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -37,7 +39,7 @@ def _union_find(edges: pd.DataFrame) -> pd.DataFrame:
             x = parent[x]
         return x
 
-    for u, v in zip(edges["src"], edges["dst"]):
+    for u, v in pairs:
         if u == v:
             continue
         for n in (u, v):
@@ -45,12 +47,18 @@ def _union_find(edges: pd.DataFrame) -> pd.DataFrame:
         ru, rv = find(u), find(v)
         if ru != rv:
             parent[max(ru, rv)] = min(ru, rv)
-    nodes = list(parent)
+    return {n: find(n) for n in parent}
+
+
+def _union_find(edges: pd.DataFrame) -> pd.DataFrame:
+    """One block's edges (block_key, src, dst) -> (block_key, node,
+    component) for every node of a non-self-loop edge."""
+    roots = _min_roots(zip(edges["src"], edges["dst"]))
     return pd.DataFrame(
         {
-            "block_key": [edges["block_key"].iloc[0]] * len(nodes),
-            "node": nodes,
-            "component": [find(n) for n in nodes],
+            "block_key": [edges["block_key"].iloc[0]] * len(roots),
+            "node": list(roots),
+            "component": list(roots.values()),
         }
     )
 
@@ -79,11 +87,63 @@ def connected_components(edges: DataFrame) -> DataFrame:
 two_phase_components = connected_components
 
 
+def _refine_block(
+    evidence: pd.DataFrame, members: pd.DataFrame, rounds: int
+) -> pd.DataFrame:
+    """One block's refinement (cogroup kernel): evidence (block_key,
+    id_a, id_b, score, _tau, _me) and members (block_key, pub_id,
+    cluster_id) -> (block_key, cluster_id, _new_cid) for every cluster
+    whose id changed.
+
+    Each round maps pubs to clusters, sums the scores and counts the
+    edges of every cluster pair, and accepts the pairs whose
+    sum / min(|A|, |B|) reaches ``_tau`` on at least ``_me`` edges
+    (sizes count every member of the block). Accepted pairs merge
+    transitively to the minimum cluster id; the next round sees the
+    merged clusters, and a round that merges nothing ends the loop."""
+    cols = ["block_key", "cluster_id", "_new_cid"]
+    if evidence.empty or members.empty:
+        return pd.DataFrame(columns=cols)
+    tau, me = evidence["_tau"].iloc[0], evidence["_me"].iloc[0]
+    edges = list(zip(evidence["id_a"], evidence["id_b"], evidence["score"]))
+    start = dict(zip(members["pub_id"], members["cluster_id"]))
+    cid = dict(start)
+    for _ in range(rounds):
+        sizes = Counter(cid.values())
+        s: dict[tuple[str, str], float] = {}
+        n: Counter = Counter()
+        for a, b, score in edges:
+            ca, cb = cid.get(a), cid.get(b)
+            if ca is None or cb is None or ca == cb:
+                continue
+            key = (ca, cb) if ca < cb else (cb, ca)
+            s[key] = s.get(key, 0.0) + score
+            n[key] += 1
+        merges = [
+            (ca, cb)
+            for (ca, cb), total in s.items()
+            if n[(ca, cb)] >= me and total / min(sizes[ca], sizes[cb]) >= tau
+        ]
+        if not merges:
+            break
+        roots = _min_roots(merges)
+        cid = {p: roots.get(c, c) for p, c in cid.items()}
+    moved = {start[p]: c for p, c in cid.items() if c != start[p]}
+    return pd.DataFrame(
+        {
+            "block_key": [evidence["block_key"].iloc[0]] * len(moved),
+            "cluster_id": list(moved),
+            "_new_cid": list(moved.values()),
+        }
+    )
+
+
 def refine_clusters(
     clustered: DataFrame,
     scored: DataFrame,
     config: PipelineConfig = DEFAULT_CONFIG,
-    traits: DataFrame | None = None,
+    *,
+    traits: DataFrame,
 ) -> DataFrame:
     """Cluster-level agglomeration — the distributed analogue of the
     reference's per-block average-linkage GHAC stage (G8,
@@ -96,8 +156,8 @@ def refine_clusters(
     are collectively strong. So: aggregate ALL scored pair evidence
     (including sub-threshold pairs) across each cluster pair,
     average-linkage-normalize, and merge cluster pairs whose affinity
-    clears ``cluster_merge_tau``; merging is one more (tiny) CC run on
-    the cluster graph, so chains merge transitively within the round.
+    clears the block's tier threshold; accepted pairs close
+    transitively to the min member cluster id within the round.
 
       affinity(A, B) = sum(pair scores between A and B)
                        / min(|A|, |B|)
@@ -105,20 +165,11 @@ def refine_clusters(
     min-normalization = "per member of the smaller cluster, how much
     aggregate evidence points across" — a mega-cluster cannot swallow a
     small one on volume alone. CAVEAT: the statistic still grows with
-    EVIDENCE DENSITY, not just match probability, so
-    ``cluster_merge_tau`` is corpus-dependent — 0.10 is the measured
-    peak on the sparse AMiner corpus but over-merges the dense
-    synthetic fixtures badly; hence rounds defaults to 0 (see config).
-    ``cluster_merge_min_edges`` adds a corroboration floor. Everything
-    is hash aggregation on (block, cluster_a, cluster_b) — bounded by
-    the scored-pair count, never n^2 in cluster sizes. Repeats
-    ``config.cluster_refine_rounds`` times (sizes/affinities recomputed
-    each round); new cluster id = min member cluster id, preserving the
-    min-pub-id convention.
+    EVIDENCE DENSITY, not just match probability, so the thresholds
+    are corpus-dependent; hence the gates below.
 
-    With ``traits`` (block_key, tier, gated, sparse — see
-    plans.pipeline.build_match_context), refinement is auto-calibrated
-    (round 3, the density-aware defaults that let rounds default on):
+    ``traits`` (block_key, tier, gated, sparse — see
+    plans.pipeline.build_match_context) auto-calibrates refinement:
     - only evidence-SPARSE blocks participate (richness gate; dense
       corpora's sub-threshold pairs are true negatives — measured
       fixture collapse P 1.0 -> 0.48 without this),
@@ -126,8 +177,12 @@ def refine_clusters(
       (config.refine_tau_* / refine_min_edges_*),
     - evidence rows flagged ``sig_cut`` (name-constraint contradiction)
       never count, and ``is_weak`` rows don't count in gated blocks.
-    Without traits the legacy single-threshold knobs apply
-    (cluster_merge_tau / cluster_merge_min_edges) over raw scores.
+
+    Blocks never interact, so each block's evidence and members go to
+    one cogroup kernel (``_refine_block``) that runs all
+    ``config.cluster_refine_rounds`` rounds on its own, recomputing
+    sizes and affinities each round: one shuffle of the evidence and
+    the members, no per-round joins or actions.
     """
     if config.cluster_refine_rounds <= 0:
         return clustered
@@ -151,122 +206,50 @@ def refine_clusters(
                 & (F.col("w_org") <= 0)
             )
         )
-    if traits is not None:
-        tr = traits.select("block_key", "tier", "gated", "sparse")
-        e = e.join(tr, "block_key", "inner").where(F.col("sparse"))
-        if "is_weak" in e.columns:
-            e = e.where(~(F.col("gated") & F.col("is_weak")))
-        tau_col = (
-            F.when(F.col("tier") == "rare", F.lit(config.refine_tau_rare))
-            .when(F.col("tier") == "common", F.lit(config.refine_tau_common))
-            .otherwise(F.lit(config.refine_tau_amb))
+    tr = traits.select("block_key", "tier", "gated", "sparse")
+    e = e.join(tr, "block_key", "inner").where(F.col("sparse"))
+    if "is_weak" in e.columns:
+        e = e.where(~(F.col("gated") & F.col("is_weak")))
+    tau_col = (
+        F.when(F.col("tier") == "rare", F.lit(config.refine_tau_rare))
+        .when(F.col("tier") == "common", F.lit(config.refine_tau_common))
+        .otherwise(F.lit(config.refine_tau_amb))
+    )
+    me_col = (
+        F.when(
+            F.col("tier") == "rare",
+            F.lit(config.refine_min_edges_rare),
         )
-        me_col = (
-            F.when(
-                F.col("tier") == "rare",
-                F.lit(config.refine_min_edges_rare),
-            )
-            .when(
-                F.col("tier") == "common",
-                F.lit(config.refine_min_edges_common),
-            )
-            .otherwise(F.lit(config.refine_min_edges_amb))
+        .when(
+            F.col("tier") == "common",
+            F.lit(config.refine_min_edges_common),
         )
-        e = e.select(
-            "block_key", "id_a", "id_b", "score",
-            tau_col.alias("_tau"), me_col.alias("_me"),
-        )
-    else:
-        e = e.select(
-            "block_key", "id_a", "id_b", "score",
-            F.lit(config.cluster_merge_tau).alias("_tau"),
-            F.lit(config.cluster_merge_min_edges).alias("_me"),
-        )
-    # The evidence frame is re-joined EVERY round — materialize it once
-    # so each round costs one join+agg, not a re-execution of the whole
-    # scoring subtree (plan depth was the round-2 OOM risk).
-    e = e.localCheckpoint(eager=True)
-    out = clustered.localCheckpoint(eager=True)
-    for _ in range(config.cluster_refine_rounds):
-        cmap = out.select("block_key", "pub_id", "cluster_id")
-        ea = cmap.select(
-            "block_key",
-            F.col("pub_id").alias("id_a"),
-            F.col("cluster_id").alias("ca"),
-        )
-        eb = cmap.select(
-            "block_key",
-            F.col("pub_id").alias("id_b"),
-            F.col("cluster_id").alias("cb"),
-        )
-        cross = (
-            e.join(ea, ["block_key", "id_a"])
-            .join(eb, ["block_key", "id_b"])
-            .where(F.col("ca") != F.col("cb"))
-            .select(
-                "block_key",
-                F.least("ca", "cb").alias("ca"),
-                F.greatest("ca", "cb").alias("cb"),
-                "score",
-                "_tau",
-                "_me",
+        .otherwise(F.lit(config.refine_min_edges_amb))
+    )
+    e = e.select(
+        "block_key", "id_a", "id_b", "score",
+        tau_col.alias("_tau"), me_col.alias("_me"),
+    )
+    rounds = config.cluster_refine_rounds
+    mapping = (
+        e.groupBy("block_key")
+        .cogroup(
+            clustered.select("block_key", "pub_id", "cluster_id").groupBy(
+                "block_key"
             )
         )
-        sizes = out.groupBy("block_key", "cluster_id").agg(
-            F.count(F.lit(1)).alias("sz")
+        .applyInPandas(
+            lambda ev, pubs: _refine_block(ev, pubs, rounds),
+            schema="block_key string, cluster_id string, _new_cid string",
         )
-        agg = cross.groupBy("block_key", "ca", "cb").agg(
-            F.sum("score").alias("s"),
-            F.count(F.lit(1)).alias("n_edges"),
-            F.first("_tau").alias("_tau"),
-            F.first("_me").alias("_me"),
+    )
+    return (
+        clustered.join(mapping, ["block_key", "cluster_id"], "left")
+        .withColumn(
+            "cluster_id", F.coalesce(F.col("_new_cid"), F.col("cluster_id"))
         )
-        agg = (
-            agg.join(
-                sizes.select(
-                    "block_key",
-                    F.col("cluster_id").alias("ca"),
-                    F.col("sz").alias("na"),
-                ),
-                ["block_key", "ca"],
-            )
-            .join(
-                sizes.select(
-                    "block_key",
-                    F.col("cluster_id").alias("cb"),
-                    F.col("sz").alias("nb"),
-                ),
-                ["block_key", "cb"],
-            )
-            .withColumn(
-                "affinity", F.col("s") / F.least("na", "nb")
-            )
-        )
-        merges = agg.where(
-            (F.col("affinity") >= F.col("_tau"))
-            & (F.col("n_edges") >= F.col("_me"))
-        )
-        if merges.isEmpty():
-            break
-        comp = connected_components(
-            merges.select(
-                "block_key", F.col("ca").alias("src"), F.col("cb").alias("dst")
-            )
-        ).select(
-            "block_key",
-            F.col("node").alias("cluster_id"),
-            F.col("component").alias("_new_cid"),
-        )
-        out = (
-            out.join(comp, ["block_key", "cluster_id"], "left")
-            .withColumn(
-                "cluster_id", F.coalesce(F.col("_new_cid"), F.col("cluster_id"))
-            )
-            .drop("_new_cid")
-            # truncate lineage: next round joins against `out` again
-            .localCheckpoint(eager=True)
-        )
-    return out
+        .drop("_new_cid")
+    )
 
 
 def assign_clusters(pubs: DataFrame, matches: DataFrame) -> DataFrame:

@@ -8,8 +8,8 @@ sequential loop (``name_disambiguation.py:785``,
   repo_files --parse--> pubs --edges--> combined_edges --fuse-->
   scored pairs --[name constraints + ambiguity-adaptive threshold]-->
   match graph --CC (per-block union-find)--> clustered pubs
-  --[auto-calibrated cluster refine]--> final clusters --evaluate-->
-  per-block P/R/F1
+  --[auto-calibrated cluster refine]--[semantic cluster merge]-->
+  final clusters --evaluate--> per-block P/R/F1
 
 The adaptive layer (round 3) is what separates this engine from the
 reference's one-global-threshold design; every decision is a measured
@@ -26,7 +26,11 @@ numbers):
    dense-evidence corpora where they would over-merge,
 4. clustering is connected components of the match graph, one
    union-find per block (clustering.connected_components), then
-   tier-aware cluster-level agglomeration (clustering.refine_clusters).
+   tier-aware cluster-level agglomeration (clustering.refine_clusters)
+   and the semantic centroid merge (cluster_merge.semantic_cluster_merge).
+   Each of the three is one grouped pandas kernel per block that runs
+   all of its rounds locally: no distributed round loops, per-round
+   checkpoints or emptiness probes.
 
 Each stage is exposed separately for checkpoint/resume (plans.stages);
 this module is the pure dataflow.

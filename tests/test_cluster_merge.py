@@ -328,3 +328,46 @@ def test_second_round_reaches_fixpoint(spark):
     )
     assert frozenset({"p1", "p2", "p3", "p4"}) in got1
     assert frozenset({"p5", "p6"}) in got1
+
+
+def test_max_clusters_cap_skips_crowded_blocks(spark):
+    """semantic_merge_max_clusters bounds the per-block cluster count:
+    with a cap of 2, block 'big' (3 clusters) keeps its clusters even
+    though c1/c2 clear theta, while block 'small' (2 clusters) in the
+    same call merges."""
+    import dataclasses
+
+    from hgcn_name_disambiguation_spark.config import DEFAULT_CONFIG
+
+    clustered = spark.createDataFrame(
+        [("big", "p1", "c1"), ("big", "p2", "c2"), ("big", "p3", "c3"),
+         ("small", "q1", "d1"), ("small", "q2", "d2")],
+        ["block_key", "pub_id", "cluster_id"],
+    )
+    doc_vecs = spark.createDataFrame(
+        [("big", "p1", [1.0, 0.0]), ("big", "p2", [0.99, 0.05]),
+         ("big", "p3", [0.0, 1.0]),
+         ("small", "q1", [1.0, 0.0]), ("small", "q2", [0.99, 0.05])],
+        ["block_key", "pub_id", "vec"],
+    )
+    sigs = spark.createDataFrame(
+        [("big", p, None) for p in ["p1", "p2", "p3"]]
+        + [("small", q, None) for q in ["q1", "q2"]],
+        "block_key string, pub_id string, sig array<string>",
+    )
+    eligible = spark.createDataFrame(
+        [("big", 0.8), ("small", 0.8)], ["block_key", "theta"]
+    )
+    capped = dataclasses.replace(
+        DEFAULT_CONFIG, semantic_merge_max_clusters=2
+    )
+    got = _clusters(
+        semantic_cluster_merge(clustered, doc_vecs, sigs, eligible, capped)
+    )
+    assert {frozenset({"p1"}), frozenset({"p2"}), frozenset({"p3"})} <= got
+    assert frozenset({"q1", "q2"}) in got
+    # without the cap the crowded block merges too
+    got = _clusters(
+        semantic_cluster_merge(clustered, doc_vecs, sigs, eligible)
+    )
+    assert frozenset({"p1", "p2"}) in got

@@ -134,3 +134,41 @@ def test_refine_merges_chain_within_sparse_blocks_only(spark):
         ("b2", "p1", "c1"), ("b2", "p2", "c2"), ("b2", "p3", "c2"),
         ("b3", "p1", "c1"), ("b3", "p2", "c2"),
     ]
+
+
+def test_refine_recomputes_sizes_and_evidence_each_round(spark):
+    """A = {p1, p2}, B = {p3} and C = {p5} in one sparse common-tier
+    block (min_edges 2). A-B carries 2 edges, A-C and B-C one each, so
+    round 1 merges only A+B; round 2 re-maps the evidence onto AB, whose
+    2 edges to C now clear min_edges. One round leaves C apart."""
+    import dataclasses
+
+    clustered = spark.createDataFrame(
+        [("b", "p1", "p1"), ("b", "p2", "p1"), ("b", "p3", "p3"),
+         ("b", "p5", "p5")],
+        ["block_key", "pub_id", "cluster_id"],
+    )
+    scored = spark.createDataFrame(
+        [
+            ("b", "p1", "p3", 0.5, False),  # A-B
+            ("b", "p2", "p3", 0.5, False),  # A-B
+            ("b", "p1", "p5", 0.5, False),  # A-C
+            ("b", "p3", "p5", 0.5, False),  # B-C
+        ],
+        "block_key string, id_a string, id_b string, score double, "
+        "sig_cut boolean",
+    )
+    traits = spark.createDataFrame(
+        [("b", "common", False, True)],
+        "block_key string, tier string, gated boolean, sparse boolean",
+    )
+
+    def run(config):
+        out = refine_clusters(clustered, scored, config, traits=traits)
+        return {r.pub_id: r.cluster_id for r in out.collect()}
+
+    assert run(DEFAULT_CONFIG) == {
+        "p1": "p1", "p2": "p1", "p3": "p1", "p5": "p1"
+    }
+    one = dataclasses.replace(DEFAULT_CONFIG, cluster_refine_rounds=1)
+    assert run(one) == {"p1": "p1", "p2": "p1", "p3": "p1", "p5": "p5"}

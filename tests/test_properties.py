@@ -13,7 +13,10 @@ import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from hgcn_name_disambiguation_spark.functions.text import porter_stem
-from hgcn_name_disambiguation_spark.operators.clustering import _union_find
+from hgcn_name_disambiguation_spark.operators.clustering import (
+    _refine_block,
+    _union_find,
+)
 from hgcn_name_disambiguation_spark.operators.dedup import _M64, _mix64
 
 
@@ -115,3 +118,104 @@ def test_union_find_kernel_equals_oracle_in_any_edge_order(edges, rnd):
     shuffled = list(edges)
     rnd.shuffle(shuffled)
     assert _kernel(shuffled) == want
+
+
+_PUBS = [f"p{i}" for i in range(8)]
+
+_refine_inputs = st.tuples(
+    # each pub's input cluster id
+    st.lists(
+        st.sampled_from(["c0", "c1", "c2", "c3", "c4"]), min_size=1, max_size=8
+    ),
+    # evidence rows; "px" is not a member, so its rows never count
+    st.lists(
+        st.tuples(
+            st.sampled_from(_PUBS + ["px"]),
+            st.sampled_from(_PUBS + ["px"]),
+            # dyadic scores: every partial sum is exact, in any order
+            st.integers(min_value=0, max_value=8).map(lambda k: k / 8),
+        ),
+        max_size=20,
+    ),
+    st.sampled_from([0.25, 0.5, 1.0]),  # _tau
+    st.sampled_from([1, 2]),  # _me
+    st.integers(min_value=1, max_value=4),  # rounds
+)
+
+
+def _refine(cids, evidence, tau, me, rounds):
+    """Run the refine kernel on one block -> {pub: output cluster id}."""
+    members = pd.DataFrame(
+        {
+            "block_key": "b",
+            "pub_id": _PUBS[: len(cids)],
+            "cluster_id": cids,
+        }
+    )
+    ev = pd.DataFrame(
+        [("b", a, b, s, tau, me) for a, b, s in evidence],
+        columns=["block_key", "id_a", "id_b", "score", "_tau", "_me"],
+    )
+    out = _refine_block(ev, members, rounds)
+    moved = dict(zip(out["cluster_id"], out["_new_cid"]))
+    assert len(moved) == len(out) and all(a != b for a, b in moved.items())
+    return {p: moved.get(c, c) for p, c in zip(members["pub_id"], cids)}
+
+
+def _refine_oracle(cids, evidence, tau, me, rounds):
+    """Refine rounds by brute force: every cluster pair's evidence is
+    collected from scratch, accepted pairs close by min-label
+    propagation to a fixpoint."""
+    label = dict(zip(_PUBS, cids))
+    for _ in range(rounds):
+        clusters = sorted(set(label.values()))
+        size = {c: list(label.values()).count(c) for c in clusters}
+        accepted = []
+        for i, a in enumerate(clusters):
+            for b in clusters[i + 1:]:
+                scores = [
+                    s for x, y, s in evidence
+                    if x in label and y in label
+                    and {label[x], label[y]} == {a, b}
+                ]
+                if len(scores) >= me and (
+                    sum(scores) / min(size[a], size[b]) >= tau
+                ):
+                    accepted.append((a, b))
+        if not accepted:
+            break
+        comp = {c: c for c in clusters}
+        changed = True
+        while changed:
+            changed = False
+            for a, b in accepted:
+                m = min(comp[a], comp[b])
+                for c in (a, b):
+                    if comp[c] != m:
+                        comp[c] = m
+                        changed = True
+        label = {p: comp[c] for p, c in label.items()}
+    return label
+
+
+@settings(max_examples=300)
+@given(_refine_inputs, st.randoms(use_true_random=False))
+def test_refine_kernel_coarsens_to_min_ids_in_any_order(inputs, rnd):
+    """The refine kernel only merges whole input clusters, names every
+    output group by its minimum input cluster id, gives the same answer
+    whatever the evidence row order, and agrees with a brute-force
+    replay of the rounds."""
+    cids, evidence, tau, me, rounds = inputs
+    got = _refine(cids, evidence, tau, me, rounds)
+    assert got == _refine_oracle(cids, evidence, tau, me, rounds)
+    pubs = _PUBS[: len(cids)]
+    cid = dict(zip(pubs, cids))
+    for p in pubs:
+        for q in pubs:
+            if cid[p] == cid[q]:
+                assert got[p] == got[q]
+    for out_id in set(got.values()):
+        assert out_id == min(cid[p] for p in pubs if got[p] == out_id)
+    shuffled = list(evidence)
+    rnd.shuffle(shuffled)
+    assert _refine(cids, shuffled, tau, me, rounds) == got
