@@ -146,7 +146,6 @@ class PipelineConfig:
     # labeled AMiner corpus: john smith block P 0.05 -> 0.81, macro F1
     # +0.6 with no other block regressing.
     name_constraints: bool = True
-    sig_resolve_rounds: int = 3
 
     # --- ambiguity-tier adaptive matching ---
     # Per-block tier from the blocking key (functions.names.name_tier):

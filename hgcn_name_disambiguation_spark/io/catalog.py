@@ -34,6 +34,9 @@ class TableIO:
     marker written AFTER the parquet job succeeds — a crash mid-write
     leaves no marker, so resume re-runs the stage (write-then-commit,
     the same contract an Iceberg snapshot commit gives atomically).
+    Markers go through the Hadoop FileSystem API, so any root the
+    parquet writer accepts (a local path, `file://`, `hdfs://`,
+    `s3a://`) works.
     """
 
     def __init__(self, spark: SparkSession, root: str, catalog: str | None = None):
@@ -44,8 +47,20 @@ class TableIO:
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def _marker(self, name: str) -> str:
-        return os.path.join(self._path(name), "_COMMITTED")
+    def _marker(self, name: str):
+        """(Hadoop FileSystem, Path) of the table's commit marker."""
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(
+            os.path.join(self._path(name), "_COMMITTED")
+        )
+        return path.getFileSystem(self.spark._jsc.hadoopConfiguration()), path
+
+    def _commit(self, name: str) -> None:
+        fs, path = self._marker(name)
+        out = fs.create(path, True)
+        try:
+            out.writeBytes("ok\n")
+        finally:
+            out.close()
 
     def write(self, name: str, df: DataFrame, partition_by: list[str] | None = None):
         if self.catalog:
@@ -56,8 +71,7 @@ class TableIO:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self._path(name))
-        with open(self._marker(name), "w") as f:
-            f.write("ok\n")
+        self._commit(name)
 
     def read(self, name: str) -> DataFrame:
         if self.catalog:
@@ -67,12 +81,12 @@ class TableIO:
     def exists(self, name: str) -> bool:
         if self.catalog:
             return self.spark.catalog.tableExists(f"{self.catalog}.{name}")
-        return os.path.exists(self._marker(name))
+        fs, path = self._marker(name)
+        return bool(fs.exists(path))
 
     def append(self, name: str, df: DataFrame):
         if self.catalog:
             df.writeTo(f"{self.catalog}.{name}").append()
             return
         df.write.mode("append").parquet(self._path(name))
-        with open(self._marker(name), "w") as f:
-            f.write("ok\n")
+        self._commit(name)

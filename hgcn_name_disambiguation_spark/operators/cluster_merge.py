@@ -58,6 +58,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
+from .name_constraints import sig_compatible
 
 
 def _spark_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -70,22 +71,6 @@ def _spark_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     for k in range(a.shape[-1]):
         out = out + a[..., k] * b[..., k]
     return out
-
-
-def _py_sig_compatible(a, b) -> bool:
-    """Python replica of name_constraints.sig_compatible: position-wise
-    given-name compatibility (equal token, or an initial sharing the
-    first letter; missing tail tokens match — Python zip truncates to
-    the shorter array, same semantics as zip_with's null padding)."""
-    if not len(a) or not len(b):
-        return True
-    for x, y in zip(a, b):
-        if x == y:
-            continue
-        if (len(x) == 1 or len(y) == 1) and x[:1] == y[:1]:
-            continue
-        return False
-    return True
 
 
 def _merge_components(edges, sigs) -> dict[str, str]:
@@ -123,9 +108,7 @@ def _merge_components(edges, sigs) -> dict[str, str]:
         if ra == rb:
             continue
         sa, sb = comp_sigs[ra], comp_sigs[rb]
-        if all(
-            _py_sig_compatible(a, b) for a in sa for b in sb
-        ):
+        if all(sig_compatible(a, b) for a in sa for b in sb):
             parent[rb] = ra
             comp_sigs[ra] = sa | sb
             comp_sigs.pop(rb)

@@ -6,78 +6,65 @@ author's OWN raw name again — yet that string carries the strongest
 negative evidence in a block: "John A. Smith" can never be the same
 person as "John W. Smith", and the reference's own ``raw-data/john
 smith.xml`` block mixes Kenneth J. / Thomas J. / Richard J. Smith
-under one key. This module turns that into distributed cannot-link
-constraints:
+under one key. This module turns that into cannot-link constraints:
 
-1. ``focal_signatures``  — per pub, the given-name token array of the
+1. ``focal_signatures`` — per pub, the given-name token array of the
    block-focal author ("John R. Smith" -> ['john','r']); pure column
    ops (explode + filter + window argmax), no Python.
-2. ``resolve_signature_classes`` — per block, the MAXIMAL signatures
-   (not refined by any more-specific signature) act as identity
-   classes; each pub is assigned to the unique compatible class, or —
-   when ambiguous ("J. Smith" is compatible with every class) — to
-   the class its match-edge evidence supports most, iterated
-   ``config.sig_resolve_rounds`` times (bounded label propagation:
-   each round is one join + hash-agg + window argmax, all JVM-side).
-3. ``incompatible_cut`` — a boolean column: true iff both endpoints
-   resolved to DIFFERENT classes. Used to cut match edges and to
-   exclude cross-class evidence from cluster-level refinement.
+2. ``signature_seeds`` — per block, the MAXIMAL signatures (not
+   out-ranked by any more specific compatible signature) act as
+   identity classes.
+3. ``resolve_signature_classes`` — each pub takes its unique
+   compatible seed or, when ambiguous ("J. Smith" is compatible with
+   every class), the candidate class its match-edge evidence supports
+   most, over ``RESOLVE_ROUNDS`` synchronous vote rounds (bounded
+   label propagation).
+4. ``incompatible_cut`` — true iff two pubs resolved to DIFFERENT
+   classes or their raw signatures contradict. Used to cut match
+   edges and to exclude cross-class evidence from cluster-level
+   refinement.
 
 Token compatibility (standard given-name subsumption): equal tokens
 match; an initial matches any token with the same first letter;
 position-wise over the zipped arrays, missing tail tokens match.
 
-Scale: the distinct-signature self-join is per block over DISTINCT
-signatures only (bounded by given-name variant count, not block
-size); every other step is an equi-join keyed by (block_key, pub_id)
-or (block_key, class) — the same shuffle keys the rest of the
-pipeline uses. Nothing here collects to the driver.
+Only ``focal_signatures`` is a Spark operator. Steps 2-4 are plain
+Python over one block's signatures and match edges: blocks never
+interact, so ``plans.pipeline.build_match_context`` runs them inside
+its per-block kernel, with no joins, round loops or actions.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Mapping, Sequence
+
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..functions.names import normalize_name
 
 _SEP = "\x1f"
 
+# vote rounds for ambiguous signatures: each round lets evidence reach
+# one more hop from the pubs whose class is unique
+RESOLVE_ROUNDS = 3
 
-def _tok_compat(x, y):
-    """Column lambda: token compatibility (null = missing tail = ok)."""
-    return (
-        F.when(x.isNull() | y.isNull(), F.lit(True))
-        .otherwise(
-            (x == y)
-            | (
-                ((F.length(x) == 1) | (F.length(y) == 1))
-                & (F.substring(x, 1, 1) == F.substring(y, 1, 1))
-            )
-        )
+
+def sig_compatible(a: Sequence[str] | None, b: Sequence[str] | None) -> bool:
+    """True iff given-name token sequences a and b are position-wise
+    compatible: equal tokens, or an initial sharing the first letter;
+    missing tail tokens match (zip truncates to the shorter one).
+    Null/empty sequences carry no information -> compatible."""
+    if a is None or b is None or not len(a) or not len(b):
+        return True
+    return all(
+        x == y or ((len(x) == 1 or len(y) == 1) and x[:1] == y[:1])
+        for x, y in zip(a, b)
     )
 
 
-def sig_compatible(a, b):
-    """True iff given-name arrays a and b are position-wise compatible.
-    Empty/null arrays carry no information -> compatible."""
-    either_empty = (
-        a.isNull() | b.isNull() | (F.size(a) == 0) | (F.size(b) == 0)
-    )
-    return F.when(either_empty, F.lit(True)).otherwise(
-        F.forall(F.zip_with(a, b, _tok_compat), lambda v: v)
-    )
-
-
-def _specificity(sig):
-    """Orderable specificity struct: (n_tokens, n_full_tokens, total_len)."""
-    return F.struct(
-        F.size(sig).alias("n"),
-        F.size(F.filter(sig, lambda t: F.length(t) > 1)).alias("nf"),
-        F.aggregate(
-            sig, F.lit(0), lambda acc, t: acc + F.length(t)
-        ).alias("tl"),
-    )
+def _specificity(sig: Sequence[str]) -> tuple[int, int, int]:
+    """(n_tokens, n_full_tokens, total_len), compared lexicographically."""
+    return (len(sig), sum(len(t) > 1 for t in sig), sum(len(t) for t in sig))
 
 
 def focal_signatures(pubs: DataFrame) -> DataFrame:
@@ -136,185 +123,89 @@ def focal_signatures(pubs: DataFrame) -> DataFrame:
     )
 
 
-def signature_seeds(sigs: DataFrame) -> DataFrame:
-    """Per block, the maximal signatures: distinct non-empty sigs not
-    strictly refined by a more specific compatible sig in the block.
-    Returns (block_key, seed: array<string>, seed_key: string)."""
-    d = (
-        sigs.where(F.col("sig").isNotNull() & (F.size("sig") > 0))
-        .select("block_key", "sig")
-        .dropDuplicates(["block_key", "sig"])
-    )
-    a = d.alias("a")
-    b = d.alias("b")
-    seeds = a.join(
-        b,
-        (F.col("a.block_key") == F.col("b.block_key"))
-        & (F.col("a.sig") != F.col("b.sig"))
-        & sig_compatible(F.col("a.sig"), F.col("b.sig"))
-        & (_specificity(F.col("b.sig")) > _specificity(F.col("a.sig"))),
-        "left_anti",
-    )
-    return seeds.select(
-        "block_key",
-        F.col("sig").alias("seed"),
-        F.concat_ws(_SEP, F.col("sig")).alias("seed_key"),
-    )
+def signature_seeds(
+    sigs: Iterable[Sequence[str] | None],
+) -> list[tuple[str, ...]]:
+    """One block's maximal signatures: the distinct non-empty sigs that
+    no compatible sig strictly out-ranks on ``_specificity``; sorted."""
+    d = sorted({tuple(s) for s in sigs if s is not None and len(s)})
+    spec = {s: _specificity(s) for s in d}
+    return [
+        a
+        for a in d
+        if not any(spec[b] > spec[a] and sig_compatible(a, b) for b in d)
+    ]
 
 
 def resolve_signature_classes(
-    pubs: DataFrame,
-    matches: DataFrame,
-    config: PipelineConfig = DEFAULT_CONFIG,
-    sigs: DataFrame | None = None,
-) -> DataFrame:
-    """-> (block_key, pub_id, sig_class) for every pub the constraint
-    system can place: unique-candidate pubs directly, ambiguous pubs by
-    iterated match-edge evidence voting among their candidate seeds.
-    Pubs with no/empty sig or unresolved ambiguity are absent (no
-    constraint). Blocks with <= 1 seed are absent (nothing to cut).
+    sigs: Mapping[str, Sequence[str] | None],
+    edges: Iterable[tuple[str, str, float | None]],
+) -> dict[str, str]:
+    """One block's {pub_id: sig_class} for every pub the constraint
+    system can place; a class is its seed's tokens joined by ``_SEP``.
+
+    ``sigs`` maps each pub to its focal signature, ``edges`` are the
+    block's (id_a, id_b, score) match edges. A pub with one compatible
+    seed takes it. An ambiguous pub takes the candidate class with the
+    largest vote, the summed score of its edges to neighbours resolved
+    before the round (null scores never vote), over ``RESOLVE_ROUNDS``
+    rounds; ties go to the smaller class and a winning vote must be
+    > 0. Pubs with no/empty sig, no compatible seed or no winning vote
+    are absent (no constraint), and so is every pub of a block with
+    fewer than 2 seeds (nothing to cut).
     """
-    if sigs is None:
-        sigs = focal_signatures(pubs)
-    seeds = signature_seeds(sigs)
-    nseeds = seeds.groupBy("block_key").agg(
-        F.count(F.lit(1)).alias("_ns")
-    )
-    seeds = seeds.join(
-        nseeds.where(F.col("_ns") >= 2), "block_key", "left_semi"
-    )
-
-    cands = (
-        sigs.where(F.col("sig").isNotNull() & (F.size("sig") > 0))
-        .join(seeds, "block_key")
-        .where(sig_compatible(F.col("sig"), F.col("seed")))
-        .select("block_key", "pub_id", "seed_key")
-    )
-    ncand = cands.groupBy("block_key", "pub_id").agg(
-        F.count(F.lit(1)).alias("_nc")
-    )
-    cands = cands.join(ncand, ["block_key", "pub_id"])
-    resolved = (
-        cands.where(F.col("_nc") == 1)
-        .select("block_key", "pub_id", F.col("seed_key").alias("sig_class"))
-    )
-    ambiguous = cands.where(F.col("_nc") > 1).select(
-        "block_key", "pub_id", "seed_key"
-    )
-
-    edges = matches.select("block_key", "id_a", "id_b", "score")
-    bidir = edges.select(
-        "block_key",
-        F.col("id_a").alias("pub_id"),
-        F.col("id_b").alias("nbr"),
-        "score",
-    ).unionByName(
-        edges.select(
-            "block_key",
-            F.col("id_b").alias("pub_id"),
-            F.col("id_a").alias("nbr"),
-            "score",
-        )
-    )
-    # consumed once per vote round — materialize lazily so the match
-    # subtree executes at most once across rounds
-    bidir = bidir.localCheckpoint(eager=False)
-
-    # the resolved-classes frame is tiny (<= one row per pub) but its
-    # plan embeds the seed self-join + candidate join tree; checkpoint
-    # so consumers plan against a flat scan
-    resolved = resolved.localCheckpoint(eager=True)
-
-    # corpora without ambiguous signatures (single-seed blocks, e.g.
-    # the synthetic fixtures) skip the vote loop entirely — one small
-    # aggregation instead of `rounds` join jobs
-    if ambiguous.isEmpty():
-        return resolved
-
-    for _ in range(max(0, config.sig_resolve_rounds)):
-        # evidence toward each candidate class via resolved neighbors
-        votes = (
-            ambiguous.join(bidir, ["block_key", "pub_id"])
-            .join(
-                resolved.select(
-                    "block_key",
-                    F.col("pub_id").alias("nbr"),
-                    F.col("sig_class").alias("seed_key"),
-                ),
-                ["block_key", "nbr", "seed_key"],
-            )
-            .groupBy("block_key", "pub_id", "seed_key")
-            .agg(F.sum("score").alias("_v"))
-        )
-        w = Window.partitionBy("block_key", "pub_id").orderBy(
-            F.desc("_v"), F.asc("seed_key")
-        )
-        newly = (
-            votes.withColumn("_rn", F.row_number().over(w))
-            .where((F.col("_rn") == 1) & (F.col("_v") > 0))
-            .select(
-                "block_key", "pub_id", F.col("seed_key").alias("sig_class")
-            )
-        )
-        # checkpoint the (small) resolved frame so the loop's plan
-        # doesn't nest joins `rounds` deep over the full edge frame
-        resolved = resolved.unionByName(newly).localCheckpoint(eager=True)
-        ambiguous = ambiguous.join(
-            resolved, ["block_key", "pub_id"], "left_anti"
-        )
-    return resolved
+    seeds = signature_seeds(sigs.values())
+    if len(seeds) < 2:
+        return {}
+    cands: dict[str, list[str]] = {}
+    for pub, sig in sigs.items():
+        if sig is not None and len(sig):
+            cands[pub] = [_SEP.join(s) for s in seeds if sig_compatible(sig, s)]
+    classes = {p: c[0] for p, c in cands.items() if len(c) == 1}
+    ambiguous = {p: set(c) for p, c in cands.items() if len(c) > 1}
+    nbrs: dict[str, list[tuple[str, float]]] = {p: [] for p in ambiguous}
+    for a, b, score in edges:
+        if score is None:
+            continue
+        if a in nbrs:
+            nbrs[a].append((b, score))
+        if b in nbrs:
+            nbrs[b].append((a, score))
+    for _ in range(RESOLVE_ROUNDS):
+        newly: dict[str, str] = {}
+        for pub, cand in ambiguous.items():
+            votes: dict[str, float] = {}
+            for nbr, score in nbrs[pub]:
+                c = classes.get(nbr)
+                if c in cand:
+                    votes[c] = votes.get(c, 0.0) + score
+            if votes:
+                c, v = min(votes.items(), key=lambda kv: (-kv[1], kv[0]))
+                if v > 0:
+                    newly[pub] = c
+        if not newly:
+            break
+        classes.update(newly)
+        for pub in newly:
+            del ambiguous[pub]
+    return classes
 
 
 def incompatible_cut(
-    pairs: DataFrame,
-    classes: DataFrame,
-    sigs: DataFrame | None = None,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Adds a boolean ``sig_cut`` column: true iff the endpoints'
-    focal names contradict —
+    sig_a: Sequence[str] | None,
+    sig_b: Sequence[str] | None,
+    class_a: str | None = None,
+    class_b: str | None = None,
+) -> bool:
+    """True iff two pubs' focal names contradict —
 
-    - both endpoints resolved to DIFFERENT signature classes, or
-    - (with ``sigs``) the endpoints' RAW signatures are position-wise
-      incompatible. The raw rule is what makes the cut robust for
-      pubs the vote loop could NOT place (an ambiguous "J. M. Smith"
-      may stay unresolved between "James M." and "John Maynard", yet
-      its edges to "John A. Smith" are still provably wrong).
+    - both resolved to DIFFERENT signature classes, or
+    - their RAW signatures are position-wise incompatible. The raw rule
+      is what makes the cut robust for pubs the vote could NOT place
+      (an ambiguous "J. M. Smith" may stay unresolved between "James
+      M." and "John Maynard", yet its edges to "John A. Smith" are
+      still provably wrong).
     """
-    ca = classes.select(
-        "block_key",
-        F.col("pub_id").alias(id_a),
-        F.col("sig_class").alias("_ca"),
-    )
-    cb = classes.select(
-        "block_key",
-        F.col("pub_id").alias(id_b),
-        F.col("sig_class").alias("_cb"),
-    )
-    out = pairs.join(ca, ["block_key", id_a], "left").join(
-        cb, ["block_key", id_b], "left"
-    )
-    cut = (
-        F.col("_ca").isNotNull()
-        & F.col("_cb").isNotNull()
-        & (F.col("_ca") != F.col("_cb"))
-    )
-    drop = ["_ca", "_cb"]
-    if sigs is not None:
-        sa = sigs.select(
-            "block_key",
-            F.col("pub_id").alias(id_a),
-            F.col("sig").alias("_sa"),
-        )
-        sb = sigs.select(
-            "block_key",
-            F.col("pub_id").alias(id_b),
-            F.col("sig").alias("_sb"),
-        )
-        out = out.join(sa, ["block_key", id_a], "left").join(
-            sb, ["block_key", id_b], "left"
-        )
-        cut = cut | ~sig_compatible(F.col("_sa"), F.col("_sb"))
-        drop += ["_sa", "_sb"]
-    return out.withColumn("sig_cut", cut).drop(*drop)
+    if class_a is not None and class_b is not None and class_a != class_b:
+        return True
+    return not sig_compatible(sig_a, sig_b)

@@ -28,9 +28,11 @@ numbers):
    union-find per block (clustering.connected_components), then
    tier-aware cluster-level agglomeration (clustering.refine_clusters)
    and the semantic centroid merge (cluster_merge.semantic_cluster_merge).
-   Each of the three is one grouped pandas kernel per block that runs
-   all of its rounds locally: no distributed round loops, per-round
-   checkpoints or emptiness probes.
+
+Items 1-3 run in one per-block match kernel (``_match_block``), and
+each of the three clustering steps is one grouped pandas kernel per
+block too: every block runs all of its rounds locally, with no
+distributed round loops, per-round checkpoints or emptiness probes.
 
 Each stage is exposed separately for checkpoint/resume (plans.stages);
 this module is the pure dataflow.
@@ -38,19 +40,19 @@ this module is the pure dataflow.
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+import pandas as pd
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..config import PipelineConfig, DEFAULT_CONFIG
 from ..functions.names import name_tier
+from ..operators import clustering, name_constraints
 from ..operators.candidate_pairs import combined_edges
 from ..operators.clustering import assign_clusters, refine_clusters
 from ..operators.evaluate import pairwise_metrics
-from ..operators.name_constraints import (
-    incompatible_cut,
-    resolve_signature_classes,
-)
+from ..operators.name_constraints import focal_signatures
 from ..operators.parse import parse_publications
 from ..operators.scoring import enrich_scores, fuse_scores, match_flags
 
@@ -74,12 +76,110 @@ class MatchContext:
     matches: the final match edge set (block_key, id_a, id_b, score)
              after constraints, the ambiguity gate, and the rare-tier
              rescue.
-    traits:  per-block (tier, gated, sparse) — drives refine.
+    traits:  per-block (block_key, tier, sparse, gated) — drives refine.
+
+    All three are projections of one checkpointed per-block kernel
+    output (see ``build_match_context``).
     """
 
     scored: DataFrame
     matches: DataFrame
     traits: DataFrame
+
+
+def _values(frame: pd.DataFrame, col: str) -> list:
+    """A scalar column as Python values, SQL nulls as None (Arrow hands
+    null doubles to pandas as NaN)."""
+    return [None if v is None or v != v else v for v in frame[col].tolist()]
+
+
+def _match_block(
+    flagged: pd.DataFrame,
+    members: pd.DataFrame,
+    config: PipelineConfig,
+    score_col: str,
+) -> pd.DataFrame:
+    """One block's match step (cogroup kernel): the block's flagged
+    pairs and its members (block_key, pub_id, sig, tier) -> the pairs
+    plus ``sig_cut`` and ``in_match``, and one trait row (tier, sparse,
+    gated) with null pair ids.
+
+    Flag columns keep SQL null semantics: a null ``is_match`` or
+    ``is_weak`` never selects a pair. Blocks without members get no
+    trait row, so only their strong pairs match.
+    """
+    n = len(flagged)
+    ida, idb = flagged["id_a"].tolist(), flagged["id_b"].tolist()
+    score = _values(flagged, score_col)
+    is_match = _values(flagged, "is_match")
+    is_weak = _values(flagged, "is_weak")
+    sigs = {
+        p: None if s is None else tuple(s)
+        for p, s in zip(members["pub_id"], members["sig"])
+    }
+    matched = [i for i in range(n) if is_match[i] is True]
+    classes = name_constraints.resolve_signature_classes(
+        sigs, ((ida[i], idb[i], score[i]) for i in matched)
+    )
+    cut = [
+        name_constraints.incompatible_cut(
+            sigs.get(ida[i]), sigs.get(idb[i]),
+            classes.get(ida[i]), classes.get(idb[i]),
+        )
+        for i in range(n)
+    ]
+    keep = [is_match[i] is True and not cut[i] for i in range(n)]
+    strong = [keep[i] and is_weak[i] is False for i in range(n)]
+
+    tier = members["tier"].iloc[0] if len(members) else None
+    rich = [score[i] for i in matched if score[i] is not None]
+    sparse = (sum(rich) / len(rich) if rich else 0.0) < config.refine_richness_max
+    # a block without members gets no trait row, and weak pairs need an
+    # open (not gated) block
+    gated = tier is None
+    if config.weak_bridge_gate and tier == "amb":
+        # is the strong-evidence graph fragmented? sizes count every
+        # member, singletons included
+        roots = clustering._min_roots(
+            (ida[i], idb[i]) for i in range(n) if strong[i]
+        )
+        sizes = Counter(roots.get(p, p) for p in members["pub_id"])
+        gated = (
+            max(sizes.values()) / len(members) < config.amb_gate_bigfrac
+            and len(members) >= config.amb_gate_min_n
+        )
+    rescue = config.rare_rescue_cos < 1.0 and tier == "rare" and sparse
+    if rescue:
+        title_cos = _values(flagged, "title_cos")
+        w_title = _values(flagged, "w_title")
+    in_match = [
+        strong[i]
+        or (keep[i] and is_weak[i] is True and not gated)
+        or (
+            rescue
+            and not cut[i]
+            and is_match[i] is False
+            and title_cos[i] is not None
+            and title_cos[i] >= config.rare_rescue_cos
+            # >= min_title_overlap shared tokens (w_title zeroed below):
+            # a single shared token faking a modest cosine is exactly
+            # the false-merge channel measured on xiaoyan li-type
+            # blocks — one word is never enough to merge on alone.
+            and w_title[i] is not None
+            and w_title[i] > 0
+        )
+        for i in range(n)
+    ]
+    out = flagged.assign(
+        sig_cut=cut, in_match=in_match, tier=None, sparse=None, gated=None
+    )
+    if tier is None:
+        return out
+    trait = pd.DataFrame(
+        [{"block_key": members["block_key"].iloc[0], "tier": tier,
+          "sparse": sparse, "gated": gated}]
+    )
+    return pd.concat([out, trait], ignore_index=True)
 
 
 def build_match_context(
@@ -88,9 +188,20 @@ def build_match_context(
     config: PipelineConfig = DEFAULT_CONFIG,
 ) -> MatchContext:
     """Score edges and derive the adaptive match graph. Single source
-    of truth for the score→match step so batch (run_pipeline),
+    of truth for the score->match step so batch (run_pipeline),
     checkpointed (plans.stages) and streaming (streaming.incremental)
-    stay result-identical on the same input + config."""
+    stay result-identical on the same input + config.
+
+    Scoring and the match flags are row-local column expressions.
+    Everything after them is per block, so the flagged pairs and the
+    block's members (block_key, pub_id, sig, tier) go to one cogroup
+    kernel (``_match_block``) that resolves signature classes, cuts
+    contradicting pairs, computes the block's traits and picks the
+    match edges. ``sig`` is null when ``config.name_constraints`` is
+    off or ``pubs`` has no ``authors``, which leaves nothing to cut.
+    The kernel output is checkpointed once; ``scored``, ``matches``
+    and ``traits`` are projections of it.
+    """
     scored = fuse_scores(edges, config)
     score_col = "score"
     if config.enrich:
@@ -99,121 +210,36 @@ def build_match_context(
     flagged = match_flags(scored, config, score_col)
 
     if config.name_constraints and "authors" in pubs.columns:
-        from ..operators.name_constraints import focal_signatures
-
-        m0 = flagged.where(F.col("is_match")).select(
-            "block_key", "id_a", "id_b", F.col(score_col).alias("score")
-        )
-        sigs = focal_signatures(pubs).localCheckpoint(eager=False)
-        classes = resolve_signature_classes(pubs, m0, config, sigs=sigs)
-        flagged = incompatible_cut(flagged, classes, sigs=sigs)
+        members = focal_signatures(pubs)
     else:
-        flagged = flagged.withColumn("sig_cut", F.lit(False))
-    # Materialize the flagged pair frame ONCE: every downstream branch
-    # (strong/weak/rescue splits, richness, refine evidence) consumes
-    # it, and without truncation each action re-pays both the
-    # execution AND the multi-second Catalyst planning of the full
-    # scoring+constraint expression tree (measured: the planning time,
-    # not the data, dominated small-input runs). At cluster scale this
-    # is the natural persist point for the same reason — the frame is
-    # read >= 4 times.
-    flagged = flagged.localCheckpoint(eager=True)
-
-    # --- per-block traits ---------------------------------------------
-    tiers = (
-        pubs.select("block_key")
-        .distinct()
-        .withColumn("tier", name_tier(F.col("block_key")))
-    )
-    richness = (
-        flagged.where(F.col("is_match"))
-        .groupBy("block_key")
-        .agg(F.avg(score_col).alias("_rich"))
-    )
-    traits = tiers.join(richness, "block_key", "left").withColumn(
-        "sparse",
-        F.coalesce(F.col("_rich"), F.lit(0.0))
-        < F.lit(config.refine_richness_max),
-    )
-
-    keep = F.col("is_match") & ~F.col("sig_cut")
-    sel = lambda df: df.select(  # noqa: E731
-        "block_key", "id_a", "id_b", F.col(score_col).alias("score")
-    )
-    strong = sel(flagged.where(keep & ~F.col("is_weak")))
-
-    if config.weak_bridge_gate:
-        # gate statistics come from the strong-evidence components:
-        # per amb-tier block, is the strong graph fragmented?
-        assigned = assign_clusters(pubs.select("block_key", "pub_id"), strong)
-        bstats = (
-            assigned.groupBy("block_key", "cluster_id")
-            .agg(F.count(F.lit(1)).alias("_cn"))
-            .groupBy("block_key")
-            .agg(
-                F.sum("_cn").alias("_n"),
-                F.max("_cn").alias("_big"),
-            )
-            .withColumn("_bigfrac", F.col("_big") / F.col("_n"))
+        members = pubs.select(
+            "block_key", "pub_id", F.lit(None).cast("array<string>").alias("sig")
         )
-        traits = (
-            traits.join(bstats, "block_key", "left")
-            .withColumn(
-                "gated",
-                (F.col("tier") == "amb")
-                & (
-                    F.coalesce(F.col("_bigfrac"), F.lit(1.0))
-                    < F.lit(config.amb_gate_bigfrac)
-                )
-                & (
-                    F.coalesce(F.col("_n"), F.lit(0))
-                    >= F.lit(config.amb_gate_min_n)
-                ),
-            )
-            .drop("_n", "_big", "_bigfrac")
-        )
-    else:
-        traits = traits.withColumn("gated", F.lit(False))
-    traits = traits.drop("_rich")
-    # traits is one row per block — tiny relative to pairs at any
-    # scale; cache-by-checkpoint so the (pubs ⋈ CC) subtree behind
-    # `gated` isn't re-executed by every downstream join.
-    traits = traits.localCheckpoint(eager=False)
-
-    weak_kept = (
-        flagged.where(keep & F.col("is_weak"))
-        .join(
-            traits.where(~F.col("gated")).select("block_key"),
-            "block_key",
-            "left_semi",
-        )
+    members = members.withColumn("tier", name_tier(F.col("block_key")))
+    schema = (
+        T.StructType([T.StructField(f.name, f.dataType) for f in flagged.schema])
+        .add("sig_cut", "boolean").add("in_match", "boolean")
+        .add("tier", "string").add("sparse", "boolean").add("gated", "boolean")
     )
-    rescue = (
-        flagged.where(
-            ~F.col("sig_cut")
-            & ~F.col("is_match")
-            & (F.col("title_cos") >= F.lit(config.rare_rescue_cos))
-            # >= min_title_overlap shared tokens (w_title zeroed below):
-            # a single shared token faking a modest cosine is exactly
-            # the false-merge channel measured on xiaoyan li-type
-            # blocks — one word is never enough to merge on alone.
-            & (F.col("w_title") > 0)
-        ).join(
-            traits.where(
-                (F.col("tier") == "rare") & F.col("sparse")
-            ).select("block_key"),
-            "block_key",
-            "left_semi",
+    out = (
+        flagged.groupBy("block_key")
+        .cogroup(members.groupBy("block_key"))
+        .applyInPandas(
+            lambda f, m: _match_block(f, m, config, score_col), schema=schema
         )
-        if config.rare_rescue_cos < 1.0
-        else flagged.where(F.lit(False))
+        .localCheckpoint(eager=True)
     )
+    pair = F.col("id_a").isNotNull()
     matches = (
-        strong.unionByName(sel(weak_kept))
-        .unionByName(sel(rescue))
+        out.where(F.col("in_match"))
+        .select("block_key", "id_a", "id_b", F.col(score_col).alias("score"))
         .dropDuplicates(["block_key", "id_a", "id_b"])
     )
-    return MatchContext(flagged, matches, traits)
+    return MatchContext(
+        out.where(pair).select(*flagged.columns, "sig_cut"),
+        matches,
+        out.where(~pair).select("block_key", "tier", "sparse", "gated"),
+    )
 
 
 def cluster_from_context(
@@ -293,7 +319,6 @@ def _semantic_merge_stage(
     if eligible.isEmpty():
         return clustered
     from ..operators.cluster_merge import semantic_cluster_merge
-    from ..operators.name_constraints import focal_signatures
     from ..operators.semantic import semantic_document_vectors
 
     doc_vecs = semantic_document_vectors(pubs, config)

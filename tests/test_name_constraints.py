@@ -17,6 +17,7 @@ from hgcn_name_disambiguation_spark.operators.name_constraints import (
     focal_signatures,
     incompatible_cut,
     resolve_signature_classes,
+    sig_compatible,
     signature_seeds,
 )
 
@@ -34,6 +35,11 @@ def _pubs(spark, rows):
         [Row(block_key=b, pub_id=p, authors=a) for b, p, a in rows],
         PUB_SCHEMA,
     )
+
+
+def _sig_map(pubs):
+    """pub_id -> focal signature of a one-block pubs frame."""
+    return {r.pub_id: r.sig for r in focal_signatures(pubs).collect()}
 
 
 def test_focal_signature_extraction(spark):
@@ -93,8 +99,10 @@ def test_signature_seeds_maximality(spark):
         ],
     )
     seeds = {
-        tuple(r.seed)
-        for r in signature_seeds(focal_signatures(pubs)).collect()
+        tuple(s)
+        for s in signature_seeds(
+            r.sig for r in focal_signatures(pubs).collect()
+        )
     }
     assert seeds == {("john", "a"), ("john", "w")}
 
@@ -111,14 +119,8 @@ def test_resolution_unique_and_vote(spark):
             ("john smith", "x1", ["John Smith"]),
         ],
     )
-    matches = spark.createDataFrame(
-        [("john smith", "a1", "x1", 0.9), ("john smith", "w1", "x1", 0.1)],
-        "block_key string, id_a string, id_b string, score double",
-    )
-    classes = {
-        r.pub_id: r.sig_class
-        for r in resolve_signature_classes(pubs, matches).collect()
-    }
+    matches = [("a1", "x1", 0.9), ("w1", "x1", 0.1)]
+    classes = resolve_signature_classes(_sig_map(pubs), matches)
     sep = "\x1f"
     assert classes["a1"] == f"john{sep}a"
     assert classes["a2"] == f"john{sep}a"
@@ -138,23 +140,66 @@ def test_incompatible_cut_class_and_raw(spark):
             ("john smith", "ma", ["John Maynard Smith"]),
         ],
     )
-    sigs = focal_signatures(pubs)
-    matches = spark.createDataFrame(
-        [
-            ("john smith", "a1", "w1", 0.9),   # class contradiction
-            ("john smith", "m1", "a1", 0.5),   # raw contradiction (m vs a)
-            ("john smith", "m1", "ma", 0.5),   # raw compatible (j m ~ john maynard)
-        ],
-        "block_key string, id_a string, id_b string, score double",
-    )
-    classes = resolve_signature_classes(pubs, matches, sigs=sigs)
+    sigs = _sig_map(pubs)
+    matches = [
+        ("a1", "w1", 0.9),   # class contradiction
+        ("m1", "a1", 0.5),   # raw contradiction (m vs a)
+        ("m1", "ma", 0.5),   # raw compatible (j m ~ john maynard)
+    ]
+    classes = resolve_signature_classes(sigs, matches)
     out = {
-        (r.id_a, r.id_b): r.sig_cut
-        for r in incompatible_cut(matches, classes, sigs=sigs).collect()
+        (a, b): incompatible_cut(
+            sigs[a], sigs[b], classes.get(a), classes.get(b)
+        )
+        for a, b, _ in matches
     }
     assert out[("a1", "w1")] is True
     assert out[("m1", "a1")] is True
     assert out[("m1", "ma")] is False
+
+
+def test_pipeline_vote_cuts_ambiguous_pub(spark):
+    """End to end through build_match_context: the ambiguous "John
+    Smith" pub x joins the class its stronger matched edge points to
+    (John A.), so its weaker matched edge to John W. is cut and leaves
+    the match graph while its edge to John A. stays."""
+    from hgcn_name_disambiguation_spark.plans.pipeline import (
+        build_match_context,
+    )
+
+    pubs = _pubs(
+        spark,
+        [
+            ("john smith", "a1", ["John A. Smith", "Alice Wong"]),
+            ("john smith", "a2", ["J. A. Smith"]),
+            ("john smith", "w1", ["John W. Smith"]),
+            ("john smith", "w2", ["John W. Smith", "Bob Lee"]),
+            ("john smith", "x", ["John Smith", "Carol King"]),
+        ],
+    )
+    coauthor = lambda a, b, w: (  # noqa: E731
+        "john smith", a, b, w, 0.0, 0.0, 0.0, 0.0
+    )
+    edges = spark.createDataFrame(
+        [
+            coauthor("a1", "x", 1.0),    # score 0.5
+            coauthor("w1", "x", 0.5),    # score 0.25, still a match
+            coauthor("a1", "a2", 1.0),
+            coauthor("w1", "w2", 1.0),
+        ],
+        "block_key string, id_a string, id_b string, w_coauthor double, "
+        "w_title double, title_cos double, w_venue double, w_org double",
+    )
+    ctx = build_match_context(pubs, edges, DEFAULT_CONFIG)
+    flags = {
+        (r.id_a, r.id_b): (r.is_match, r.sig_cut)
+        for r in ctx.scored.collect()
+    }
+    assert flags[("a1", "x")] == (True, False)
+    assert flags[("w1", "x")] == (True, True)
+    matches = {(r.id_a, r.id_b) for r in ctx.matches.collect()}
+    assert ("a1", "x") in matches
+    assert ("w1", "x") not in matches
 
 
 def test_name_tier_classification(spark):
@@ -240,12 +285,5 @@ def test_pipeline_splits_contradictory_middles(spark):
         ([], ["john"], True),
     ],
 )
-def test_sig_compatibility_matrix(spark, sig_a, sig_b, compatible):
-    from hgcn_name_disambiguation_spark.operators.name_constraints import (
-        sig_compatible,
-    )
-
-    df = spark.createDataFrame(
-        [(sig_a, sig_b)], "a array<string>, b array<string>"
-    ).select(sig_compatible(F.col("a"), F.col("b")).alias("ok"))
-    assert df.first().ok is compatible
+def test_sig_compatibility_matrix(sig_a, sig_b, compatible):
+    assert sig_compatible(sig_a, sig_b) is compatible

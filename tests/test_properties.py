@@ -9,8 +9,10 @@ so hundreds of generated examples run in milliseconds.
 
 from __future__ import annotations
 
+import random
+
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from hgcn_name_disambiguation_spark.functions.text import porter_stem
 from hgcn_name_disambiguation_spark.operators.clustering import (
@@ -18,6 +20,12 @@ from hgcn_name_disambiguation_spark.operators.clustering import (
     _union_find,
 )
 from hgcn_name_disambiguation_spark.operators.dedup import _M64, _mix64
+from hgcn_name_disambiguation_spark.operators.name_constraints import (
+    incompatible_cut,
+    resolve_signature_classes,
+    sig_compatible,
+    signature_seeds,
+)
 
 
 @given(st.integers(min_value=0, max_value=_M64))
@@ -219,3 +227,100 @@ def test_refine_kernel_coarsens_to_min_ids_in_any_order(inputs, rnd):
     shuffled = list(evidence)
     rnd.shuffle(shuffled)
     assert _refine(cids, shuffled, tau, me, rounds) == got
+
+
+# given-name signatures over a small alphabet: initials, full names and
+# two names sharing an initial, so compatible, contradicting and
+# ambiguous signatures are all common
+_sig = st.one_of(
+    st.none(),
+    st.lists(
+        st.sampled_from(["j", "john", "jim", "a", "al", "w"]), max_size=3
+    ),
+)
+
+_block_sigs = st.tuples(
+    # a pool of seeds and of pubs ambiguous between them keeps votes
+    # frequent; free draws add every other shape
+    st.lists(
+        st.one_of(
+            st.sampled_from(
+                [("john", "a"), ("john", "w"), ("jim", "w"), ("j", "a"),
+                 ("john",), ("j",), ("jim",), ("al",), (), None]
+            ),
+            _sig,
+        ),
+        min_size=1,
+        max_size=8,
+    ),
+    st.lists(
+        st.tuples(
+            st.sampled_from(_PUBS + ["px"]),
+            st.sampled_from(_PUBS + ["px"]),
+            # dyadic scores: every vote sum is exact, in any order
+            st.integers(min_value=0, max_value=8).map(lambda k: k / 8),
+        ),
+        min_size=4,
+        max_size=30,
+    ),
+)
+
+
+_class = st.sampled_from([None, "c1", "c2"])
+
+
+def _spec(sig):
+    return (len(sig), sum(len(t) > 1 for t in sig), sum(len(t) for t in sig))
+
+
+@settings(max_examples=300)
+@given(_sig, _sig, _class, _class)
+def test_sig_compatible_and_cut_are_symmetric(a, b, ca, cb):
+    assert sig_compatible(a, b) == sig_compatible(b, a)
+    assert incompatible_cut(a, b, ca, cb) == incompatible_cut(b, a, cb, ca)
+
+
+@settings(max_examples=300)
+@given(_block_sigs, st.randoms(use_true_random=False))
+@example(
+    # p3 ("john") may only vote between the two john classes; its
+    # strongest edge goes to the "jim w" pub, which is no candidate
+    (
+        [("john", "a"), ("john", "w"), ("jim", "w"), ("john",)],
+        [("p3", "p2", 1.0), ("p3", "p0", 0.25)],
+    ),
+    random.Random(0),
+)
+def test_signature_classes_are_compatible_seeds_in_any_order(inputs, rnd):
+    """Seeds are maximal; every resolved class is a seed compatible with
+    the pub's signature; a pub with one compatible seed takes it
+    whatever the edges; and the classes do not depend on pub or edge
+    order."""
+    sig_list, edges = inputs
+    sigs = dict(zip(_PUBS, sig_list))
+    seeds = signature_seeds(sigs.values())
+    distinct = {tuple(s) for s in sig_list if s}
+    assert set(seeds) <= distinct
+    for s in seeds:
+        assert not any(
+            _spec(t) > _spec(s) and sig_compatible(s, t) for t in distinct
+        )
+
+    classes = resolve_signature_classes(sigs, edges)
+    key = {"\x1f".join(s): s for s in seeds}
+    for pub, c in classes.items():
+        assert c in key and sig_compatible(sigs[pub], key[c])
+    if len(seeds) >= 2:
+        for pub, sig in sigs.items():
+            cands = [s for s in seeds if sig and sig_compatible(sig, s)]
+            if len(cands) == 1:
+                assert classes[pub] == "\x1f".join(cands[0])
+                assert resolve_signature_classes(sigs, []).get(pub) == classes[pub]
+    else:
+        assert classes == {}
+
+    pubs = list(sigs.items())
+    rnd.shuffle(pubs)
+    shuffled = list(edges)
+    rnd.shuffle(shuffled)
+    assert resolve_signature_classes(dict(pubs), shuffled) == classes

@@ -62,3 +62,18 @@ def test_lineage_rows(spark, fixture_repo_files, tmp_path):
     assert rows["pubs"].rows == n_pubs
     assert rows["pubs"].n_partitions >= 1
     assert all(x.wall_sec > 0 for x in rows.values())
+
+
+def test_resume_from_uri_workdir(spark, fixture_repo_files, tmp_path):
+    """A `file://` workdir commits and finds its stage markers (they go
+    through the Hadoop FileSystem API, as an hdfs:// or s3a:// root
+    needs), so a second runner skips every stage."""
+    wd = (tmp_path / "run4").as_uri()
+    r1 = disambiguation_stages(StageRunner(spark, wd))
+    r1.run({"repo_files": fixture_repo_files})
+    assert r1.executed == ["pubs", "edges", "matches", "clustered", "metrics"]
+
+    r2 = disambiguation_stages(StageRunner(spark, wd))
+    r2.run({"repo_files": fixture_repo_files})
+    assert r2.skipped == ["pubs", "edges", "matches", "clustered", "metrics"]
+    assert r2.executed == []
