@@ -154,21 +154,14 @@ class StreamingClusterAssigner:
     bounded-latency complement to :class:`IncrementalDisambiguator`
     (which re-resolves touched blocks and is the heavier, exact path).
 
-    The snapshot-side candidate indexes (coauthor/venue/token-idf
-    profiles) are built ONCE at construction and persisted, so every
-    micro-batch pays only the stream-static equi-joins + two hash
-    aggregates of ``assign_to_clusters``.
-
-    Why foreachBatch and not a pure streaming plan: the title channel
-    normalizes by a per-pub idf norm and then argmaxes per (pub,
-    cluster) — two chained aggregations, which Structured Streaming
-    cannot run in one query (chained stateful aggs are unsupported in
-    update mode). Inside foreachBatch each micro-batch is a plain
-    DataFrame, so batch and stream agree BY CONSTRUCTION (asserted in
-    tests). A stateless stream-static variant is possible for the
-    coauthor/venue channels alone (single agg); it is deliberately not
-    shipped — silently dropping the title channel would change what
-    "assigned" means between batch and stream.
+    The snapshot-side profile is built ONCE at construction and
+    persisted; each micro-batch pays a broadcast semi-join to its
+    blocks and one per-block cogroup kernel (``assign_with_profiles``,
+    as ``assign_to_clusters`` runs it: batch and stream agree BY
+    CONSTRUCTION). foreachBatch, because a cogroup does not run on a
+    streaming DataFrame. Exactly-once on ``batch_id``: each micro-batch
+    overwrites its own ``assignments/batch_id=<id>``, so a replayed
+    call replaces that batch's rows.
     """
 
     def __init__(
@@ -189,27 +182,14 @@ class StreamingClusterAssigner:
         }
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.assign import score_against_clusters
+        from ..operators.assign import assign_with_profiles
 
         new_pubs = parse_publications(
             batch_df, self.config, observe_name=None
         )
-        scored = score_against_clusters(new_pubs, self.profiles, self.config)
-        best = (
-            scored.where(F.col("fused") >= self.config.assign_threshold)
-            .groupBy("block_key", "pub_id")
-            .agg(F.max(F.struct("fused", "cluster_id")).alias("_best"))
-            .select(
-                "block_key",
-                "pub_id",
-                F.col("_best.cluster_id").alias("cluster_id"),
-                F.col("_best.fused").alias("fused"),
-            )
-        )
-        assigned = new_pubs.select("block_key", "pub_id").join(
-            best, ["block_key", "pub_id"], "left"
-        )
-        assigned.write.mode("append").parquet(f"{self.out_dir}/assignments")
+        assign_with_profiles(new_pubs, self.profiles, self.config).write.mode(
+            "overwrite"
+        ).parquet(f"{self.out_dir}/assignments/batch_id={batch_id}")
 
     def attach(self, stream_df: DataFrame):
         return (
@@ -219,4 +199,6 @@ class StreamingClusterAssigner:
         )
 
     def assignments(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.out_dir}/assignments")
+        return self.spark.read.parquet(f"{self.out_dir}/assignments").select(
+            "block_key", "pub_id", "cluster_id", "fused"
+        )

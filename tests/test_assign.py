@@ -1,7 +1,7 @@
 """Incremental cluster assignment (operators/assign.py +
 streaming.StreamingClusterAssigner): hand-computed channel math,
-threshold/NULL semantics, hot-key capping, fixture-accuracy, and the
-batch == stream contract."""
+threshold/NULL semantics, hot-key capping, edge cases, fixture-accuracy,
+the batch == stream contract and exactly-once replay."""
 
 from __future__ import annotations
 
@@ -284,3 +284,84 @@ def test_assignment_partitioning_invariance(spark, tiny):
         ).collect()
     )
     assert base == scrambled
+
+
+def test_edge_cases_one_row_per_pub(spark):
+    """One batch, four kinds of pub: a block the snapshot lacks; a NULL
+    venue with no authors and no tokens; a pub whose only shared token
+    is hot; an ordinary pub. Each gets exactly one row, the first three
+    NULL, and snapshot blocks the batch does not touch give no rows."""
+    cfg = PipelineConfig(max_token_df_per_block=2)
+    snap_schema = StructType(PUB_SCHEMA.fields + [
+        StructField("cluster_id", StringType())
+    ])
+    snap = spark.createDataFrame(
+        [
+            _pub("b", "p1", ["alpha", "common"], ["ann"], "v1", "c1"),
+            _pub("b", "p2", ["gamma", "common"], ["bob"], "v2", "c2"),
+            _pub("b", "p3", ["delta", "common"], ["cat"], "v3", "c3"),
+            _pub("other", "p9", ["alpha"], ["ann"], "v1", "c9"),
+        ],
+        snap_schema,
+    )
+    new = spark.createDataFrame(
+        [
+            _pub("missing", "m1", ["alpha"], ["ann"], "v1"),
+            _pub("b", "m2", [], [], None),
+            _pub("b", "m3", ["common", "zeta"], ["nobody"], "vX"),
+            _pub("b", "m4", ["alpha"], ["ann"], "v1"),
+        ],
+        PUB_SCHEMA,
+    )
+    rows = assign_to_clusters(new, snap, cfg).collect()
+    out = {r.pub_id: r for r in rows}
+    assert len(rows) == len(out) == 4
+    assert {r.block_key for r in out.values()} == {"missing", "b"}
+    for pid in ("m1", "m2", "m3"):
+        assert out[pid].cluster_id is None and out[pid].fused is None
+    # alpha: df 1 of n_block 3, and the pub's only token -> t = 1
+    assert out["m4"].cluster_id == "c1"
+    assert out["m4"].fused == pytest.approx(1.0, abs=1e-12)
+    scored = score_against_clusters(
+        new, cluster_profiles(snap, cfg), cfg
+    ).collect()
+    assert {(r.pub_id, r.cluster_id) for r in scored} == {("m4", "c1")}
+
+
+def test_assigner_replay_is_exactly_once(spark, tmp_path):
+    """A replayed foreachBatch call (same batch_id) replaces that
+    batch's assignments instead of appending them a second time."""
+    import zlib
+
+    from hgcn_name_disambiguation_spark.fixtures.generator import (
+        REPO_FILES_SCHEMA,
+        generate_repo_files,
+    )
+    from hgcn_name_disambiguation_spark.operators.parse import (
+        parse_publications,
+    )
+    from hgcn_name_disambiguation_spark.streaming.incremental import (
+        StreamingClusterAssigner,
+    )
+
+    rows = generate_repo_files(seed=5, blocks=2, pubs_per_block=12, skew_factor=1)
+    new_rows = [r for r in rows if zlib.crc32(r["path"].encode()) % 4 == 0]
+    snap_rows = [r for r in rows if zlib.crc32(r["path"].encode()) % 4 != 0]
+    snap = parse_publications(
+        spark.createDataFrame(snap_rows, REPO_FILES_SCHEMA), observe_name=None
+    ).withColumn("cluster_id", F.col("label").cast("string"))
+    half = max(1, len(new_rows) // 2)
+    df = spark.createDataFrame(new_rows[:half], REPO_FILES_SCHEMA)
+    df2 = spark.createDataFrame(new_rows[half:], REPO_FILES_SCHEMA)
+
+    assigner = StreamingClusterAssigner(spark, snap, str(tmp_path / "out"))
+    assigner.process_batch(df, 1)
+    assigner.process_batch(df, 1)  # replay
+    assigner.process_batch(df2, 2)
+    got = assigner.assignments()
+    assert got.columns == ["block_key", "pub_id", "cluster_id", "fused"]
+    n_pubs = parse_publications(
+        spark.createDataFrame(new_rows, REPO_FILES_SCHEMA), observe_name=None
+    ).count()
+    assert got.count() == got.select("block_key", "pub_id").distinct().count()
+    assert got.count() == n_pubs > 0

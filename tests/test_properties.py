@@ -9,12 +9,19 @@ so hundreds of generated examples run in milliseconds.
 
 from __future__ import annotations
 
+import math
 import random
 
 import pandas as pd
+import pytest
 from hypothesis import example, given, settings, strategies as st
 
+from hgcn_name_disambiguation_spark.config import DEFAULT_CONFIG
 from hgcn_name_disambiguation_spark.functions.text import porter_stem
+from hgcn_name_disambiguation_spark.operators.assign import (
+    _assign_kernel,
+    _score_kernel,
+)
 from hgcn_name_disambiguation_spark.operators.clustering import (
     _refine_block,
     _union_find,
@@ -324,3 +331,151 @@ def test_signature_classes_are_compatible_seeds_in_any_order(inputs, rnd):
     shuffled = list(edges)
     rnd.shuffle(shuffled)
     assert resolve_signature_classes(dict(pubs), shuffled) == classes
+
+
+# one assignment block: snapshot pubs (toks, authors, venue, cluster)
+# and new pubs (toks, authors, venue) over tiny alphabets, so shared,
+# hot and unseen tokens, hot keys and exact ties are all common
+_ASSIGN_CAP = 2  # both the hot-key cap and max_token_df_per_block
+_toks = st.lists(st.sampled_from(["x", "y", "z", "w"]), max_size=3)
+_authors = st.lists(st.sampled_from(["ann", "bob", "cy"]), max_size=2)
+_venue = st.sampled_from([None, "v1", "v2"])
+_assign_inputs = st.tuples(
+    st.lists(
+        st.tuples(_toks, _authors, _venue, st.sampled_from(["c0", "c1", "c2"])),
+        max_size=6,
+    ),
+    # "u" is never in the snapshot: an unseen token
+    st.lists(
+        st.tuples(
+            st.lists(st.sampled_from(["x", "y", "z", "w", "u"]), max_size=3),
+            _authors,
+            _venue,
+        ),
+        min_size=1,
+        max_size=3,
+    ),
+    st.sampled_from([0.0, 0.05, 0.2, 0.5]),  # assign_threshold
+)
+
+
+def _assign_profile(snap):
+    """The profile rows ``cluster_profiles`` builds, for one block."""
+    n = len(snap)
+    rows = [("size", None, None, float(n))] if n else []
+    for kind, keys in (
+        ("author", lambda r: r[1]),
+        ("venue", lambda r: [r[2]] if r[2] is not None else []),
+    ):
+        pairs = {(k, r[3]) for r in snap for k in keys(r)}
+        for k, c in pairs:
+            if sum(k == k2 for k2, _ in pairs) <= _ASSIGN_CAP:
+                rows.append((kind, k, c, None))
+    df = {t: sum(t in r[0] for r in snap) for r in snap for t in r[0]}
+    idf = {t: math.log((n + 1.0) / d) for t, d in df.items()}
+    rows += [("hot", t, None, None) for t, d in df.items() if d > _ASSIGN_CAP]
+    pairs = {(t, r[3]) for r in snap for t in r[0] if df[t] <= _ASSIGN_CAP}
+    rows += [("token", t, c, idf[t]) for t, c in pairs]
+    for c in {r[3] for r in snap}:
+        norm = math.fsum(idf[t] ** 2 for t, c2 in pairs if c2 == c)
+        rows.append(("norm", None, c, math.sqrt(norm)))
+    return pd.DataFrame(
+        [("b", *r) for r in rows],
+        columns=["block_key", "kind", "key", "cluster_id", "w"],
+    )
+
+
+def _assign_new(new):
+    return pd.DataFrame(
+        [("b", f"n{i}", a, v, t) for i, (t, a, v) in enumerate(new)],
+        columns=["block_key", "pub_id", "authors", "venue", "title_toks"],
+    )
+
+
+def _assign_oracle(snap, new, threshold):
+    """Score every (new pub, cluster) pair from the raw snapshot rows,
+    as the ``assign.py`` docstring states the channels ->
+    ({pub: {cluster: (a, t, v, fused)}}, {pub: (cluster, fused)})."""
+    n = len(snap)
+
+    def df(t):
+        return sum(t in r[0] for r in snap)
+
+    def idf(t):  # unseen tokens count at ln(n_block + 1)
+        return math.log((n + 1.0) / df(t)) if df(t) else math.log(n + 1.0)
+
+    def clusters_with(i, k):
+        return {r[3] for r in snap if k in (r[i] if i < 2 else [r[i]])}
+
+    scores, best = {}, {}
+    for j, (toks, authors, venue) in enumerate(new):
+        pid = f"n{j}"
+        mine = {t for t in toks if df(t) <= _ASSIGN_CAP}
+        p_norm = math.sqrt(math.fsum(idf(t) ** 2 for t in mine))
+        scores[pid] = {}
+        for c in {r[3] for r in snap}:
+            a = float(any(c in clusters_with(1, x) and len(clusters_with(1, x))
+                          <= _ASSIGN_CAP for x in authors))
+            v = float(venue is not None and c in clusters_with(2, venue)
+                      and len(clusters_with(2, venue)) <= _ASSIGN_CAP)
+            theirs = {t for r in snap if r[3] == c for t in r[0]
+                      if df(t) <= _ASSIGN_CAP}
+            c_norm = math.sqrt(math.fsum(idf(t) ** 2 for t in theirs))
+            shared = mine & theirs
+            if not (a or v or shared):
+                continue
+            t = (math.fsum(idf(x) ** 2 for x in shared) / (p_norm * c_norm)
+                 if p_norm > 0 and c_norm > 0 else 0.0)
+            scores[pid][c] = (a, t, v, (5 * a + 1 * t + 4 * v) / 10)
+        best[pid] = max(
+            ((s[3], c) for c, s in scores[pid].items() if s[3] >= threshold),
+            default=(None, None),
+        )[::-1]
+    return scores, best
+
+
+def _run_assign_kernels(new_df, prof, threshold):
+    c = DEFAULT_CONFIG
+    w = (c.w_coauthor, c.w_title, c.w_venue, c.weight_norm)
+    scored = _score_kernel(new_df, prof, w, threshold)
+    scores = {p: {} for p in new_df["pub_id"]}
+    for r in scored.itertuples():
+        assert r.cluster_id not in scores[r.pub_id]
+        scores[r.pub_id][r.cluster_id] = (r.a, r.t, r.v, r.fused)
+    picked = _assign_kernel(new_df, prof, w, threshold)
+    assert sorted(picked["pub_id"]) == sorted(new_df["pub_id"])
+    best = {
+        r.pub_id: (r.cluster_id, None if pd.isna(r.fused) else r.fused)
+        for r in picked.itertuples()
+    }
+    return scores, best
+
+
+@settings(max_examples=300)
+@given(_assign_inputs, st.randoms(use_true_random=False))
+def test_assign_kernel_equals_oracle_in_any_row_order(inputs, rnd):
+    """The per-block scoring and assignment kernels agree with a
+    brute-force scoring of every (new pub, cluster) pair: hot keys and
+    hot tokens dropped on both sides, unseen tokens at ln(n_block+1),
+    fused >= threshold, ties to the greatest cluster_id, one row per new
+    pub. Shuffling the profile rows or the new rows changes nothing."""
+    snap, new, threshold = inputs
+    prof, new_df = _assign_profile(snap), _assign_new(new)
+    scores, best = _run_assign_kernels(new_df, prof, threshold)
+    want_scores, want_best = _assign_oracle(snap, new, threshold)
+    assert scores.keys() == want_scores.keys()
+    for pid, cands in want_scores.items():
+        assert cands.keys() == scores[pid].keys()
+        for c, s in cands.items():
+            assert scores[pid][c] == pytest.approx(s, abs=1e-12)
+    assert {p: b[0] for p, b in best.items()} == {
+        p: b[0] for p, b in want_best.items()
+    }
+    for pid, (_, fused) in want_best.items():
+        assert best[pid][1] == pytest.approx(fused, abs=1e-12)
+    shuffled = _run_assign_kernels(
+        new_df.sample(frac=1, random_state=rnd.randrange(2**32)),
+        prof.sample(frac=1, random_state=rnd.randrange(2**32)),
+        threshold,
+    )
+    assert shuffled == (scores, best)
