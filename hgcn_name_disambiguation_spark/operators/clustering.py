@@ -1,20 +1,22 @@
-"""M3 — transitive clustering via per-block union-find connected
-components (SURVEY §2.9 G7).
+"""M3 — transitive clustering and cluster refinement, one per-block
+kernel (SURVEY §2.9 G7, G8).
 
-The reference calls ``scipy.sparse.csgraph.connected_components`` on a
-dense matrix per name block (``name_disambiguation.py:83,87,604-605``).
-Blocking makes every component block-local, so here the edges are
-grouped by ``block_key`` and each block is resolved by one union-find
-in a grouped-map pandas kernel (``groupBy("block_key").applyInPandas``):
-one shuffle and one pass over the block's edges, whatever the
-component diameter. A block is one Python worker's input: a group the
-size of the generator's skewed mega-block (10,560 pubs, 519k edges)
-resolves in 0.6–0.8 s on one core of a 4-vCPU Xeon host.
+The reference clusters each name block on its own: connected
+components of a dense matrix (``scipy.sparse.csgraph``), then GHAC
+(``name_disambiguation.py:83-92,604-637``). Blocking makes every
+component block-local, so here ``refine_clusters`` sends each block's
+match-kernel rows and its members to one grouped pandas kernel
+(``cogroup(...).applyInPandas``): one union-find over the block's
+match edges, then all of its refine rounds in the same worker. One
+shuffle and one join back to the pubs, whatever the component diameter
+or round count. A block is one Python worker's input: a union-find over
+the generator's skewed mega-block (10,560 pubs, 519k edges) resolves in
+0.6–0.8 s on one core of a 4-vCPU Xeon host.
 
 The component id is the lexicographic MIN node id of the component
 (== min pub id), giving stable deterministic cluster ids (SURVEY W2
-note). ``refine_clusters`` has the same shape: one cogroup kernel per
-block runs all of its merge rounds.
+note); refinement names each merged group by its minimum cluster id.
+``connected_components`` is the same union-find over a bare edge list.
 """
 
 from __future__ import annotations
@@ -68,8 +70,8 @@ def connected_components(edges: DataFrame) -> DataFrame:
     every node of a non-self-loop edge; component = min node id of the
     node's component within its block.
 
-    Isolated nodes don't appear (caller unions singletons back — see
-    assign_clusters).
+    Isolated nodes don't appear; ``refine_clusters`` gives unmatched
+    pubs their own id.
     """
     return (
         edges.select("block_key", "src", "dst")
@@ -87,27 +89,29 @@ def connected_components(edges: DataFrame) -> DataFrame:
 two_phase_components = connected_components
 
 
-def _refine_block(
-    evidence: pd.DataFrame, members: pd.DataFrame, rounds: int
-) -> pd.DataFrame:
-    """One block's refinement (cogroup kernel): evidence (block_key,
-    id_a, id_b, score, _tau, _me) and members (block_key, pub_id,
-    cluster_id) -> (block_key, cluster_id, _new_cid) for every cluster
-    whose id changed.
+def _values(frame: pd.DataFrame, col: str) -> list:
+    """A scalar column as Python values, SQL nulls as None (Arrow hands
+    null doubles to pandas as NaN)."""
+    return [None if v is None or v != v else v for v in frame[col].tolist()]
+
+
+def _refine_rounds(
+    cid: dict[str, str],
+    edges: list[tuple[str, str, float]],
+    tau: float,
+    me: int,
+    rounds: int,
+) -> dict[str, str]:
+    """Refine rounds over one block: {pub: cluster} and evidence edges
+    (a, b, score) -> the coarsened {pub: cluster}.
 
     Each round maps pubs to clusters, sums the scores and counts the
     edges of every cluster pair, and accepts the pairs whose
-    sum / min(|A|, |B|) reaches ``_tau`` on at least ``_me`` edges
-    (sizes count every member of the block). Accepted pairs merge
-    transitively to the minimum cluster id; the next round sees the
-    merged clusters, and a round that merges nothing ends the loop."""
-    cols = ["block_key", "cluster_id", "_new_cid"]
-    if evidence.empty or members.empty:
-        return pd.DataFrame(columns=cols)
-    tau, me = evidence["_tau"].iloc[0], evidence["_me"].iloc[0]
-    edges = list(zip(evidence["id_a"], evidence["id_b"], evidence["score"]))
-    start = dict(zip(members["pub_id"], members["cluster_id"]))
-    cid = dict(start)
+    sum / min(|A|, |B|) reaches ``tau`` on at least ``me`` edges (sizes
+    count every pub of ``cid``; edges to other ids never count).
+    Accepted pairs merge transitively to the minimum cluster id; the
+    next round sees the merged clusters, and a round that merges
+    nothing ends the loop."""
     for _ in range(rounds):
         sizes = Counter(cid.values())
         s: dict[tuple[str, str], float] = {}
@@ -128,143 +132,123 @@ def _refine_block(
             break
         roots = _min_roots(merges)
         cid = {p: roots.get(c, c) for p, c in cid.items()}
-    moved = {start[p]: c for p, c in cid.items() if c != start[p]}
+    return cid
+
+
+def _cluster_block(
+    rows: pd.DataFrame, members: pd.DataFrame, config: PipelineConfig
+) -> pd.DataFrame:
+    """One block's clustering (cogroup kernel): its match-kernel rows
+    (block_key, id_a, id_b, score, is_weak, in_match, evidence, tier,
+    sparse, gated) and members (block_key, pub_id) -> (block_key,
+    pub_id, cluster_id) per member. ``in_match`` pairs union to their
+    component's min id. A sparse block (per its trait row, the one with
+    a null ``id_a``) then refines over its ``evidence`` pairs; in a
+    gated block only ``is_weak`` False pairs count, as SQL's
+    ``~(gated & is_weak)`` keeps them. Sorted edges make the score sums
+    independent of the shuffle's row order."""
+    pubs = list(dict.fromkeys(members["pub_id"]))
+    if not pubs:
+        return pd.DataFrame(columns=["block_key", "pub_id", "cluster_id"])
+    ida, idb = rows["id_a"].tolist(), rows["id_b"].tolist()
+    in_match = _values(rows, "in_match")
+    roots = _min_roots(
+        (ida[i], idb[i]) for i in range(len(ida)) if in_match[i] is True
+    )
+    cid = {p: roots.get(p, p) for p in pubs}
+    trait = next((i for i, a in enumerate(ida) if a is None), None)
+    if trait is not None and _values(rows, "sparse")[trait] is True:
+        tier = rows["tier"].iloc[trait]
+        is_open = _values(rows, "gated")[trait] is False
+        weak, ev = _values(rows, "is_weak"), _values(rows, "evidence")
+        score = rows["score"].tolist()
+        edges = sorted(
+            (ida[i], idb[i], score[i])
+            for i in range(len(ida))
+            if ida[i] is not None
+            and ev[i] is True
+            and (is_open or weak[i] is False)
+        )
+        tau, me = {
+            "rare": (config.refine_tau_rare, config.refine_min_edges_rare),
+            "common": (
+                config.refine_tau_common, config.refine_min_edges_common
+            ),
+        }.get(tier, (config.refine_tau_amb, config.refine_min_edges_amb))
+        cid = _refine_rounds(cid, edges, tau, me, config.cluster_refine_rounds)
     return pd.DataFrame(
         {
-            "block_key": [evidence["block_key"].iloc[0]] * len(moved),
-            "cluster_id": list(moved),
-            "_new_cid": list(moved.values()),
+            "block_key": [members["block_key"].iloc[0]] * len(cid),
+            "pub_id": list(cid),
+            "cluster_id": list(cid.values()),
         }
     )
 
 
+# named for its refine rounds, though it also resolves the components:
+# perfbench's reaches_cluster_merge check counts calls to this name
 def refine_clusters(
-    clustered: DataFrame,
-    scored: DataFrame,
+    pubs: DataFrame,
+    matched: DataFrame,
     config: PipelineConfig = DEFAULT_CONFIG,
-    *,
-    traits: DataFrame,
 ) -> DataFrame:
-    """Cluster-level agglomeration — the distributed analogue of the
-    reference's per-block average-linkage GHAC stage (G8,
-    ``name_disambiguation.py:90-92,633-637``), run AFTER the
-    pair-threshold CC pass.
+    """pubs + the match kernel's rows (``plans.pipeline.MatchContext.frame``:
+    flagged pairs plus one trait row per block) -> pubs with
+    ``cluster_id``. The analogue of the reference's per-block connected
+    components then average-linkage GHAC (G7, G8,
+    ``name_disambiguation.py:83-92,604-637``), one cogroup kernel per
+    block (``_cluster_block``), one join back to ``pubs``.
 
-    Rationale (measured on the reference's 110 labeled AMiner blocks):
-    a single weak pair edge is unreliable (single-coauthor-only pairs
-    are 54% true), but MANY weak edges between the same two clusters
-    are collectively strong. So: aggregate ALL scored pair evidence
-    (including sub-threshold pairs) across each cluster pair,
-    average-linkage-normalize, and merge cluster pairs whose affinity
-    clears the block's tier threshold; accepted pairs close
-    transitively to the min member cluster id within the round.
+    Components: cluster_id = min pub_id of the pub's component of
+    ``in_match`` pairs; unmatched pubs are singletons of themselves —
+    the reference's P7 short-circuit
+    (``name_disambiguation.py:857-860,991-994``).
 
-      affinity(A, B) = sum(pair scores between A and B)
-                       / min(|A|, |B|)
-
-    min-normalization = "per member of the smaller cluster, how much
-    aggregate evidence points across" — a mega-cluster cannot swallow a
-    small one on volume alone. CAVEAT: the statistic still grows with
-    EVIDENCE DENSITY, not just match probability, so the thresholds
-    are corpus-dependent; hence the gates below.
-
-    ``traits`` (block_key, tier, gated, sparse — see
-    plans.pipeline.build_match_context) auto-calibrates refinement:
-    - only evidence-SPARSE blocks participate (richness gate; dense
-      corpora's sub-threshold pairs are true negatives — measured
-      fixture collapse P 1.0 -> 0.48 without this),
-    - merge thresholds are per ambiguity tier
-      (config.refine_tau_* / refine_min_edges_*),
-    - evidence rows flagged ``sig_cut`` (name-constraint contradiction)
-      never count, and ``is_weak`` rows don't count in gated blocks.
-
-    Blocks never interact, so each block's evidence and members go to
-    one cogroup kernel (``_refine_block``) that runs all
-    ``config.cluster_refine_rounds`` rounds on its own, recomputing
-    sizes and affinities each round: one shuffle of the evidence and
-    the members, no per-round joins or actions.
+    Refinement (measured on the reference's 110 labeled AMiner blocks):
+    one weak pair edge is unreliable (single-coauthor-only pairs are 54%
+    true), but MANY between two clusters are collectively strong. So
+    ALL scored pairs, sub-threshold ones included, merge cluster pairs
+    whose affinity = sum(pair scores) / min(|A|, |B|) clears the tier's
+    ``refine_tau_*`` on ``refine_min_edges_*`` edges, for up to
+    ``cluster_refine_rounds`` rounds (0 keeps the components). The min
+    keeps a mega-cluster from swallowing a small one on volume, but the
+    statistic still grows with evidence density, hence the gates:
+    - only evidence-SPARSE blocks refine (dense corpora's sub-threshold
+      pairs are true negatives: fixture P 1.0 -> 0.48 without this);
+    - ``is_weak`` pairs don't count in gated blocks;
+    - ``sig_cut`` pairs (name-constraint contradiction) never count.
+    The row-local gates are one JVM boolean, ``evidence``; the kernel
+    reads the block-level ones from the trait row.
     """
-    if config.cluster_refine_rounds <= 0:
-        return clustered
-    e = scored
-    if "sig_cut" in e.columns:
-        e = e.where(~F.col("sig_cut"))
+    counts = ~F.col("sig_cut")
     if {"w_title", "title_cos", "w_coauthor", "w_venue", "w_org"} <= set(
-        e.columns
+        matched.columns
     ):
         # pairs whose ONLY evidence is a single shared title token sit
         # below the reference's own co-title bound (min_title_overlap,
         # name_disambiguation.py:971-973); aggregating hundreds of them
         # fakes cluster affinity (measured −1.3 macro F1 on the labeled
         # corpus when admitted) — drop them from the evidence pool.
-        e = e.where(
-            ~(
-                (F.col("w_title") <= 0)
-                & (F.col("title_cos") > 0)
-                & (F.col("w_coauthor") <= 0)
-                & (F.col("w_venue") <= 0)
-                & (F.col("w_org") <= 0)
-            )
+        counts = counts & ~(
+            (F.col("w_title") <= 0)
+            & (F.col("title_cos") > 0)
+            & (F.col("w_coauthor") <= 0)
+            & (F.col("w_venue") <= 0)
+            & (F.col("w_org") <= 0)
         )
-    tr = traits.select("block_key", "tier", "gated", "sparse")
-    e = e.join(tr, "block_key", "inner").where(F.col("sparse"))
-    if "is_weak" in e.columns:
-        e = e.where(~(F.col("gated") & F.col("is_weak")))
-    tau_col = (
-        F.when(F.col("tier") == "rare", F.lit(config.refine_tau_rare))
-        .when(F.col("tier") == "common", F.lit(config.refine_tau_common))
-        .otherwise(F.lit(config.refine_tau_amb))
+    rows = matched.select(
+        "block_key", "id_a", "id_b", "score", "is_weak", "in_match",
+        F.coalesce(counts, F.lit(False)).alias("evidence"),
+        "tier", "sparse", "gated",
     )
-    me_col = (
-        F.when(
-            F.col("tier") == "rare",
-            F.lit(config.refine_min_edges_rare),
-        )
-        .when(
-            F.col("tier") == "common",
-            F.lit(config.refine_min_edges_common),
-        )
-        .otherwise(F.lit(config.refine_min_edges_amb))
-    )
-    e = e.select(
-        "block_key", "id_a", "id_b", "score",
-        tau_col.alias("_tau"), me_col.alias("_me"),
-    )
-    rounds = config.cluster_refine_rounds
-    mapping = (
-        e.groupBy("block_key")
-        .cogroup(
-            clustered.select("block_key", "pub_id", "cluster_id").groupBy(
-                "block_key"
-            )
-        )
+    ids = (
+        rows.groupBy("block_key")
+        .cogroup(pubs.select("block_key", "pub_id").groupBy("block_key"))
         .applyInPandas(
-            lambda ev, pubs: _refine_block(ev, pubs, rounds),
-            schema="block_key string, cluster_id string, _new_cid string",
+            lambda r, m: _cluster_block(r, m, config),
+            schema="block_key string, pub_id string, cluster_id string",
         )
     )
-    return (
-        clustered.join(mapping, ["block_key", "cluster_id"], "left")
-        .withColumn(
-            "cluster_id", F.coalesce(F.col("_new_cid"), F.col("cluster_id"))
-        )
-        .drop("_new_cid")
-    )
-
-
-def assign_clusters(pubs: DataFrame, matches: DataFrame) -> DataFrame:
-    """pubs + match edges -> pubs with ``cluster_id``.
-
-    cluster_id = min pub_id of the pub's connected component in its
-    block; unmatched pubs become singleton clusters of themselves — the
-    reference's P7 empty-block/singleton short-circuit
-    (``name_disambiguation.py:857-860,991-994``) falls out naturally.
-    """
-    comp = connected_components(
-        matches.select(
-            "block_key", F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-        )
-    ).withColumnRenamed("node", "pub_id")
-    return pubs.join(comp, ["block_key", "pub_id"], "left").select(
-        *pubs.columns, F.coalesce("component", "pub_id").alias("cluster_id")
+    return pubs.join(ids, ["block_key", "pub_id"], "left").select(
+        *pubs.columns, F.coalesce("cluster_id", "pub_id").alias("cluster_id")
     )

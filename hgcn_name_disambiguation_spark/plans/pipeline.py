@@ -7,8 +7,8 @@ sequential loop (``name_disambiguation.py:785``,
 
   repo_files --parse--> pubs --edges--> combined_edges --fuse-->
   scored pairs --[name constraints + ambiguity-adaptive threshold]-->
-  match graph --CC (per-block union-find)--> clustered pubs
-  --[auto-calibrated cluster refine]--[semantic cluster merge]-->
+  match graph --[CC (per-block union-find) + auto-calibrated cluster
+  refine]--> clustered pubs --[semantic cluster merge]-->
   final clusters --evaluate--> per-block P/R/F1
 
 The adaptive layer (round 3) is what separates this engine from the
@@ -25,14 +25,16 @@ numbers):
 3. an evidence-richness gate turns the recall levers OFF in
    dense-evidence corpora where they would over-merge,
 4. clustering is connected components of the match graph, one
-   union-find per block (clustering.connected_components), then
-   tier-aware cluster-level agglomeration (clustering.refine_clusters)
-   and the semantic centroid merge (cluster_merge.semantic_cluster_merge).
+   union-find per block, then tier-aware cluster-level agglomeration
+   (both in clustering.refine_clusters), then the semantic centroid
+   merge (cluster_merge.semantic_cluster_merge).
 
-Items 1-3 run in one per-block match kernel (``_match_block``), and
-each of the three clustering steps is one grouped pandas kernel per
-block too: every block runs all of its rounds locally, with no
-distributed round loops, per-round checkpoints or emptiness probes.
+Items 1-3 run in one per-block match kernel (``_match_block``), whose
+checkpointed output is the only thing clustering reads
+(``MatchContext``). Clustering is one grouped pandas kernel per block
+(``clustering._cluster_block``), and so is the merge: every block runs
+all of its rounds locally, with no distributed round loops, per-round
+checkpoints or emptiness probes.
 
 Each stage is exposed separately for checkpoint/resume (plans.stages);
 this module is the pure dataflow.
@@ -48,9 +50,9 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..config import PipelineConfig, DEFAULT_CONFIG
 from ..functions.names import name_tier
-from ..operators import clustering, name_constraints
+from ..operators import name_constraints
 from ..operators.candidate_pairs import combined_edges
-from ..operators.clustering import assign_clusters, refine_clusters
+from ..operators.clustering import _min_roots, _values, refine_clusters
 from ..operators.evaluate import pairwise_metrics
 from ..operators.name_constraints import focal_signatures
 from ..operators.parse import parse_publications
@@ -67,30 +69,45 @@ class PipelineResult:
     metrics: DataFrame
 
 
-@dataclass
+@dataclass(frozen=True)
 class MatchContext:
-    """Everything the score->match step produces that clustering needs.
-
-    scored:  scored pairs with flag columns (is_match, is_weak,
-             sig_cut) — refine reads the sub-threshold rows too.
-    matches: the final match edge set (block_key, id_a, id_b, score)
-             after constraints, the ambiguity gate, and the rare-tier
-             rescue.
-    traits:  per-block (block_key, tier, sparse, gated) — drives refine.
-
-    All three are projections of one checkpointed per-block kernel
-    output (see ``build_match_context``).
+    """Everything the score->match step produces that clustering needs:
+    ``frame``, the per-block match kernel's checkpointed output (see
+    ``build_match_context``) and the ``matches`` stage of
+    ``plans.stages``. It holds the scored pairs with their flags
+    (is_match, is_weak, sig_cut, in_match) and one trait row (tier,
+    sparse, gated) per block with null pair ids. The properties are
+    read-only projections of it.
     """
 
-    scored: DataFrame
-    matches: DataFrame
-    traits: DataFrame
+    frame: DataFrame
 
+    @property
+    def scored(self) -> DataFrame:
+        """The scored pairs with is_match, is_weak and sig_cut."""
+        return self.frame.where(F.col("id_a").isNotNull()).drop(
+            "in_match", "tier", "sparse", "gated"
+        )
 
-def _values(frame: pd.DataFrame, col: str) -> list:
-    """A scalar column as Python values, SQL nulls as None (Arrow hands
-    null doubles to pandas as NaN)."""
-    return [None if v is None or v != v else v for v in frame[col].tolist()]
+    @property
+    def matches(self) -> DataFrame:
+        """The match edges (block_key, id_a, id_b, score) after the
+        constraints, the ambiguity gate and the rare-tier rescue, with
+        the score the match threshold read."""
+        cols = self.frame.columns
+        score = "score_enriched" if "score_enriched" in cols else "score"
+        return (
+            self.frame.where(F.col("in_match"))
+            .select("block_key", "id_a", "id_b", F.col(score).alias("score"))
+            .dropDuplicates(["block_key", "id_a", "id_b"])
+        )
+
+    @property
+    def traits(self) -> DataFrame:
+        """Per block (block_key, tier, sparse, gated)."""
+        return self.frame.where(F.col("id_a").isNull()).select(
+            "block_key", "tier", "sparse", "gated"
+        )
 
 
 def _match_block(
@@ -140,7 +157,7 @@ def _match_block(
     if config.weak_bridge_gate and tier == "amb":
         # is the strong-evidence graph fragmented? sizes count every
         # member, singletons included
-        roots = clustering._min_roots(
+        roots = _min_roots(
             (ida[i], idb[i]) for i in range(n) if strong[i]
         )
         sizes = Counter(roots.get(p, p) for p in members["pub_id"])
@@ -199,8 +216,8 @@ def build_match_context(
     contradicting pairs, computes the block's traits and picks the
     match edges. ``sig`` is null when ``config.name_constraints`` is
     off or ``pubs`` has no ``authors``, which leaves nothing to cut.
-    The kernel output is checkpointed once; ``scored``, ``matches``
-    and ``traits`` are projections of it.
+    The kernel output is checkpointed once and is the context's
+    ``frame``.
     """
     scored = fuse_scores(edges, config)
     score_col = "score"
@@ -221,24 +238,13 @@ def build_match_context(
         .add("sig_cut", "boolean").add("in_match", "boolean")
         .add("tier", "string").add("sparse", "boolean").add("gated", "boolean")
     )
-    out = (
+    return MatchContext(
         flagged.groupBy("block_key")
         .cogroup(members.groupBy("block_key"))
         .applyInPandas(
             lambda f, m: _match_block(f, m, config, score_col), schema=schema
         )
         .localCheckpoint(eager=True)
-    )
-    pair = F.col("id_a").isNotNull()
-    matches = (
-        out.where(F.col("in_match"))
-        .select("block_key", "id_a", "id_b", F.col(score_col).alias("score"))
-        .dropDuplicates(["block_key", "id_a", "id_b"])
-    )
-    return MatchContext(
-        out.where(pair).select(*flagged.columns, "sig_cut"),
-        matches,
-        out.where(~pair).select("block_key", "tier", "sparse", "gated"),
     )
 
 
@@ -247,15 +253,12 @@ def cluster_from_context(
     ctx: MatchContext,
     config: PipelineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """Match context -> pubs with ``cluster_id``: connected components
-    of the match graph (one union-find per block), then auto-calibrated
-    cluster refinement and the semantic merge. Unmatched pubs become
-    singleton clusters (P7)."""
-    clustered = assign_clusters(pubs, ctx.matches)
-    if config.cluster_refine_rounds > 0:
-        clustered = refine_clusters(
-            clustered, ctx.scored, config, traits=ctx.traits
-        )
+    """Match context -> pubs with ``cluster_id``: one per-block kernel
+    runs connected components of the match graph and the
+    auto-calibrated cluster refinement (``refine_clusters``: one
+    cogroup, one join back to ``pubs``), then the semantic merge.
+    Unmatched pubs become singleton clusters (P7)."""
+    clustered = refine_clusters(pubs, ctx.frame, config)
     if config.semantic_merge:
         clustered = _semantic_merge_stage(pubs, clustered, ctx, config)
     return clustered

@@ -13,7 +13,8 @@ Design:
 - Every completed stage appends a lineage row: stage, rows,
   n_partitions, per-partition row counts (skew visibility), wall
   seconds, input fingerprints. The lineage table is itself a queryable
-  DataFrame (`runner.lineage()`).
+  DataFrame (`runner.lineage()`). For `matches` the rows are the scored
+  pairs plus one trait row per block (see `disambiguation_stages`).
 
 The reference has no notion of resume (a killed batch_disambiguation
 run restarts from scratch — `batch_disambiguation.py:94-101`); this is
@@ -24,7 +25,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -104,38 +105,33 @@ class StageRunner:
 
 def disambiguation_stages(runner: StageRunner, config=None) -> StageRunner:
     """Wire the standard 5-stage ER pipeline onto a runner. Input key:
-    'repo_files'."""
+    'repo_files'.
+
+    ``stage_matches`` holds the per-block match kernel's whole output
+    (``MatchContext.frame``): every scored pair with its flags, plus one
+    trait row per block, so its lineage ``rows`` counts both. It is all
+    that ``clustered`` reads besides ``pubs``, so a run resumed at that
+    boundary clusters straight from the checkpoint."""
     from ..config import DEFAULT_CONFIG
     from ..operators.candidate_pairs import combined_edges
     from ..operators.evaluate import pairwise_metrics
     from ..operators.parse import parse_publications
-    from ..plans.pipeline import build_match_context, cluster_from_context
+    from ..plans.pipeline import (
+        MatchContext, build_match_context, cluster_from_context,
+    )
 
     cfg = config or DEFAULT_CONFIG
-    # the match context built by the 'matches' stage is reused by
-    # 'clustered' within one process; on resume (matches skipped) it
-    # is rebuilt from the checkpointed pubs+edges — same inputs, same
-    # deterministic context.
-    _ctx: dict = {}
-
-    def _matches(d):
-        ctx = build_match_context(d["pubs"], d["edges"], cfg)
-        _ctx["ctx"] = ctx
-        return ctx.matches
-
-    def _clustered(d):
-        ctx = _ctx.get("ctx") or build_match_context(
-            d["pubs"], d["edges"], cfg
-        )
-        # cluster from the CHECKPOINTED match frame (durable stage
-        # boundary), not the in-memory plan that produced it
-        return cluster_from_context(
-            d["pubs"], replace(ctx, matches=d["matches"]), cfg
-        )
-
     runner.add("pubs", lambda d: parse_publications(d["repo_files"], cfg))
     runner.add("edges", lambda d: combined_edges(d["pubs"], cfg))
-    runner.add("matches", _matches)
-    runner.add("clustered", _clustered)
+    runner.add(
+        "matches",
+        lambda d: build_match_context(d["pubs"], d["edges"], cfg).frame,
+    )
+    runner.add(
+        "clustered",
+        lambda d: cluster_from_context(
+            d["pubs"], MatchContext(d["matches"]), cfg
+        ),
+    )
     runner.add("metrics", lambda d: pairwise_metrics(d["clustered"]))
     return runner

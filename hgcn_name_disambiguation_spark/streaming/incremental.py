@@ -34,8 +34,11 @@ class IncrementalDisambiguator:
     State: an accumulated `pubs` store + current `clustered` output,
     both parquet-backed (Iceberg at prod — io.catalog) and partitioned
     by ``block_bucket = pmod(xxhash64(block_key), store_buckets)``.
+    The store keeps each micro-batch's pubs under its own
+    ``pubs_store/batch_id=<id>/block_bucket=<b>``.
     Per batch:
-      1. parse new rows -> new pubs; append to the bucketed store
+      1. parse new rows -> new pubs; overwrite the batch's own
+         ``batch_id=<id>`` directory of the store
       2. touched buckets (a bounded list, <= store_buckets ints — the
          ONLY thing that ever reaches the driver) prune the store scan
          to the partitions that can contain touched blocks
@@ -50,7 +53,10 @@ class IncrementalDisambiguator:
 
     Determinism: the result equals the batch pipeline run on the union
     of all rows seen so far (asserted in tests) — incremental vs batch
-    equivalence is the correctness contract.
+    equivalence is the correctness contract. Exactly-once on
+    ``batch_id``: foreachBatch replays a failed micro-batch under the
+    same id, and the replay rewrites that batch's store directory and
+    the touched buckets, so it changes nothing.
     """
 
     def __init__(
@@ -90,8 +96,8 @@ class IncrementalDisambiguator:
         new_pubs = parse_publications(
             batch_df, self.config, observe_name=None
         ).withColumn("block_bucket", self._bucket())
-        new_pubs.write.mode("append").partitionBy("block_bucket").parquet(
-            self._store_path()
+        new_pubs.write.mode("overwrite").partitionBy("block_bucket").parquet(
+            f"{self._store_path()}/batch_id={batch_id}"
         )
 
         touched_keys = new_pubs.select("block_key").distinct()
@@ -104,8 +110,10 @@ class IncrementalDisambiguator:
         ]
         if not buckets:
             return
-        store = self.spark.read.parquet(self._store_path()).where(
-            F.col("block_bucket").isin(buckets)  # partition pruning
+        store = (
+            self.spark.read.parquet(self._store_path())
+            .where(F.col("block_bucket").isin(buckets))  # partition pruning
+            .drop("batch_id")
         )
         scoped = store.join(F.broadcast(touched_keys), "block_key", "left_semi")
         edges = combined_edges(scoped, self.config)

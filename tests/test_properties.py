@@ -23,7 +23,8 @@ from hgcn_name_disambiguation_spark.operators.assign import (
     _score_kernel,
 )
 from hgcn_name_disambiguation_spark.operators.clustering import (
-    _refine_block,
+    _cluster_block,
+    _refine_rounds,
     _union_find,
 )
 from hgcn_name_disambiguation_spark.operators.dedup import _M64, _mix64
@@ -159,22 +160,12 @@ _refine_inputs = st.tuples(
 
 
 def _refine(cids, evidence, tau, me, rounds):
-    """Run the refine kernel on one block -> {pub: output cluster id}."""
-    members = pd.DataFrame(
-        {
-            "block_key": "b",
-            "pub_id": _PUBS[: len(cids)],
-            "cluster_id": cids,
-        }
-    )
-    ev = pd.DataFrame(
-        [("b", a, b, s, tau, me) for a, b, s in evidence],
-        columns=["block_key", "id_a", "id_b", "score", "_tau", "_me"],
-    )
-    out = _refine_block(ev, members, rounds)
-    moved = dict(zip(out["cluster_id"], out["_new_cid"]))
-    assert len(moved) == len(out) and all(a != b for a, b in moved.items())
-    return {p: moved.get(c, c) for p, c in zip(members["pub_id"], cids)}
+    """Run the refine round loop on one block -> {pub: output cluster
+    id}."""
+    start = dict(zip(_PUBS, cids))
+    got = _refine_rounds(dict(start), list(evidence), tau, me, rounds)
+    assert set(got) == set(start) and set(got.values()) <= set(cids)
+    return got
 
 
 def _refine_oracle(cids, evidence, tau, me, rounds):
@@ -234,6 +225,103 @@ def test_refine_kernel_coarsens_to_min_ids_in_any_order(inputs, rnd):
     shuffled = list(evidence)
     rnd.shuffle(shuffled)
     assert _refine(cids, shuffled, tau, me, rounds) == got
+
+
+_cluster_ids = st.sampled_from(_PUBS[:5] + ["px"])  # "px" is no member
+_cluster_inputs = st.tuples(
+    st.integers(min_value=1, max_value=8),  # members: the first n pubs
+    # match-kernel pair rows (a, b, score, in_match, evidence, is_weak),
+    # mostly unmatched so that refine has clusters left to merge
+    st.lists(
+        st.tuples(
+            _cluster_ids,
+            _cluster_ids,
+            st.integers(min_value=0, max_value=8).map(lambda k: k / 8),
+            st.sampled_from([False, False, True, None]),
+            st.booleans(),
+            st.sampled_from([True, False, None]),
+        ),
+        max_size=24,
+    ),
+    # the block's trait row (tier, sparse, gated), or none; half of
+    # them sparse
+    st.sampled_from(
+        [None] + [
+            (tier, sparse, gated)
+            for tier in ("rare", "common", "amb", None)
+            for sparse in (True, False, True, None)
+            for gated in (False, True)
+        ]
+    ),
+    st.integers(min_value=0, max_value=4),  # cluster_refine_rounds
+)
+
+# thresholds that dyadic scores over blocks of <= 8 pubs both clear
+# and miss, so every tier's pair of knobs is exercised
+_CLUSTER_CONFIG = dict(
+    refine_tau_rare=0.25, refine_tau_common=0.5, refine_tau_amb=1.0,
+    refine_min_edges_rare=1, refine_min_edges_common=2,
+    refine_min_edges_amb=2,
+)
+
+
+def _cluster_rows(pairs, trait):
+    rows = [("b", a, b, s, weak, m, ev, None, None, None)
+            for a, b, s, m, ev, weak in pairs]
+    if trait is not None:
+        rows.append(("b", None, None, None, None, None, None) + trait)
+    return rows
+
+
+def _run_cluster_kernel(n, rows, config):
+    frame = pd.DataFrame(
+        rows,
+        columns=["block_key", "id_a", "id_b", "score", "is_weak",
+                 "in_match", "evidence", "tier", "sparse", "gated"],
+    )
+    members = pd.DataFrame({"block_key": "b", "pub_id": _PUBS[:n]})
+    out = _cluster_block(frame, members, config)
+    assert sorted(out["pub_id"]) == _PUBS[:n]
+    assert set(out["block_key"]) == {"b"}
+    return dict(zip(out["pub_id"], out["cluster_id"]))
+
+
+def _cluster_oracle(n, pairs, trait, rounds):
+    """Label-propagation components of the in_match pairs (unmatched
+    pubs keep their own id), then, in a sparse block, the brute-force
+    refine replay over the counted evidence: SQL's
+    ``~(gated & is_weak)`` keeps a row when the AND is False."""
+    label = _oracle([("b", a, b) for a, b, _, m, _, _ in pairs if m is True])
+    cids = [label.get(("b", p), p) for p in _PUBS[:n]]
+    if trait is None or trait[1] is not True:
+        return dict(zip(_PUBS, cids))
+    tier, _, gated = trait
+    tau, me = {"rare": (0.25, 1), "common": (0.5, 2)}.get(tier, (1.0, 2))
+    evidence = [
+        (a, b, s) for a, b, s, _, ev, weak in pairs
+        if ev and (gated and weak) is False
+    ]
+    return _refine_oracle(cids, evidence, tau, me, rounds)
+
+
+@settings(max_examples=300)
+@given(_cluster_inputs, st.randoms(use_true_random=False))
+def test_cluster_kernel_equals_components_then_refine(inputs, rnd):
+    """The per-block clustering kernel gives every member one cluster
+    id: the components of its in_match pairs refined under the block's
+    traits, as label propagation followed by the refine oracle gives
+    them, whatever the row order."""
+    import dataclasses
+
+    n, pairs, trait, rounds = inputs
+    config = dataclasses.replace(
+        DEFAULT_CONFIG, cluster_refine_rounds=rounds, **_CLUSTER_CONFIG
+    )
+    rows = _cluster_rows(pairs, trait)
+    want = _cluster_oracle(n, pairs, trait, rounds)
+    assert _run_cluster_kernel(n, rows, config) == want
+    rnd.shuffle(rows)
+    assert _run_cluster_kernel(n, rows, config) == want
 
 
 # given-name signatures over a small alphabet: initials, full names and

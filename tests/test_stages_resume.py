@@ -77,3 +77,30 @@ def test_resume_from_uri_workdir(spark, fixture_repo_files, tmp_path):
     r2.run({"repo_files": fixture_repo_files})
     assert r2.skipped == ["pubs", "edges", "matches", "clustered", "metrics"]
     assert r2.executed == []
+
+
+def test_resume_from_matches_boundary(spark, fixture_repo_files, tmp_path):
+    """A run killed after 'matches' clusters straight from the
+    checkpointed match-kernel output: a fresh runner re-runs only
+    'clustered' and 'metrics', with the same cluster ids."""
+    import shutil
+
+    wd = str(tmp_path / "run5")
+    r1 = disambiguation_stages(StageRunner(spark, wd))
+    out1 = r1.run({"repo_files": fixture_repo_files})
+    sig1 = sorted(
+        (x.block_key, x.pub_id, x.cluster_id)
+        for x in out1["clustered"].collect()
+    )
+    for st in ["clustered", "metrics"]:
+        shutil.rmtree(f"{wd}/stage_{st}")
+
+    r2 = disambiguation_stages(StageRunner(spark, wd))
+    out2 = r2.run({"repo_files": fixture_repo_files})
+    assert r2.skipped == ["pubs", "edges", "matches"]
+    assert r2.executed == ["clustered", "metrics"]
+    sig2 = sorted(
+        (x.block_key, x.pub_id, x.cluster_id)
+        for x in out2["clustered"].collect()
+    )
+    assert sig1 == sig2

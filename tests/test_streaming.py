@@ -51,6 +51,38 @@ def test_incremental_matches_batch(spark, tmp_path):
     assert got == want
 
 
+def test_incremental_replay_is_exactly_once(spark, tmp_path):
+    """foreachBatch replays a failed micro-batch under the same
+    batch_id: replaying batch 0 before batch 1 leaves one row per pub
+    and the same cluster ids as a run without the replay."""
+    rows = generate_repo_files(seed=7, blocks=2, pubs_per_block=15, skew_factor=2)
+    half = len(rows) // 2
+    first = spark.createDataFrame(rows[:half], REPO_FILES_SCHEMA)
+    second = spark.createDataFrame(rows[half:], REPO_FILES_SCHEMA)
+
+    def run(store, batches):
+        inc = IncrementalDisambiguator(spark, str(tmp_path / store))
+        for df, batch_id in batches:
+            inc.process_batch(df, batch_id)
+        return inc
+
+    replayed = run("replayed", [(first, 0), (first, 0), (second, 1)])
+    clean = run("clean", [(first, 0), (second, 1)])
+    got = replayed.clusters().select("block_key", "pub_id", "cluster_id")
+    assert got.count() == got.select("block_key", "pub_id").distinct().count()
+    assert (
+        spark.read.parquet(str(tmp_path / "replayed" / "pubs_store")).count()
+        == spark.read.parquet(str(tmp_path / "clean" / "pubs_store")).count()
+    )
+    assert "batch_id" not in replayed.clusters().columns
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(
+            tuple,
+            clean.clusters().select("block_key", "pub_id", "cluster_id").collect(),
+        )
+    )
+
+
 def test_streaming_code_curation(spark, tmp_path):
     """The code-curation screens (quality metrics, secret scan) are
     stateless narrow projections, so they run UNCHANGED on a stream in

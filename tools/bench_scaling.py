@@ -46,14 +46,14 @@ SHUFFLE_PARTITIONS = 64
 # ---------------------------------------------------------------------------
 
 def run_once(input_path: str, json_out: str, label: str) -> None:
-    from pyspark.sql import SparkSession
+    from pyspark.sql import SparkSession, functions as F
 
     from hgcn_name_disambiguation_spark.config import DEFAULT_CONFIG
     from hgcn_name_disambiguation_spark.operators.candidate_pairs import (
         combined_edges,
     )
     from hgcn_name_disambiguation_spark.operators.clustering import (
-        assign_clusters,
+        connected_components,
     )
     from hgcn_name_disambiguation_spark.operators.parse import (
         parse_publications,
@@ -100,7 +100,14 @@ def run_once(input_path: str, json_out: str, label: str) -> None:
     # --- timed: threshold + connected components to final clusters ---
     t1 = time.perf_counter()
     matches = threshold_matches(scored, cfg, score_col="score_enriched")
-    clustered = assign_clusters(pubs, matches)
+    comp = connected_components(
+        matches.select(
+            "block_key", F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+        )
+    ).withColumnRenamed("node", "pub_id")
+    clustered = pubs.join(comp, ["block_key", "pub_id"], "left").select(
+        *pubs.columns, F.coalesce("component", "pub_id").alias("cluster_id")
+    )
     n_rows = clustered.count()
     cc_wall = time.perf_counter() - t1
 
@@ -109,8 +116,6 @@ def run_once(input_path: str, json_out: str, label: str) -> None:
     # region, so this isolates executor-compute scaling — the component
     # that replicates per-executor on a real N->4N cluster, where this
     # box's shared-socket memory-bandwidth ceiling does not apply.
-    from pyspark.sql import functions as F
-
     from hgcn_name_disambiguation_spark.functions.names import (
         jaro_winkler_udf,
     )
