@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -62,21 +63,43 @@ class TableIO:
         finally:
             out.close()
 
-    def write(self, name: str, df: DataFrame, partition_by: list[str] | None = None):
+    def write(self, name: str, df: DataFrame):
         if self.catalog:
             writer = df.writeTo(f"{self.catalog}.{name}").using("iceberg")
             writer.createOrReplace()
             return
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self._path(name))
+        df.write.mode("overwrite").parquet(self._path(name))
         self._commit(name)
 
-    def read(self, name: str) -> DataFrame:
+    def read(self, name: str, schema: StructType | None = None) -> DataFrame:
+        """The table as a DataFrame. Given the ``schema`` it was written
+        with, a parquet read skips schema inference (a Spark job)."""
         if self.catalog:
             return self.spark.read.table(f"{self.catalog}.{name}")
-        return self.spark.read.parquet(self._path(name))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._path(name))
+
+    def file_row_counts(self, name: str, df: DataFrame) -> list[int]:
+        """Row count of each data file behind ``df``, a fresh read of
+        table ``name``. Parquet mode runs no Spark job: the file listing
+        the read already holds, plus each file's footer. Catalog mode
+        reads the Iceberg ``files`` metadata table."""
+        if self.catalog:
+            files = self.spark.read.table(f"{self.catalog}.{name}.files")
+            return [r[0] for r in files.select("record_count").collect()]
+        jvm = self.spark._jvm
+        conf = self.spark._jsc.hadoopConfiguration()
+        counts = []
+        for f in df.inputFiles():
+            src = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                jvm.org.apache.hadoop.fs.Path(f), conf
+            )
+            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(src)
+            try:
+                counts.append(reader.getRecordCount())
+            finally:
+                reader.close()
+        return counts
 
     def exists(self, name: str) -> bool:
         if self.catalog:

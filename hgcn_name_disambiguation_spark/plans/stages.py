@@ -10,11 +10,19 @@ Design:
   resume-at-last-completed-stage falls out of the write-then-commit
   contract; a kill mid-stage leaves no marker, so only that stage
   re-runs.
-- Every completed stage appends a lineage row: stage, rows,
-  n_partitions, per-partition row counts (skew visibility), wall
-  seconds, input fingerprints. The lineage table is itself a queryable
-  DataFrame (`runner.lineage()`). For `matches` the rows are the scored
-  pairs plus one trait row per block (see `disambiguation_stages`).
+- Every executed stage gets a lineage row: run_id, stage, rows,
+  n_partitions (parquet files written), max/min rows per file (skew
+  visibility) and wall seconds. The counts come from the footers of
+  the files just written, and the stage is read back with the schema
+  it was written with, so a stage boundary costs its write and no
+  other Spark job. The rows are kept in the runner and appended once
+  per `run()`, in a `finally`: a stage that raises keeps the rows
+  of the stages before it, while a run killed outright (SIGKILL) loses
+  its lineage rows but keeps its committed stages. The lineage table
+  is a queryable DataFrame (`runner.lineage()`); this run's rows are
+  also a list (`runner.lineage_rows`). For `matches` the rows
+  are the scored pairs plus one trait row per block (see
+  `disambiguation_stages`).
 
 The reference has no notion of resume (a killed batch_disambiguation
 run restarts from scratch — `batch_disambiguation.py:94-101`); this is
@@ -27,18 +35,24 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 
 from ..io.catalog import TableIO
 
 StageFn = Callable[[dict[str, DataFrame]], DataFrame]
 
 
+_LINEAGE_SCHEMA = (
+    "run_id string, stage string, rows long, n_partitions long,"
+    " max_partition_rows long, min_partition_rows long, wall_sec double"
+)
+
+
 @dataclass
 class Stage:
     name: str
     fn: StageFn
-    partition_by: list[str] | None = None
 
 
 @dataclass
@@ -52,51 +66,50 @@ class StageRunner:
         self.io = TableIO(self.spark, self.workdir)
         self.executed: list[str] = []
         self.skipped: list[str] = []
+        self.lineage_rows: list[dict] = []  # this run's, see run()
 
-    def add(self, name: str, fn: StageFn, partition_by: list[str] | None = None):
-        self.stages.append(Stage(name, fn, partition_by))
+    def add(self, name: str, fn: StageFn):
+        self.stages.append(Stage(name, fn))
         return self
-
-    def _lineage_row(self, stage: str, df: DataFrame, wall: float) -> DataFrame:
-        per_part = (
-            df.withColumn("_pid", F.spark_partition_id())
-            .groupBy("_pid")
-            .count()
-            .agg(
-                F.count(F.lit(1)).alias("n_partitions"),
-                F.coalesce(F.sum("count"), F.lit(0)).alias("rows"),
-                F.coalesce(F.max("count"), F.lit(0)).alias("max_partition_rows"),
-                F.coalesce(F.min("count"), F.lit(0)).alias("min_partition_rows"),
-            )
-        )
-        return per_part.select(
-            F.lit(self.run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            "rows",
-            "n_partitions",
-            "max_partition_rows",
-            "min_partition_rows",
-            F.lit(round(wall, 3)).alias("wall_sec"),
-        )
 
     def run(self, inputs: dict[str, DataFrame]) -> dict[str, DataFrame]:
         """Execute all stages; resume skips committed ones. Returns
-        {stage_name: checkpointed DataFrame} (reads, not lineage)."""
+        {stage_name: checkpointed DataFrame} (reads, not lineage). The
+        lineage rows of the stages executed, ``lineage_rows``, are
+        appended once, also when a stage raises."""
         available = dict(inputs)
-        for st in self.stages:
-            ck = f"stage_{st.name}"
-            if self.io.exists(ck):
-                available[st.name] = self.io.read(ck)
-                self.skipped.append(st.name)
-                continue
-            t0 = time.perf_counter()
-            out = st.fn(available)
-            self.io.write(ck, out, partition_by=st.partition_by)
-            wall = time.perf_counter() - t0
-            materialized = self.io.read(ck)
-            self.io.append("_lineage", self._lineage_row(st.name, materialized, wall))
-            available[st.name] = materialized
-            self.executed.append(st.name)
+        self.lineage_rows = []
+        try:
+            for st in self.stages:
+                ck = f"stage_{st.name}"
+                if self.io.exists(ck):
+                    available[st.name] = self.io.read(ck)
+                    self.skipped.append(st.name)
+                    continue
+                t0 = time.perf_counter()
+                out = st.fn(available)
+                self.io.write(ck, out)
+                wall = time.perf_counter() - t0
+                materialized = self.io.read(ck, schema=out.schema)
+                counts = self.io.file_row_counts(ck, materialized)
+                self.lineage_rows.append({
+                    "run_id": self.run_id,
+                    "stage": st.name,
+                    "rows": sum(counts),
+                    "n_partitions": len(counts),
+                    "max_partition_rows": max(counts, default=0),
+                    "min_partition_rows": min(counts, default=0),
+                    "wall_sec": round(wall, 3),
+                })
+                available[st.name] = materialized
+                self.executed.append(st.name)
+        finally:
+            if self.lineage_rows:
+                # from pandas, the rows are an Arrow local relation: its
+                # append costs a fifth of one from a list of rows
+                rows = pd.DataFrame(self.lineage_rows)
+                lineage = self.spark.createDataFrame(rows, _LINEAGE_SCHEMA)
+                self.io.append("_lineage", lineage.coalesce(1))
         return {st.name: available[st.name] for st in self.stages}
 
     def lineage(self) -> DataFrame:

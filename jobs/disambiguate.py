@@ -19,7 +19,9 @@ with one Spark application over all name blocks.
 Outputs under --output:
   clustered/   parquet: pub_id, block_key, cluster_id, content_sha, ...
   metrics/     parquet: per-block pairwise P/R/F1 (when labels exist)
-  lineage/     parquet: per-stage row counts + wall seconds
+  lineage/     parquet: one row per executed stage (of every run on the
+               --checkpoint dir): rows, n_partitions (files written),
+               max/min rows per file, wall seconds
   clusters_json/  reference-format cluster report (S8 parity sink)
 """
 
@@ -85,11 +87,15 @@ def main(argv: list[str] | None = None) -> int:
         clustered = outputs["clustered"]
         metrics = outputs["metrics"]
         lineage = runner.lineage()
+        stages = {
+            r["stage"]: {"rows": r["rows"], "wall_sec": r["wall_sec"]}
+            for r in runner.lineage_rows
+        }
     else:
         result = run_pipeline(repo_files, cfg)
         clustered = result.clustered
         metrics = result.metrics
-        lineage = None
+        lineage = stages = None
 
     clustered.write.mode("overwrite").parquet(f"{args.output}/clustered")
     metrics.write.mode("overwrite").parquet(f"{args.output}/metrics")
@@ -112,6 +118,8 @@ def main(argv: list[str] | None = None) -> int:
         "wall_s": round(time.perf_counter() - t0, 2),
         "sha_verified": ok if args.verify_sha else None,
     }
+    if stages is not None:
+        summary["stages"] = stages
     print(json.dumps(summary))
     spark.stop()
     return 0 if ok else 1

@@ -4,6 +4,8 @@ re-implemented as oracle (name_disambiguation.py:111-133)."""
 import itertools
 import random
 
+from hypothesis import example, given, settings, strategies as st
+
 from hgcn_name_disambiguation_spark.operators.evaluate import (
     metrics_summary,
     pairwise_metrics,
@@ -45,6 +47,43 @@ def test_pairwise_metrics_matches_bruteforce(spark):
     want_f1 = sum(v[2] for v in expected.values()) / 2
     assert abs(summary.avg_f1 - want_f1) < 1e-9
     assert summary.n_blocks == 2
+
+
+_label = st.one_of(st.none(), st.integers(0, 2))
+_cluster = st.one_of(st.none(), st.sampled_from(["c0", "c1", "c2", "c3"]))
+_blocks = st.lists(
+    st.lists(st.tuples(_label, _cluster), min_size=1, max_size=8),
+    min_size=1,
+    max_size=4,
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(_blocks)
+@example([[(1, "c0")], [(None, "c0"), (0, None)], [(0, None), (0, None), (1, None)]])
+@example([[(0, "c0"), (0, "c1"), (1, "c2")], [(None, None)]])
+def test_pairwise_metrics_equals_oracle_per_block(spark, blocks):
+    """Per block, the kernel gives the reference's pair-loop P/R/F1 and
+    pair counts. Null labels are dropped; a null cluster_id is one group
+    (SQL groupBy); a block with no labels has no row."""
+    rows, expected = [], {}
+    for b, members in enumerate(blocks):
+        rows += [(f"b{b}", f"p{i}", t, c) for i, (t, c) in enumerate(members)]
+        labelled = [(t, c) for t, c in members if t is not None]
+        if labelled:
+            truth, pred = zip(*labelled)
+            pairs = list(itertools.combinations(range(len(truth)), 2))
+            same_t = [truth[i] == truth[j] for i, j in pairs]
+            same_p = [pred[i] == pred[j] for i, j in pairs]
+            tp = sum(t and p for t, p in zip(same_t, same_p))
+            expected[f"b{b}"] = (tp, sum(same_p), sum(same_t)) + _oracle_prf(
+                truth, pred
+            )
+    df = spark.createDataFrame(
+        rows, "block_key string, pub_id string, label long, cluster_id string"
+    )
+    got = {r.block_key: tuple(r)[1:] for r in pairwise_metrics(df).collect()}
+    assert got == expected
 
 
 def test_fs_channel_weights_hand_computed(spark):
