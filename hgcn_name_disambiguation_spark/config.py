@@ -125,15 +125,9 @@ class PipelineConfig:
     max_venue_df_per_block: int = 500
     max_coauthor_df_per_block: int = 500
     max_org_df_per_block: int = 500
-    # candidate pairs per block hard cap (0 = unlimited); truncation is
-    # counted in lineage, never silent.
+    # candidate pairs per block hard cap (0 = unlimited): a block keeps
+    # its strongest pairs by fused score (candidate_pairs.block_pairs).
     max_pairs_per_block: int = 0
-    # salt buckets for skewed block self-joins (applies to the exploded
-    # key join; AQE skew-join also on). Join keys whose per-block df
-    # exceeds salt_df_threshold take the salted replicated join split
-    # into salt_buckets sub-keys; 0 disables explicit salting.
-    salt_buckets: int = 8
-    salt_df_threshold: int = 64
 
     # --- name-constraint channel (operators.name_constraints) ---
     # Extract the focal author's given-name signature per pub (e.g.

@@ -161,7 +161,8 @@ def generate_repo_files(
             block_key = f"{block_key} {b}"
         n_entities = 1 + rng.randrange(6)
         rows.extend(_make_block(rng, block_key, n_entities, pubs_per_block, seed))
-    # Skewed mega-block (exercises salting / AQE skew join).
+    # Skewed mega-block: one block far larger than the rest, the
+    # per-block kernels' worst case.
     rows.extend(
         _make_block(rng, _SKEW_BLOCK, 12, pubs_per_block * skew_factor, seed)
     )

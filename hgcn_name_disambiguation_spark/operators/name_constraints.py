@@ -8,9 +8,9 @@ person as "John W. Smith", and the reference's own ``raw-data/john
 smith.xml`` block mixes Kenneth J. / Thomas J. / Richard J. Smith
 under one key. This module turns that into cannot-link constraints:
 
-1. ``focal_signatures`` — per pub, the given-name token array of the
-   block-focal author ("John R. Smith" -> ['john','r']); pure column
-   ops (explode + filter + window argmax), no Python.
+1. ``focal_signature`` — per pub, the given-name token array of the
+   block-focal author ("John R. Smith" -> ['john','r']); one row-local
+   array expression (filter + sort), no shuffle and no Python.
 2. ``signature_seeds`` — per block, the MAXIMAL signatures (not
    out-ranked by any more specific compatible signature) act as
    identity classes.
@@ -28,17 +28,18 @@ Token compatibility (standard given-name subsumption): equal tokens
 match; an initial matches any token with the same first letter;
 position-wise over the zipped arrays, missing tail tokens match.
 
-Only ``focal_signatures`` is a Spark operator. Steps 2-4 are plain
-Python over one block's signatures and match edges: blocks never
-interact, so ``plans.pipeline.build_match_context`` runs them inside
-its per-block kernel, with no joins, round loops or actions.
+Only step 1 is a Spark column (``focal_signatures`` selects it).
+Steps 2-4 are plain Python over one block's signatures and match
+edges: blocks never interact, so ``plans.pipeline.build_match_context``
+runs them inside its per-block kernel, with no joins, round loops or
+actions.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable, Mapping, Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.names import normalize_name
 
@@ -67,59 +68,53 @@ def _specificity(sig: Sequence[str]) -> tuple[int, int, int]:
     return (len(sig), sum(len(t) > 1 for t in sig), sum(len(t) for t in sig))
 
 
-def focal_signatures(pubs: DataFrame) -> DataFrame:
-    """(block_key, pub_id, authors) -> (block_key, pub_id, sig).
-
-    sig = given-name tokens of the best focal-author candidate: an
-    author whose normalized LAST token equals the block's last name,
-    preferring (a) first token equal to the block first name, then
-    (b) initial-compatible first token, then longer signatures.
-    Pubs with no candidate get a null sig (no constraint).
-    """
-    bparts = F.split(F.col("block_key"), " ")
+def focal_signature(block_key: Column, authors: Column) -> Column:
+    """The focal signature of one pub as a row-local column: the
+    given-name tokens of the best focal-author candidate among
+    ``authors``, null when there is none. A candidate is an author
+    whose normalized LAST token equals the block's last name; the
+    best one has the highest priority (2: first token equal to the
+    block's first name, 1: initial-compatible first token, 0: other),
+    then the longest signature (more given-name tokens = stronger
+    cannot-link evidence), then the smallest first token, then the
+    smallest signature, so the order is total."""
+    bparts = F.split(block_key, " ")
     bfirst = F.element_at(bparts, 1)
     blast = F.element_at(bparts, -1)
-    exploded = (
-        pubs.select(
-            "block_key",
-            "pub_id",
-            bfirst.alias("_bf"),
-            blast.alias("_bl"),
-            F.explode("authors").alias("author"),
-        )
-        .withColumn("_toks", F.split(normalize_name(F.col("author")), " "))
-        .where(
-            (F.size("_toks") >= 2)
-            & (F.element_at("_toks", -1) == F.col("_bl"))
-        )
-        .withColumn("sig", F.slice("_toks", 1, F.size("_toks") - 1))
-        .withColumn("_g1", F.element_at("sig", 1))
-        .withColumn(
-            "_pri",
-            F.when(F.col("_g1") == F.col("_bf"), 2)
+    cands = F.filter(
+        F.transform(authors, lambda a: F.split(normalize_name(a), " ")),
+        lambda t: (F.size(t) >= 2) & (F.element_at(t, -1) == blast),
+    )
+
+    def ranked(t: Column) -> Column:
+        g1 = F.element_at(t, 1)
+        pri = (
+            F.when(g1 == bfirst, 2)
             .when(
-                (F.substring("_g1", 1, 1) == F.substring("_bf", 1, 1))
-                & (
-                    (F.length("_g1") == 1) | (F.length("_bf") == 1)
-                ),
+                (F.substring(g1, 1, 1) == F.substring(bfirst, 1, 1))
+                & ((F.length(g1) == 1) | (F.length(bfirst) == 1)),
                 1,
             )
-            .otherwise(0),
+            .otherwise(0)
         )
-    )
-    # among equal-priority candidates prefer the LONGEST signature
-    # (more given-name tokens = stronger cannot-link evidence), then
-    # the lexicographically first for determinism.
-    w = Window.partitionBy("block_key", "pub_id").orderBy(
-        F.desc("_pri"), F.size("sig").desc(), F.asc("_g1")
-    )
-    best = (
-        exploded.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("block_key", "pub_id", "sig")
-    )
-    return pubs.select("block_key", "pub_id").join(
-        best, ["block_key", "pub_id"], "left"
+        # ascending struct order = priority and length descending
+        return F.struct(
+            (-pri).alias("pri"),
+            (1 - F.size(t)).alias("len"),
+            g1.alias("g1"),
+            F.slice(t, 1, F.size(t) - 1).alias("sig"),
+        )
+
+    return F.get(F.array_sort(F.transform(cands, ranked)), 0)["sig"]
+
+
+def focal_signatures(pubs: DataFrame) -> DataFrame:
+    """(block_key, pub_id, authors) -> (block_key, pub_id, sig), one
+    row per pub, with ``focal_signature``'s sig (null: no constraint)."""
+    return pubs.select(
+        "block_key",
+        "pub_id",
+        focal_signature(F.col("block_key"), F.col("authors")).alias("sig"),
     )
 
 

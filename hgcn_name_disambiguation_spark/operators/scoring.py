@@ -9,31 +9,35 @@ per-relation evidence is semantically faithful, with the reference's
 relation weights (5*coauthor + 1*title + 4*venue)/10 (``GCN.py:124``)
 as the default.
 
-Everything here is built-in column arithmetic — whole-stage codegen,
-no Python in the hot path. The optional ``enrich_scores`` adds
-Jaro-Winkler (pandas UDF) + token-Jaccard features for precision on
-borderline pairs.
+Everything here is a pure function of one pair's evidence, called per
+pair inside the per-block match kernel
+(``plans.pipeline.build_match_context``). The optional
+``enrich_scores`` adds Jaro-Winkler + token-Jaccard features for
+precision on borderline pairs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from collections.abc import Sequence
 
 from ..config import PipelineConfig, DEFAULT_CONFIG
-from ..functions.names import jaro_winkler_udf
+from ..functions.names import jaro_winkler
 
 
 def fuse_scores(
-    edges: DataFrame, config: PipelineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """edges(block_key,id_a,id_b,w_coauthor,w_title,[w_org,]w_venue)
-    -> +score.
+    w_coauthor: float,
+    title_cos: float,
+    w_venue: float,
+    w_org: float = 0.0,
+    config: PipelineConfig = DEFAULT_CONFIG,
+) -> float:
+    """One pair's fused score.
 
     Per-relation evidence is squashed to [0,1]:
       coauthor_sig = min(1, w_coauthor)        (>=1 shared coauthor)
       title_sig    = title_cos                 (IDF-weighted cosine,
                                                scale-free — see
-                                               candidate_pairs.title_edges)
+                                               candidate_pairs.block_pairs)
       venue_sig    = min(1, w_venue)           (same venue)
       org_sig      = min(1, w_org)             (same affiliation string;
                                                engine extension — the
@@ -44,150 +48,64 @@ def fuse_scores(
     The reference channels keep their exact published weights; org is
     additive on top (score range [0, 1 + w_org/10]).
     """
-    ca = F.least(F.lit(1.0), F.col("w_coauthor"))
-    ti = F.col("title_cos")
-    ve = F.least(F.lit(1.0), F.col("w_venue"))
     score = (
-        config.w_coauthor * ca + config.w_title * ti + config.w_venue * ve
-    ) / F.lit(config.weight_norm)
-    if "w_org" in edges.columns and config.w_org > 0:
-        score = score + (
-            config.w_org * F.least(F.lit(1.0), F.col("w_org"))
-        ) / F.lit(config.weight_norm)
-    return edges.withColumn("score", score)
+        config.w_coauthor * min(1.0, w_coauthor)
+        + config.w_title * title_cos
+        + config.w_venue * min(1.0, w_venue)
+    ) / config.weight_norm
+    if config.w_org > 0:
+        score = score + (config.w_org * min(1.0, w_org)) / config.weight_norm
+    return score
 
 
 def enrich_scores(
-    scored: DataFrame,
-    pubs: DataFrame,
-    config: PipelineConfig = DEFAULT_CONFIG,
-    band: tuple[float, float] | None = None,
-) -> DataFrame:
-    """Join pub attributes onto pairs and add string-sim features:
-    token Jaccard (built-in array ops) and title Jaro-Winkler (Arrow
-    pandas UDF — only stage that crosses into Python, and only for
-    pairs inside ``band``).
+    score: float,
+    toks_a: Sequence[str] | None,
+    toks_b: Sequence[str] | None,
+    title_a: str | None,
+    title_b: str | None,
+) -> tuple[float, float, float]:
+    """One pair's string-similarity features -> (jaccard_title,
+    jw_title, score_enriched): the token-set Jaccard of the two title
+    token lists, the Jaro-Winkler similarity of the raw titles (0.0
+    when either is null) and
 
-    score_enriched = 0.7*score + 0.3*mean(jaccard, jw).
+      score_enriched = 0.7*score + 0.3*mean(jaccard, jw).
     """
-    attrs = pubs.select(
-        "block_key",
-        F.col("pub_id"),
-        F.col("title_toks"),
-        F.col("title"),
-        F.col("venue"),
+    a, b = set(toks_a if toks_a is not None else ()), set(
+        toks_b if toks_b is not None else ()
     )
-    a = attrs.alias("pa")
-    b = attrs.alias("pb")
-    joined = (
-        scored.join(
-            a,
-            (scored.block_key == F.col("pa.block_key"))
-            & (scored.id_a == F.col("pa.pub_id")),
-        )
-        .join(
-            b,
-            (scored.block_key == F.col("pb.block_key"))
-            & (scored.id_b == F.col("pb.pub_id")),
-        )
-        .select(
-            scored["*"],
-            F.col("pa.title_toks").alias("toks_a"),
-            F.col("pb.title_toks").alias("toks_b"),
-            F.col("pa.title").alias("title_a"),
-            F.col("pb.title").alias("title_b"),
-            F.col("pa.venue").alias("venue_a"),
-            F.col("pb.venue").alias("venue_b"),
-        )
+    union = len(a | b)
+    jaccard = len(a & b) / union if union > 0 else 0.0
+    jw = (
+        jaro_winkler(title_a, title_b)
+        if title_a is not None and title_b is not None
+        else 0.0
     )
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    union = F.size(F.array_union("toks_a", "toks_b"))
-    jaccard = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-    in_band = (
-        (F.col("score") >= band[0]) & (F.col("score") < band[1])
-        if band
-        else F.lit(True)
-    )
-    jw = F.when(in_band, jaro_winkler_udf("title_a", "title_b")).otherwise(
-        F.lit(0.0)
-    )
-    # NOTE: no venue Levenshtein here — score_enriched only consumes
-    # jaccard + jw, so computing edit distance per pair would be pure
-    # cost (it was measured dead weight and removed).
-    out = joined.withColumn("jaccard_title", jaccard).withColumn(
-        "jw_title", jw
-    )
-    enriched = F.when(
-        in_band,
-        0.7 * F.col("score")
-        + 0.3 * (F.col("jaccard_title") + F.col("jw_title")) / 2.0,
-    ).otherwise(F.col("score"))
-    return out.withColumn("score_enriched", enriched).drop(
-        "toks_a", "toks_b", "title_a", "title_b", "venue_a", "venue_b"
-    )
+    return jaccard, jw, 0.7 * score + 0.3 * (jaccard + jw) / 2.0
 
 
 def match_flags(
-    scored: DataFrame,
+    score: float,
+    w_coauthor: float,
+    w_title: float,
+    title_cos: float,
+    w_venue: float,
+    w_org: float,
     config: PipelineConfig = DEFAULT_CONFIG,
-    score_col: str = "score",
-) -> DataFrame:
-    """Annotate scored pairs with the match decision as COLUMNS (used
-    by the adaptive pipeline, which routes strong and weak matches
-    differently; ``threshold_matches`` keeps the row-filter form):
+) -> tuple[bool, bool]:
+    """One pair's match decision -> (is_match, is_weak).
 
-    - ``is_match``: same predicate as ``threshold_matches`` (tau +
-      strong-title rescue + corroboration gates).
-    - ``is_weak``: the pair's evidence is venue-only in fused terms —
-      no coauthor, no org, and title cosine below the strong bar. Weak
-      matches clear tau only through the venue term; under the
-      ambiguity gate they corroborate but may not bridge.
-    """
-    cond = F.col(score_col) > config.match_threshold
-    have = set(scored.columns)
-    if {"w_coauthor", "w_venue", "w_org", "title_cos"} <= have:
-        no_title = F.col("title_cos") <= 0
-        no_other = (F.col("w_venue") <= 0) & (F.col("w_org") <= 0)
-        if config.exclude_single_coauthor_only:
-            solo_co = (F.col("w_coauthor") == 1) & no_other & no_title
-            cond = cond & ~solo_co
-        if config.exclude_venue_only:
-            solo_ve = (
-                (F.col("w_venue") > 0)
-                & (F.col("w_coauthor") <= 0)
-                & (F.col("w_org") <= 0)
-                & no_title
-            )
-            cond = cond & ~solo_ve
-    if "title_cos" in have:
-        strong = F.col("title_cos") >= config.strong_title_cos
-        if "w_title" in have:
-            strong = strong & (F.col("w_title") > 0)
-        cond = cond | strong
-    weak = (
-        (F.col("w_coauthor") <= 0)
-        & (F.col("w_org") <= 0)
-        & (F.col("title_cos") < config.strong_title_cos)
-        if {"w_coauthor", "w_org", "title_cos"} <= have
-        else F.lit(False)
-    )
-    return scored.withColumn("is_match", cond).withColumn("is_weak", weak)
-
-
-def threshold_matches(
-    scored: DataFrame,
-    config: PipelineConfig = DEFAULT_CONFIG,
-    score_col: str = "score",
-) -> DataFrame:
-    """G6: keep pairs above the match threshold — the edge set of the
-    match graph (reference pre-cluster threshold,
-    ``name_disambiguation.py:86,599``).
-
-    A second high-precision rule admits title-only pairs whose
-    IDF-cosine is strong (>= strong_title_cos): pubs connected by
-    nothing but a rare-token title match still belong together, and
-    the fused weight (1/10) alone can never lift them over tau.
+    ``is_match`` (G6, the reference's pre-cluster threshold,
+    ``name_disambiguation.py:86,599``): the score clears
+    ``match_threshold``, or the strong-title rule fires. The strong-title
+    rule admits title-only pairs whose IDF-cosine is strong
+    (>= strong_title_cos): pubs connected by nothing but a rare-token
+    title match still belong together, and the fused weight (1/10)
+    alone can never lift them over tau. It requires
+    >= min_title_overlap shared tokens (``w_title`` > 0): a single
+    shared token can dominate two short titles' idf mass and fake a
+    strong cosine — one word is never enough to merge on alone.
 
     Corroboration gates (config.exclude_single_coauthor_only /
     exclude_venue_only): evidence signatures whose measured precision
@@ -196,14 +114,23 @@ def threshold_matches(
     even when the fused score clears tau — see config for the
     measured numbers.
 
-    The strong-title rescue requires >= min_title_overlap shared
-    tokens (w_title is zeroed below that bound): a single shared token
-    can dominate two short titles' idf mass and fake a strong cosine —
-    one word is never enough to merge on alone. The predicate itself
-    lives in ``match_flags`` (single source of truth).
+    ``is_weak``: the pair's evidence is venue-only in fused terms — no
+    coauthor, no org, and title cosine below the strong bar. Weak
+    matches clear tau only through the venue term; under the ambiguity
+    gate they corroborate but may not bridge.
     """
-    return (
-        match_flags(scored, config, score_col)
-        .where(F.col("is_match"))
-        .select("block_key", "id_a", "id_b", F.col(score_col).alias("score"))
+    cond = score > config.match_threshold
+    no_title = title_cos <= 0
+    if config.exclude_single_coauthor_only:
+        cond = cond and not (
+            w_coauthor == 1 and w_venue <= 0 and w_org <= 0 and no_title
+        )
+    if config.exclude_venue_only:
+        cond = cond and not (
+            w_venue > 0 and w_coauthor <= 0 and w_org <= 0 and no_title
+        )
+    strong = title_cos >= config.strong_title_cos and w_title > 0
+    weak = (
+        w_coauthor <= 0 and w_org <= 0 and title_cos < config.strong_title_cos
     )
+    return cond or strong, weak

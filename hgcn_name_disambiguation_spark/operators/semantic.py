@@ -29,15 +29,19 @@ executors per iteration — Spark ML's design). Vocabulary, not corpus
 size, bounds that memory: ``w2v_min_count`` keeps the vocab to tokens
 seen repeatedly, and at 10^12-doc scale the fit runs on a sampled
 fraction of sentences (embeddings need token co-occurrence coverage,
-not every document) while ``document_vectors`` — plain joins/aggs,
-fully distributed — still covers every document. The per-component
-explode in ``document_vectors`` multiplies rows by ``w2v_dim``; it
-stays JVM-side (posexplode + hash agg), shuffles on (pub_id) only,
-and never collects.
+not every document) while the doc vectors still cover every
+document. They are formed where they are read: ``word_table`` collects
+{tok: (idf, vector)} for the in-vocabulary tokens (bounded by the
+vocabulary, like the fit), and ``doc_vector`` is a pure function the
+semantic merge kernel calls per member.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
@@ -71,7 +75,16 @@ def training_sentences(
 def train_word_vectors(
     pubs: DataFrame, config: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
-    """Fit Word2Vec on the corpus's own sentences -> (word, vector).
+    """Fit Word2Vec on the corpus's own sentences -> (word, vector)
+    (``_fit_word_vectors`` without its sentence count)."""
+    return _fit_word_vectors(pubs, config)[0]
+
+
+def _fit_word_vectors(
+    pubs: DataFrame, config: PipelineConfig
+) -> tuple[DataFrame, int | None]:
+    """Fit Word2Vec on the corpus's own sentences -> ((word, vector),
+    the sentence count when the fit took it, else None).
 
     Deterministic for a fixed config at ``w2v_num_partitions=1``
     (Spark ML's fit is order-dependent across partitions; at cluster
@@ -82,8 +95,8 @@ def train_word_vectors(
     ``w2v_sample_fraction < 1`` is the 100-TB path: the FIT consumes a
     deterministic hash-sample of the sentences (xxhash64(pub_id, seed)
     — reproducible across reruns/executor counts, unlike
-    ``DataFrame.sample``'s partition-dependent RNG), while
-    ``document_vectors`` still featurizes EVERY document. Embeddings
+    ``DataFrame.sample``'s partition-dependent RNG), while the doc
+    vectors still cover EVERY document. Embeddings
     need token co-occurrence coverage, not every sentence.
 
     The DEFAULT config engages that path automatically (round 5):
@@ -98,6 +111,7 @@ def train_word_vectors(
 
     sents = training_sentences(pubs, config)
     frac = min(max(config.w2v_sample_fraction, 0.0), 1.0)
+    n = None
     if frac >= 1.0 and config.w2v_max_fit_sentences > 0:
         # auto-derive the 100-TB-safe fraction: one bounded scalar
         # action (a count the fit's own cost dwarfs) caps the
@@ -121,9 +135,57 @@ def train_word_vectors(
         inputCol="sent",
         outputCol="_vec",
     ).fit(sents)
-    return model.getVectors().select(
+    vectors = model.getVectors().select(
         "word", vector_to_array(F.col("vector"), "float64").alias("vector")
     )
+    return vectors, n
+
+
+def word_table(
+    pubs: DataFrame, word_vectors: DataFrame, n_docs: int
+) -> dict[str, tuple[float, np.ndarray]]:
+    """{tok: (idf, vector)} for every title token of ``pubs`` that has a
+    word vector, collected to the driver (its size is bounded by the
+    vocabulary, not the corpus). idf(tok) = ln(N / (1 + df(tok))) over
+    ``n_docs`` = N documents — CORPUS-wide, unlike the per-block idf of
+    the title channel: semantic generality of a word is a corpus
+    property, not a block property. A document is one pubs row, i.e.
+    one (block_key, pub_id): the same paper filed under two name
+    blocks counts, and is featurized, once per block.
+
+    One aggregation and one join to the vocabulary, JVM-side."""
+    df = (
+        pubs.select(F.explode(F.array_distinct("title_toks")).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .join(word_vectors.withColumnRenamed("word", "tok"), "tok")
+        .select(
+            "tok",
+            F.log(F.lit(n_docs) / (1.0 + F.col("df"))).alias("idf"),
+            "vector",
+        )
+    )
+    return {
+        r.tok: (r.idf, np.asarray(r.vector, dtype=float)) for r in df.collect()
+    }
+
+
+def doc_vector(
+    toks: Iterable[str] | None, table: dict[str, tuple[float, np.ndarray]]
+) -> np.ndarray | None:
+    """IDF-weighted mean of the in-vocabulary title-token vectors of one
+    document (distinct tokens, summed in sorted order). None when no
+    token is in ``table`` or the idf weights do not sum above 0 —
+    callers treat it as "no semantic evidence"."""
+    hits = sorted({t for t in toks if t in table}) if toks is not None else []
+    if not hits:
+        return None
+    w = np.array([table[t][0] for t in hits])
+    wsum = w.sum()
+    if not wsum > 0:
+        return None
+    vecs = np.stack([table[t][1] for t in hits])
+    return (w[:, None] * vecs).sum(axis=0) / wsum
 
 
 def document_vectors(
@@ -131,69 +193,49 @@ def document_vectors(
     word_vectors: DataFrame,
     config: PipelineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """IDF-weighted mean of title-token vectors per pub.
+    """IDF-weighted mean of title-token vectors per pub (``doc_vector``
+    over ``word_table``).
 
-    (block_key, pub_id, vec ARRAY<DOUBLE>) — pubs with no in-vocab
-    title token get NULL (callers treat NULL as "no semantic
-    evidence"). idf(tok) = ln(N_corpus / (1 + df_corpus(tok))) —
-    CORPUS-wide df, unlike the per-block idf of title_edges: semantic
-    generality of a word is a corpus property, not a block property.
+    (block_key, pub_id, vec ARRAY<DOUBLE>) — one row per pub with at
+    least one in-vocab title token, vec NULL when its idf weights do
+    not sum above 0; pubs with no in-vocab token get no row (callers
+    left-join and treat NULL as "no semantic evidence")."""
+    table = word_table(pubs, word_vectors, pubs.count())
 
-    All JVM-side: explode tokens -> df agg -> join word vectors ->
-    posexplode components -> weighted hash agg per (pub, component) ->
-    array rebuild. One shuffle per agg, keyed on token / pub_id.
-    """
-    toks = pubs.select(
-        "block_key", "pub_id", F.explode("title_toks").alias("tok")
-    ).dropDuplicates(["pub_id", "tok"])
-    # the corpus-df aggregation and the weighting join both consume the
-    # deduped token explode — materialize it once
-    toks = toks.localCheckpoint(eager=True)
-    n_docs = pubs.select(F.count(F.lit(1)).alias("n"))
-    df_counts = (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(n_docs))
-        .withColumn("idf", F.log(F.col("n") / (1.0 + F.col("df"))))
-        .select("tok", "idf")
-    )
-    weighted = (
-        toks.join(df_counts, "tok")
-        .join(word_vectors.withColumnRenamed("word", "tok"), "tok")
-        .select(
-            "block_key",
-            "pub_id",
-            "idf",
-            F.posexplode("vector").alias("pos", "val"),
-        )
-    )
-    comp = weighted.groupBy("block_key", "pub_id", "pos").agg(
-        F.sum(F.col("idf") * F.col("val")).alias("wval"),
-        F.sum("idf").alias("wsum"),
-    )
-    return (
-        comp.groupBy("block_key", "pub_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("pos", "wval"))
-            ).alias("comps"),
-            F.first("wsum").alias("wsum"),
-        )
-        .select(
-            "block_key",
-            "pub_id",
-            F.when(
-                F.col("wsum") > 0,
-                F.transform(
-                    F.col("comps"), lambda c: c["wval"] / F.col("wsum")
+    def vectors(batches):
+        for pdf in batches:
+            keep = [
+                toks is not None and any(t in table for t in toks)
+                for toks in pdf["title_toks"]
+            ]
+            part = pdf[keep]
+            vecs = [doc_vector(t, table) for t in part["title_toks"]]
+            yield pd.DataFrame({
+                "block_key": part["block_key"],
+                "pub_id": part["pub_id"],
+                "vec": pd.Series(
+                    [None if v is None else v.tolist() for v in vecs],
+                    index=part.index, dtype=object,
                 ),
-            ).alias("vec"),
-        )
+            })
+
+    return pubs.select("block_key", "pub_id", "title_toks").mapInPandas(
+        vectors, schema="block_key string, pub_id string, vec array<double>"
     )
+
+
+def semantic_word_table(
+    pubs: DataFrame, config: PipelineConfig = DEFAULT_CONFIG
+) -> dict[str, tuple[float, np.ndarray]]:
+    """Train, then ``word_table`` over the same pubs: the driver-side
+    table the semantic merge kernel forms its doc vectors from. N is
+    the sentence count the fit takes (one sentence per pub)."""
+    vectors, n = _fit_word_vectors(pubs, config)
+    return word_table(pubs, vectors, pubs.count() if n is None else n)
 
 
 def semantic_document_vectors(
     pubs: DataFrame, config: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
-    """Train + featurize in one call (the eval/pipeline entry)."""
+    """Train + featurize in one call (the eval/parity entry)."""
     return document_vectors(pubs, train_word_vectors(pubs, config), config)

@@ -5,9 +5,9 @@ sequential loop (``name_disambiguation.py:785``,
 ``batch_disambiguation.py:94-101``) becomes a single DAG where
 ``block_key`` is just a column. Stages:
 
-  repo_files --parse--> pubs --edges--> combined_edges --fuse-->
-  scored pairs --[name constraints + ambiguity-adaptive threshold]-->
-  match graph --[CC (per-block union-find) + auto-calibrated cluster
+  repo_files --parse--> pubs --[per block: candidate pairs, fused
+  scores, name constraints + ambiguity-adaptive threshold]--> match
+  graph --[CC (per-block union-find) + auto-calibrated cluster
   refine]--> clustered pubs --[semantic cluster merge]-->
   final clusters --evaluate--> per-block P/R/F1
 
@@ -29,12 +29,13 @@ numbers):
    (both in clustering.refine_clusters), then the semantic centroid
    merge (cluster_merge.semantic_cluster_merge).
 
-Items 1-3 run in one per-block match kernel (``_match_block``), whose
-checkpointed output is the only thing clustering reads
-(``MatchContext``). Clustering is one grouped pandas kernel per block
-(``clustering._cluster_block``), and so is the merge: every block runs
-all of its rounds locally, with no distributed round loops, per-round
-checkpoints or emptiness probes.
+Candidate pairs, scoring and items 1-3 run in one per-block match
+kernel over ``pubs`` (``_match_block``), whose output is the only
+thing clustering reads (``MatchContext``). Clustering is one grouped
+pandas kernel per block (``clustering._cluster_block``), and so is the
+merge, which forms its doc vectors itself: every block runs all of its
+rounds locally, with no windows, joins between pair frames,
+distributed round loops, per-round checkpoints or emptiness probes.
 
 Each stage is exposed separately for checkpoint/resume (plans.stages);
 this module is the pure dataflow.
@@ -46,23 +47,23 @@ from collections import Counter
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig, DEFAULT_CONFIG
 from ..functions.names import name_tier
-from ..operators import name_constraints
-from ..operators.candidate_pairs import combined_edges
-from ..operators.clustering import _min_roots, _values, refine_clusters
+from ..operators import name_constraints, scoring
+from ..operators.candidate_pairs import (
+    EDGE_SCHEMA, block_pairs, member_columns,
+)
+from ..operators.clustering import _min_roots, refine_clusters
 from ..operators.evaluate import pairwise_metrics
-from ..operators.name_constraints import focal_signatures
+from ..operators.name_constraints import focal_signature
 from ..operators.parse import parse_publications
-from ..operators.scoring import enrich_scores, fuse_scores, match_flags
 
 
 @dataclass
 class PipelineResult:
     pubs: DataFrame
-    edges: DataFrame
     scored: DataFrame
     matches: DataFrame
     clustered: DataFrame
@@ -71,7 +72,7 @@ class PipelineResult:
 
 @dataclass(frozen=True)
 class MatchContext:
-    """Everything the score->match step produces that clustering needs:
+    """Everything the pubs->match step produces that clustering needs:
     ``frame``, the per-block match kernel's checkpointed output (see
     ``build_match_context``) and the ``matches`` stage of
     ``plans.stages``. It holds the scored pairs with their flags
@@ -111,30 +112,61 @@ class MatchContext:
 
 
 def _match_block(
-    flagged: pd.DataFrame,
-    members: pd.DataFrame,
-    config: PipelineConfig,
-    score_col: str,
+    members: pd.DataFrame, config: PipelineConfig
 ) -> pd.DataFrame:
-    """One block's match step (cogroup kernel): the block's flagged
-    pairs and its members (block_key, pub_id, sig, tier) -> the pairs
-    plus ``sig_cut`` and ``in_match``, and one trait row (tier, sparse,
-    gated) with null pair ids.
+    """One block's match step (grouped kernel): the block's members
+    (block_key, pub_id, auth, venue, org, title_toks, sig, tier[,
+    title]) -> its candidate pairs (``candidate_pairs.block_pairs``)
+    with their score (``scoring.fuse_scores``; with ``config.enrich``
+    also ``scoring.enrich_scores``' jaccard_title, jw_title and
+    score_enriched, which the match threshold then reads), flags
+    (``scoring.match_flags``), ``sig_cut`` and ``in_match``, plus one
+    trait row (tier, sparse, gated) with null pair ids.
 
-    Flag columns keep SQL null semantics: a null ``is_match`` or
-    ``is_weak`` never selects a pair. Blocks without members get no
-    trait row, so only their strong pairs match.
+    A block whose tier is null gets no trait row, so only its strong
+    pairs match.
     """
-    n = len(flagged)
-    ida, idb = flagged["id_a"].tolist(), flagged["id_b"].tolist()
-    score = _values(flagged, score_col)
-    is_match = _values(flagged, "is_match")
-    is_weak = _values(flagged, "is_weak")
+    pairs = block_pairs(members, config)
+    n = len(pairs)
+    ida, idb = pairs["id_a"].tolist(), pairs["id_b"].tolist()
+    co, wt, tc, ve, og = (
+        pairs[c].tolist()
+        for c in ("w_coauthor", "w_title", "title_cos", "w_venue", "w_org")
+    )
+    score = [
+        scoring.fuse_scores(co[i], tc[i], ve[i], og[i], config)
+        for i in range(n)
+    ]
+    out = pairs.assign(score=score)
+    if config.enrich:
+        toks = dict(zip(members["pub_id"], members["title_toks"]))
+        titles = dict(zip(members["pub_id"], members["title"]))
+        enriched = [
+            scoring.enrich_scores(
+                score[i], toks.get(ida[i]), toks.get(idb[i]),
+                titles.get(ida[i]), titles.get(idb[i]),
+            )
+            for i in range(n)
+        ]
+        out = out.assign(
+            jaccard_title=[e[0] for e in enriched],
+            jw_title=[e[1] for e in enriched],
+            score_enriched=[e[2] for e in enriched],
+        )
+        score = out["score_enriched"].tolist()
+    flags = [
+        scoring.match_flags(
+            score[i], co[i], wt[i], tc[i], ve[i], og[i], config
+        )
+        for i in range(n)
+    ]
+    is_match = [f[0] for f in flags]
+    is_weak = [f[1] for f in flags]
     sigs = {
         p: None if s is None else tuple(s)
         for p, s in zip(members["pub_id"], members["sig"])
     }
-    matched = [i for i in range(n) if is_match[i] is True]
+    matched = [i for i in range(n) if is_match[i]]
     classes = name_constraints.resolve_signature_classes(
         sigs, ((ida[i], idb[i], score[i]) for i in matched)
     )
@@ -145,14 +177,13 @@ def _match_block(
         )
         for i in range(n)
     ]
-    keep = [is_match[i] is True and not cut[i] for i in range(n)]
-    strong = [keep[i] and is_weak[i] is False for i in range(n)]
+    keep = [is_match[i] and not cut[i] for i in range(n)]
+    strong = [keep[i] and not is_weak[i] for i in range(n)]
 
-    tier = members["tier"].iloc[0] if len(members) else None
-    rich = [score[i] for i in matched if score[i] is not None]
+    tier = members["tier"].iloc[0]
+    rich = [score[i] for i in matched]
     sparse = (sum(rich) / len(rich) if rich else 0.0) < config.refine_richness_max
-    # a block without members gets no trait row, and weak pairs need an
-    # open (not gated) block
+    # weak pairs need an open (not gated) block
     gated = tier is None
     if config.weak_bridge_gate and tier == "amb":
         # is the strong-evidence graph fragmented? sizes count every
@@ -166,30 +197,27 @@ def _match_block(
             and len(members) >= config.amb_gate_min_n
         )
     rescue = config.rare_rescue_cos < 1.0 and tier == "rare" and sparse
-    if rescue:
-        title_cos = _values(flagged, "title_cos")
-        w_title = _values(flagged, "w_title")
     in_match = [
         strong[i]
-        or (keep[i] and is_weak[i] is True and not gated)
+        or (keep[i] and is_weak[i] and not gated)
         or (
             rescue
             and not cut[i]
-            and is_match[i] is False
-            and title_cos[i] is not None
-            and title_cos[i] >= config.rare_rescue_cos
+            and not is_match[i]
+            and tc[i] >= config.rare_rescue_cos
             # >= min_title_overlap shared tokens (w_title zeroed below):
             # a single shared token faking a modest cosine is exactly
             # the false-merge channel measured on xiaoyan li-type
             # blocks — one word is never enough to merge on alone.
-            and w_title[i] is not None
-            and w_title[i] > 0
+            and wt[i] > 0
         )
         for i in range(n)
     ]
-    out = flagged.assign(
-        sig_cut=cut, in_match=in_match, tier=None, sparse=None, gated=None
+    out = out.assign(
+        is_match=is_match, is_weak=is_weak, sig_cut=cut, in_match=in_match,
+        tier=None, sparse=None, gated=None,
     )
+    out.insert(0, "block_key", members["block_key"].iloc[0])
     if tier is None:
         return out
     trait = pd.DataFrame(
@@ -201,49 +229,48 @@ def _match_block(
 
 def build_match_context(
     pubs: DataFrame,
-    edges: DataFrame,
     config: PipelineConfig = DEFAULT_CONFIG,
 ) -> MatchContext:
-    """Score edges and derive the adaptive match graph. Single source
-    of truth for the score->match step so batch (run_pipeline),
-    checkpointed (plans.stages) and streaming (streaming.incremental)
-    stay result-identical on the same input + config.
+    """Candidate pairs, scores and the adaptive match graph from
+    ``pubs``. Single source of truth for the pubs->match step so batch
+    (run_pipeline), checkpointed (plans.stages) and streaming
+    (streaming.incremental) stay result-identical on the same input +
+    config.
 
-    Scoring and the match flags are row-local column expressions.
-    Everything after them is per block, so the flagged pairs and the
-    block's members (block_key, pub_id, sig, tier) go to one cogroup
-    kernel (``_match_block``) that resolves signature classes, cuts
-    contradicting pairs, computes the block's traits and picks the
-    match edges. ``sig`` is null when ``config.name_constraints`` is
-    off or ``pubs`` has no ``authors``, which leaves nothing to cut.
-    The kernel output is checkpointed once and is the context's
-    ``frame``.
+    The JVM builds each pub's row-local members (the channel keys of
+    ``candidate_pairs.member_columns``, the focal signature ``sig``, the
+    block's ``tier`` and, with ``config.enrich``, the ``title``); one
+    grouped kernel per block (``_match_block``) then generates the
+    block's pairs, scores and flags them, resolves signature classes,
+    cuts contradicting pairs, computes the block's traits and picks the
+    match edges. ``sig`` is null when ``config.name_constraints`` is off
+    or ``pubs`` has no ``authors``, which leaves nothing to cut. The
+    kernel output is checkpointed once and is the context's ``frame``.
     """
-    scored = fuse_scores(edges, config)
-    score_col = "score"
-    if config.enrich:
-        scored = enrich_scores(scored, pubs, config)
-        score_col = "score_enriched"
-    flagged = match_flags(scored, config, score_col)
-
     if config.name_constraints and "authors" in pubs.columns:
-        members = focal_signatures(pubs)
+        sig = focal_signature(F.col("block_key"), F.col("authors"))
     else:
-        members = pubs.select(
-            "block_key", "pub_id", F.lit(None).cast("array<string>").alias("sig")
+        sig = F.lit(None).cast("array<string>")
+    cols = [
+        *member_columns(pubs, config),
+        sig.alias("sig"),
+        name_tier(F.col("block_key")).alias("tier"),
+    ]
+    schema = EDGE_SCHEMA + ", score double"
+    if config.enrich:
+        cols.append(F.col("title"))
+        schema += (
+            ", jaccard_title double, jw_title double,"
+            " score_enriched double"
         )
-    members = members.withColumn("tier", name_tier(F.col("block_key")))
-    schema = (
-        T.StructType([T.StructField(f.name, f.dataType) for f in flagged.schema])
-        .add("sig_cut", "boolean").add("in_match", "boolean")
-        .add("tier", "string").add("sparse", "boolean").add("gated", "boolean")
+    schema += (
+        ", is_match boolean, is_weak boolean, sig_cut boolean,"
+        " in_match boolean, tier string, sparse boolean, gated boolean"
     )
     return MatchContext(
-        flagged.groupBy("block_key")
-        .cogroup(members.groupBy("block_key"))
-        .applyInPandas(
-            lambda f, m: _match_block(f, m, config, score_col), schema=schema
-        )
+        pubs.select(*cols)
+        .groupBy("block_key")
+        .applyInPandas(lambda m: _match_block(m, config), schema=schema)
         .localCheckpoint(eager=True)
     )
 
@@ -321,27 +348,24 @@ def _semantic_merge_stage(
     # number of blocks, never by rows
     if eligible.isEmpty():
         return clustered
+    from ..operators import semantic
     from ..operators.cluster_merge import semantic_cluster_merge
-    from ..operators.semantic import semantic_document_vectors
 
-    doc_vecs = semantic_document_vectors(pubs, config)
-    sigs = focal_signatures(pubs.select("block_key", "pub_id", "authors"))
+    words = semantic.semantic_word_table(pubs, config)
+    sig = focal_signature(F.col("block_key"), F.col("authors"))
     return semantic_cluster_merge(
-        clustered, doc_vecs, sigs, eligible, config
-    )
+        clustered.withColumn("sig", sig), words, eligible, config
+    ).drop("sig")
 
 
 def run_pipeline(
     repo_files: DataFrame, config: PipelineConfig = DEFAULT_CONFIG
 ) -> PipelineResult:
     pubs = parse_publications(repo_files, config)
-    edges = combined_edges(pubs, config)
-    ctx = build_match_context(pubs, edges, config)
+    ctx = build_match_context(pubs, config)
     clustered = cluster_from_context(pubs, ctx, config)
     metrics = pairwise_metrics(clustered)
-    return PipelineResult(
-        pubs, edges, ctx.scored, ctx.matches, clustered, metrics
-    )
+    return PipelineResult(pubs, ctx.scored, ctx.matches, clustered, metrics)
 
 
 def verify_content_sha(repo_files: DataFrame, clustered: DataFrame) -> bool:

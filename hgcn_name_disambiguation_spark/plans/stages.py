@@ -117,16 +117,16 @@ class StageRunner:
 
 
 def disambiguation_stages(runner: StageRunner, config=None) -> StageRunner:
-    """Wire the standard 5-stage ER pipeline onto a runner. Input key:
-    'repo_files'.
+    """Wire the standard 4-stage ER pipeline (pubs, matches, clustered,
+    metrics) onto a runner. Input key: 'repo_files'.
 
     ``stage_matches`` holds the per-block match kernel's whole output
-    (``MatchContext.frame``): every scored pair with its flags, plus one
-    trait row per block, so its lineage ``rows`` counts both. It is all
-    that ``clustered`` reads besides ``pubs``, so a run resumed at that
+    (``MatchContext.frame``), built straight from ``pubs``: every
+    candidate pair with its scores and flags, plus one trait row per
+    block, so its lineage ``rows`` counts both. It is all that
+    ``clustered`` reads besides ``pubs``, so a run resumed at that
     boundary clusters straight from the checkpoint."""
     from ..config import DEFAULT_CONFIG
-    from ..operators.candidate_pairs import combined_edges
     from ..operators.evaluate import pairwise_metrics
     from ..operators.parse import parse_publications
     from ..plans.pipeline import (
@@ -135,11 +135,7 @@ def disambiguation_stages(runner: StageRunner, config=None) -> StageRunner:
 
     cfg = config or DEFAULT_CONFIG
     runner.add("pubs", lambda d: parse_publications(d["repo_files"], cfg))
-    runner.add("edges", lambda d: combined_edges(d["pubs"], cfg))
-    runner.add(
-        "matches",
-        lambda d: build_match_context(d["pubs"], d["edges"], cfg).frame,
-    )
+    runner.add("matches", lambda d: build_match_context(d["pubs"], cfg).frame)
     runner.add(
         "clustered",
         lambda d: cluster_from_context(

@@ -23,7 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
-from ..operators.candidate_pairs import combined_edges
 from ..operators.parse import parse_publications
 from ..plans.pipeline import build_match_context, cluster_from_context
 
@@ -45,7 +44,7 @@ class IncrementalDisambiguator:
       3. a broadcast LEFT SEMI join on the touched block-keys frame
          narrows compute to touched blocks only — no collect() of
          block keys, no isin() over an unbounded list
-      4. re-run edges->score->threshold->CC for those blocks; write
+      4. re-run pairs->score->threshold->CC for those blocks; write
          back at bucket granularity: recomputed blocks' clusters
          UNION the untouched blocks' existing rows from the same
          buckets (a pruned read + broadcast anti-join, no recompute),
@@ -116,12 +115,11 @@ class IncrementalDisambiguator:
             .drop("batch_id")
         )
         scoped = store.join(F.broadcast(touched_keys), "block_key", "left_semi")
-        edges = combined_edges(scoped, self.config)
-        # Same score->match->cluster path as the batch pipeline (name
-        # constraints, ambiguity gate, enrich, cluster-refine all
+        # Same pairs->score->match->cluster path as the batch pipeline
+        # (name constraints, ambiguity gate, enrich, cluster-refine all
         # honored) so the incremental-equals-batch invariant holds for
         # EVERY config, not just the default.
-        ctx = build_match_context(scoped, edges, self.config)
+        ctx = build_match_context(scoped, self.config)
         clustered = cluster_from_context(scoped, ctx, self.config)
 
         if self._clusters_exist():

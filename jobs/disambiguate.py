@@ -10,6 +10,11 @@ North-rule operational surface: the whole job submits with
         [--checkpoint /path/to/ckpt]   # resume at last completed stage
         [--threshold 0.20] [--enrich]
 
+With --checkpoint the run is four checkpointed stages: ``pubs`` (parsed
+records), ``matches`` (one per-block kernel builds, scores and matches
+every candidate pair straight from pubs), ``clustered`` and
+``metrics``; a killed run resumes at the last one committed.
+
 The session (``session.get_spark``) sets NO master under spark-submit:
 ``--master`` owns cluster sizing (local[N] on one host; N vs 4N
 executors on a real cluster). Replaces the reference's

@@ -67,7 +67,7 @@ def test_spark_submit_checkpointed_run(spark, tmp_path):
     assert summary["master"] == "local[2]"
     assert summary["rows_clustered"] > 0
     stages = summary["stages"]
-    assert list(stages) == ["pubs", "edges", "matches", "clustered", "metrics"]
+    assert list(stages) == ["pubs", "matches", "clustered", "metrics"]
     assert stages["pubs"]["rows"] == summary["rows_clustered"]
     assert all(s["wall_sec"] > 0 for s in stages.values())
     for name in ("clustered", "metrics", "lineage", "clusters_json"):

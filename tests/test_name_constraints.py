@@ -88,6 +88,88 @@ def test_focal_signature_same_priority_prefers_longer(spark):
     assert got["p3"] == ["kenneth", "a"]
 
 
+def _window_signatures(pubs):
+    """The former window formulation of focal_signatures (explode, rank
+    per pub, join back), kept as the oracle of the row-local one."""
+    from pyspark.sql import Window
+
+    from hgcn_name_disambiguation_spark.functions.names import normalize_name
+
+    bparts = F.split(F.col("block_key"), " ")
+    toks = F.split(normalize_name(F.col("author")), " ")
+    cands = (
+        pubs.select(
+            "block_key", "pub_id",
+            F.element_at(bparts, 1).alias("_bf"),
+            F.element_at(bparts, -1).alias("_bl"),
+            F.explode("authors").alias("author"),
+        )
+        .withColumn("_toks", toks)
+        .where((F.size("_toks") >= 2) & (F.element_at("_toks", -1) == F.col("_bl")))
+        .withColumn("sig", F.slice("_toks", 1, F.size("_toks") - 1))
+        .withColumn("_g1", F.element_at("sig", 1))
+        .withColumn(
+            "_pri",
+            F.when(F.col("_g1") == F.col("_bf"), 2)
+            .when(
+                (F.substring("_g1", 1, 1) == F.substring("_bf", 1, 1))
+                & ((F.length("_g1") == 1) | (F.length("_bf") == 1)),
+                1,
+            )
+            .otherwise(0),
+        )
+    )
+    w = Window.partitionBy("block_key", "pub_id").orderBy(
+        F.desc("_pri"), F.size("sig").desc(), F.asc("_g1"), F.asc("sig")
+    )
+    best = (
+        cands.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .select("block_key", "pub_id", "sig")
+    )
+    return pubs.select("block_key", "pub_id").join(
+        best, ["block_key", "pub_id"], "left"
+    )
+
+
+def test_focal_signatures_row_local_equals_window(spark, fixture_repo_files):
+    """The row-local array expression picks the same signature per pub
+    as the window formulation on the fixture corpus and on hand-made
+    variants; candidates tied on priority, length and first token go
+    to the smaller signature."""
+    from hgcn_name_disambiguation_spark.operators.parse import (
+        parse_publications,
+    )
+
+    pubs = parse_publications(fixture_repo_files).select(
+        "block_key", "pub_id", "authors"
+    ).unionByName(_pubs(
+        spark,
+        [
+            ("john smith", "t1", ["John B. Smith", "John A. Smith"]),
+            ("john smith", "t2", ["J. Smith", "John Q. Smith", "John A. Smith"]),
+            ("john smith", "t3", ["Kenneth W. Smith", "Kenneth A. Smith"]),
+            ("john smith", "t4", []),
+            ("john smith", "t5", None),
+        ],
+    ))
+
+    def sigs(df):
+        return sorted(
+            (r.block_key, r.pub_id, None if r.sig is None else tuple(r.sig))
+            for r in df.collect()
+        )
+
+    got = sigs(focal_signatures(pubs))
+    assert got == sigs(_window_signatures(pubs))
+    assert sum(s is not None for *_, s in got) > 50
+    by_pub = {p: s for _, p, s in got}
+    assert by_pub["t1"] == ("john", "a")
+    assert by_pub["t2"] == ("john", "a")
+    assert by_pub["t3"] == ("kenneth", "a")
+    assert by_pub["t4"] is None and by_pub["t5"] is None
+
+
 def test_signature_seeds_maximality(spark):
     pubs = _pubs(
         spark,
@@ -161,36 +243,27 @@ def test_incompatible_cut_class_and_raw(spark):
 def test_pipeline_vote_cuts_ambiguous_pub(spark):
     """End to end through build_match_context: the ambiguous "John
     Smith" pub x joins the class its stronger matched edge points to
-    (John A.), so its weaker matched edge to John W. is cut and leaves
-    the match graph while its edge to John A. stays."""
+    (John A., a shared coauthor), so its weaker matched edge to John W.
+    (a shared venue) is cut and leaves the match graph while its edge
+    to John A. stays."""
     from hgcn_name_disambiguation_spark.plans.pipeline import (
         build_match_context,
     )
 
-    pubs = _pubs(
-        spark,
+    # coauthor pairs score 0.5; the venue-only w1-x pair scores 0.4,
+    # still a match
+    pubs = spark.createDataFrame(
         [
-            ("john smith", "a1", ["John A. Smith", "Alice Wong"]),
-            ("john smith", "a2", ["J. A. Smith"]),
-            ("john smith", "w1", ["John W. Smith"]),
-            ("john smith", "w2", ["John W. Smith", "Bob Lee"]),
-            ("john smith", "x", ["John Smith", "Carol King"]),
+            ("john smith", "a1", ["John A. Smith", "Alice Wong"], "v1"),
+            ("john smith", "a2", ["J. A. Smith", "Alice Wong"], None),
+            ("john smith", "w1", ["John W. Smith", "Bob Lee"], "v2"),
+            ("john smith", "w2", ["John W. Smith", "Bob Lee"], None),
+            ("john smith", "x", ["John Smith", "Alice Wong"], "v2"),
         ],
-    )
-    coauthor = lambda a, b, w: (  # noqa: E731
-        "john smith", a, b, w, 0.0, 0.0, 0.0, 0.0
-    )
-    edges = spark.createDataFrame(
-        [
-            coauthor("a1", "x", 1.0),    # score 0.5
-            coauthor("w1", "x", 0.5),    # score 0.25, still a match
-            coauthor("a1", "a2", 1.0),
-            coauthor("w1", "w2", 1.0),
-        ],
-        "block_key string, id_a string, id_b string, w_coauthor double, "
-        "w_title double, title_cos double, w_venue double, w_org double",
-    )
-    ctx = build_match_context(pubs, edges, DEFAULT_CONFIG)
+        "block_key string, pub_id string, authors array<string>, "
+        "venue string",
+    ).withColumn("title_toks", F.array().cast("array<string>"))
+    ctx = build_match_context(pubs, DEFAULT_CONFIG)
     flags = {
         (r.id_a, r.id_b): (r.is_match, r.sig_cut)
         for r in ctx.scored.collect()

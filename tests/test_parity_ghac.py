@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from hgcn_name_disambiguation_spark.config import PipelineConfig
 from hgcn_name_disambiguation_spark.fixtures.generator import repo_files_dataframe
-from hgcn_name_disambiguation_spark.operators.candidate_pairs import combined_edges
 from hgcn_name_disambiguation_spark.operators.evaluate import pairwise_metrics
 from hgcn_name_disambiguation_spark.operators.parity import (
     _average_linkage,
@@ -18,7 +17,7 @@ from hgcn_name_disambiguation_spark.operators.parity import (
     ghac_clusters,
 )
 from hgcn_name_disambiguation_spark.operators.parse import parse_publications
-from hgcn_name_disambiguation_spark.operators.scoring import fuse_scores
+from hgcn_name_disambiguation_spark.plans.pipeline import build_match_context
 
 
 # ---------- numpy kernels ----------
@@ -68,7 +67,10 @@ def tiny_pipeline(spark):
         spark, seed=11, blocks=3, pubs_per_block=25, skew_factor=2
     )
     pubs = parse_publications(rf, cfg)
-    scored = fuse_scores(combined_edges(pubs, cfg), cfg)
+    scored = build_match_context(pubs, cfg).scored.select(
+        "block_key", "id_a", "id_b", "w_coauthor", "w_title", "title_cos",
+        "w_venue", "w_org", "score",
+    )
     return cfg, pubs, scored
 
 

@@ -55,29 +55,30 @@ def test_ambiguity_gate_reads_strong_components(spark):
     )
 
     cfg = replace(DEFAULT_CONFIG, amb_gate_min_n=4)
+
+    def pub(bk, p, coauthors=(), venue=None):
+        return (bk, p, list(coauthors), venue)
+
     pubs = spark.createDataFrame(
-        [("j smith", f"p{i}") for i in range(1, 9)]
-        + [("j jones", f"p{i}") for i in range(1, 6)],
-        ["block_key", "pub_id"],
-    )
-    coauthor = lambda bk, a, b: (bk, a, b, 1.0, 0.0, 0.0, 0.0, 0.0)  # noqa: E731
-    venue = lambda bk, a, b: (bk, a, b, 0.0, 0.0, 0.0, 1.0, 0.0)  # noqa: E731
-    edges = spark.createDataFrame(
         [
-            # j smith: strong components {p1,p2} {p3,p4}, largest 2/8
-            coauthor("j smith", "p1", "p2"),
-            coauthor("j smith", "p3", "p4"),
-            venue("j smith", "p2", "p3"),
-            # j jones: strong chain p1..p4, largest 4/5
-            coauthor("j jones", "p1", "p2"),
-            coauthor("j jones", "p2", "p3"),
-            coauthor("j jones", "p3", "p4"),
-            venue("j jones", "p4", "p5"),
+            # j smith: strong (coauthor) components {p1,p2} {p3,p4},
+            # largest 2/8; p2-p3 share only a venue
+            pub("j smith", "p1", ["A One"]),
+            pub("j smith", "p2", ["A One"], "v"),
+            pub("j smith", "p3", ["B Two"], "v"),
+            pub("j smith", "p4", ["B Two"]),
+            *[pub("j smith", f"p{i}") for i in range(5, 9)],
+            # j jones: strong chain p1..p4, largest 4/5; p4-p5 venue
+            pub("j jones", "p1", ["C Three"]),
+            pub("j jones", "p2", ["C Three", "D Four"]),
+            pub("j jones", "p3", ["D Four", "E Five"]),
+            pub("j jones", "p4", ["E Five"], "w"),
+            pub("j jones", "p5", [], "w"),
         ],
-        "block_key string, id_a string, id_b string, w_coauthor double, "
-        "w_title double, title_cos double, w_venue double, w_org double",
-    )
-    ctx = build_match_context(pubs, edges, cfg)
+        "block_key string, pub_id string, authors array<string>, "
+        "venue string",
+    ).withColumn("title_toks", F.array().cast("array<string>"))
+    ctx = build_match_context(pubs, cfg)
     gated = {r.block_key: r.gated for r in ctx.traits.collect()}
     assert gated == {"j smith": True, "j jones": False}
     # the gated block's venue-only bridge is dropped, the open one kept

@@ -9,6 +9,7 @@ so hundreds of generated examples run in milliseconds.
 
 from __future__ import annotations
 
+import dataclasses
 import math
 import random
 
@@ -34,6 +35,7 @@ from hgcn_name_disambiguation_spark.operators.name_constraints import (
     sig_compatible,
     signature_seeds,
 )
+from hgcn_name_disambiguation_spark.plans.pipeline import _match_block
 
 
 @given(st.integers(min_value=0, max_value=_M64))
@@ -567,3 +569,121 @@ def test_assign_kernel_equals_oracle_in_any_row_order(inputs, rnd):
         threshold,
     )
     assert shuffled == (scores, best)
+
+
+# one match-kernel block: pubs (coauthor keys, venue, org, title tokens)
+# over tiny alphabets, so shared keys, hot keys (small caps), null
+# venues and orgs, empty titles and score ties are all common
+_member = st.tuples(
+    st.lists(st.sampled_from(["ann", "bob", "cy"]), max_size=3, unique=True),
+    st.sampled_from([None, "v1", "v2"]),
+    st.sampled_from([None, "o1", "o2"]),
+    st.lists(st.sampled_from(["x", "y", "z", "w"]), max_size=3, unique=True),
+)
+_kernel_config = st.builds(
+    lambda co, ve, og, tok, k, mto, mco: dataclasses.replace(
+        DEFAULT_CONFIG,
+        max_coauthor_df_per_block=co,
+        max_venue_df_per_block=ve,
+        max_org_df_per_block=og,
+        max_token_df_per_block=tok,
+        max_pairs_per_block=k,
+        min_title_overlap=mto,
+        min_title_cos_overlap=mco,
+    ),
+    *[st.integers(min_value=1, max_value=8)] * 4,
+    st.sampled_from([0, 0, 1, 3]),
+    st.sampled_from([1, 2]),
+    st.sampled_from([1, 2]),
+)
+
+
+def _pairs_oracle(members, cfg):
+    """Every pair of the block compared directly (O(n^2)): {(a, b):
+    (w_coauthor, w_title, title_cos, w_venue, w_org, is_match,
+    is_weak)}, after the per-block top-k."""
+    n = len(members)
+
+    def df(col, key):
+        return sum(key == v or (isinstance(v, list) and key in v)
+                   for v in (m[col] for m in members.values()))
+
+    idf = {t: math.log((n + 1.0) / df(3, t))
+           for m in members.values() for t in m[3]}
+
+    def live(col, cap):
+        return lambda key: key is not None and df(col, key) <= cap
+
+    tok_ok = live(3, cfg.max_token_df_per_block)
+    norm = {p: math.sqrt(math.fsum(idf[t] * idf[t] for t in m[3] if tok_ok(t)))
+            for p, m in members.items()}
+    out = {}
+    ids = sorted(members)
+    for i, a in enumerate(ids):
+        for b in ids[i + 1:]:
+            ma, mb = members[a], members[b]
+            co = len([k for k in set(ma[0]) & set(mb[0])
+                      if live(0, cfg.max_coauthor_df_per_block)(k)])
+            ve = ma[1] == mb[1] and live(1, cfg.max_venue_df_per_block)(ma[1])
+            og = ma[2] == mb[2] and live(2, cfg.max_org_df_per_block)(ma[2])
+            shared = [t for t in set(ma[3]) & set(mb[3]) if tok_ok(t)]
+            titled = len(shared) >= max(1, cfg.min_title_cos_overlap)
+            if not (co or ve or og or titled):
+                continue
+            w_title = float(len(shared)) if (
+                titled and len(shared) >= cfg.min_title_overlap
+            ) else 0.0
+            cos = (math.fsum(idf[t] * idf[t] for t in shared) / (norm[a] * norm[b])
+                   if titled else 0.0)
+            score = (5.0 * min(1, co) + cos + 4.0 * ve) / 10.0 + 4.0 * og / 10.0
+            strong = cos >= cfg.strong_title_cos and w_title > 0
+            out[(a, b)] = (
+                float(co), w_title, cos, float(ve), float(og),
+                score > cfg.match_threshold or strong,
+                co == 0 and not og and cos < cfg.strong_title_cos,
+                score,
+            )
+    if cfg.max_pairs_per_block:
+        top = sorted(out, key=lambda p: (-out[p][-1], p))[: cfg.max_pairs_per_block]
+        out = {p: out[p] for p in top}
+    return {p: v[:-1] for p, v in out.items()}
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.lists(_member, min_size=1, max_size=8),
+    _kernel_config,
+    st.randoms(use_true_random=False),
+)
+def test_match_kernel_pairs_equal_brute_force(rows, cfg, rnd):
+    """The match kernel's candidate pairs, weights and flags equal a
+    brute-force comparison of every pair of the block, in any row
+    order: the same pair set and flags, weights within 1e-12, one trait
+    row."""
+    members = {f"p{i}": r for i, r in enumerate(rows)}
+    order = list(members)
+    rnd.shuffle(order)
+    pdf = pd.DataFrame({
+        "block_key": ["ann lee"] * len(order),
+        "pub_id": order,
+        "auth": [members[p][0] for p in order],
+        "venue": [members[p][1] for p in order],
+        "org": [members[p][2] for p in order],
+        "title_toks": [members[p][3] for p in order],
+        "sig": [None] * len(order),
+        "tier": ["rare"] * len(order),
+    })
+    out = _match_block(pdf, cfg)
+    want = _pairs_oracle(members, cfg)
+    pairs = out[out["id_a"].notna()]
+    got = {
+        (r.id_a, r.id_b): (r.w_coauthor, r.w_title, r.title_cos, r.w_venue,
+                           r.w_org, r.is_match, r.is_weak)
+        for r in pairs.itertuples(index=False)
+    }
+    assert len(got) == len(pairs)
+    assert got.keys() == want.keys()
+    for p, g in got.items():
+        assert g[5:] == want[p][5:], p
+        assert g[:5] == pytest.approx(want[p][:5], abs=1e-12, rel=0), p
+    assert out["id_a"].isna().sum() == 1

@@ -97,6 +97,35 @@ def test_document_vectors_all_oov_doc_absent(spark):
     assert {r.pub_id for r in rows} == {"p1"}
 
 
+def test_document_vectors_pub_repeated_across_blocks(spark):
+    """A paper filed under two name blocks with the same pub_id is two
+    documents: both rows get a vector, and df counts both. idf over
+    N=4: tok1 df 3 -> ln(4/4) = 0, tok2 df 2 -> ln(4/3), tok3 df 1."""
+    pubs = _pubs(
+        spark,
+        [
+            ("a x", "p1", ["tok1", "tok2"], None, None),
+            ("b y", "p1", ["tok1", "tok2"], None, None),
+            ("a x", "p2", ["tok1"], None, None),
+            ("b y", "p3", ["tok3"], None, None),
+        ],
+    )
+    words = spark.createDataFrame(
+        [("tok1", [1.0, 0.0]), ("tok2", [0.0, 1.0]), ("tok3", [1.0, 1.0])],
+        ["word", "vector"],
+    )
+    out = {
+        (r.block_key, r.pub_id): r.vec
+        for r in document_vectors(pubs, words).collect()
+    }
+    assert set(out) == {("a x", "p1"), ("b y", "p1"), ("a x", "p2"), ("b y", "p3")}
+    assert out[("a x", "p1")] == pytest.approx([0.0, 1.0])
+    assert out[("b y", "p1")] == pytest.approx([0.0, 1.0])
+    # p2's only token has idf 0: its weights do not sum above 0
+    assert out[("a x", "p2")] is None
+    assert out[("b y", "p3")] == pytest.approx([1.0, 1.0])
+
+
 def test_train_word_vectors_schema_and_min_count(spark):
     pubs = _pubs(
         spark,

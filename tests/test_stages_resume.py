@@ -11,7 +11,7 @@ from hgcn_name_disambiguation_spark.plans.stages import (
     disambiguation_stages,
 )
 
-STAGES = ["pubs", "edges", "matches", "clustered", "metrics"]
+STAGES = ["pubs", "matches", "clustered", "metrics"]
 
 
 def test_resume_skips_completed_stages(spark, fixture_repo_files, tmp_path):
@@ -19,20 +19,20 @@ def test_resume_skips_completed_stages(spark, fixture_repo_files, tmp_path):
 
     r1 = disambiguation_stages(StageRunner(spark, wd, run_id="r1"))
     out1 = r1.run({"repo_files": fixture_repo_files})
-    assert r1.executed == ["pubs", "edges", "matches", "clustered", "metrics"]
+    assert r1.executed == STAGES
     assert r1.skipped == []
     sig1 = sorted(
         (x.block_key, x.pub_id, x.cluster_id)
         for x in out1["clustered"].collect()
     )
 
-    # simulate a kill AFTER 'edges': wipe later stage checkpoints
+    # simulate a kill AFTER 'pubs': wipe later stage checkpoints
     for st in ["matches", "clustered", "metrics"]:
         shutil.rmtree(f"{wd}/stage_{st}")
 
     r2 = disambiguation_stages(StageRunner(spark, wd, run_id="r2"))
     out2 = r2.run({"repo_files": fixture_repo_files})
-    assert r2.skipped == ["pubs", "edges"]
+    assert r2.skipped == ["pubs"]
     assert r2.executed == ["matches", "clustered", "metrics"]
     sig2 = sorted(
         (x.block_key, x.pub_id, x.cluster_id)
@@ -55,9 +55,9 @@ def test_uncommitted_stage_reruns(spark, fixture_repo_files, tmp_path):
     assert "matches" in r2.executed and "pubs" in r2.skipped
 
 
-# Spark jobs a staged run on the fixture launches, as measured: five
+# Spark jobs a staged run on the fixture launches, as measured: four
 # stage writes, one lineage append and the stages' own work.
-STAGED_RUN_JOBS = 27
+STAGED_RUN_JOBS = 15
 
 
 @pytest.fixture(scope="module")
@@ -132,11 +132,11 @@ def test_resume_from_uri_workdir(spark, fixture_repo_files, tmp_path):
     wd = (tmp_path / "run4").as_uri()
     r1 = disambiguation_stages(StageRunner(spark, wd))
     r1.run({"repo_files": fixture_repo_files})
-    assert r1.executed == ["pubs", "edges", "matches", "clustered", "metrics"]
+    assert r1.executed == STAGES
 
     r2 = disambiguation_stages(StageRunner(spark, wd))
     r2.run({"repo_files": fixture_repo_files})
-    assert r2.skipped == ["pubs", "edges", "matches", "clustered", "metrics"]
+    assert r2.skipped == STAGES
     assert r2.executed == []
 
 
@@ -157,7 +157,7 @@ def test_resume_from_matches_boundary(spark, fixture_repo_files, tmp_path):
 
     r2 = disambiguation_stages(StageRunner(spark, wd, run_id="r2"))
     out2 = r2.run({"repo_files": fixture_repo_files})
-    assert r2.skipped == ["pubs", "edges", "matches"]
+    assert r2.skipped == ["pubs", "matches"]
     assert r2.executed == ["clustered", "metrics"]
     assert sorted((x.run_id, x.stage) for x in r2.lineage().collect()) == sorted(
         [("r1", st) for st in STAGES] + [("r2", "clustered"), ("r2", "metrics")]
