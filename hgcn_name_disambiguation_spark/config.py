@@ -94,16 +94,6 @@ class PipelineConfig:
     # 0.8 requires most of both titles' idf mass to agree — generic
     # (high-df/low-idf) token collisions top out well below it.
     strong_title_cos: float = 0.80
-    # corroboration gates, both OFF by default. Measured on the
-    # reference's 110 labeled AMiner blocks: single-coauthor-only
-    # pairs are 54% true and venue-only pairs 81% true — yet excluding
-    # them costs far more recall than it buys precision (macro
-    # P 0.89->0.90 for R 0.74->0.61; both gates: P 0.96, R 0.52)
-    # because transitive closure recovers most false merges through
-    # other paths anyway. Enable for precision-critical dedup where a
-    # false merge is costlier than a split entity.
-    exclude_single_coauthor_only: bool = False
-    exclude_venue_only: bool = False
     use_stemming: bool = True        # name_disambiguation.py:847-848
     # Jaro-Winkler/Jaccard enrichment pass (scoring.enrich_scores):
     # re-scores pairs with string-sim features and thresholds on
@@ -158,17 +148,6 @@ class PipelineConfig:
     weak_bridge_gate: bool = True
     amb_gate_bigfrac: float = 0.30
     amb_gate_min_n: int = 50
-    # In 'rare' blocks the prior is inverted: the key is nearly unique,
-    # so modest title similarity is reliable evidence. Title-only pairs
-    # with IDF-cosine >= rare_rescue_cos match in rare blocks (the
-    # global strong_title_cos bar stays for other tiers). Only applies
-    # to evidence-SPARSE blocks (see refine_richness_max). OFF (1.0)
-    # by default since round 5: the semantic cluster merge supersedes
-    # it — measured on the 114 labeled blocks, rescue-off is +0.49
-    # macro F1 with ZERO blocks regressing (michael wagner +0.28,
-    # alok gupta +0.26), and rescue hurts even with semantic_merge
-    # off (0.8181 vs 0.8154). Set < 1.0 to re-enable.
-    rare_rescue_cos: float = 1.0
 
     # --- cluster-level agglomeration (clustering.refine_clusters) ---
     # rounds of cluster-pair merging on aggregated (incl. sub-threshold)
@@ -176,9 +155,9 @@ class PipelineConfig:
     # thresholds per ambiguity tier (refine_tau_*/refine_min_edges_*).
     # ON by default since round 3, guarded by TWO auto-calibration
     # gates measured on both corpora:
-    #   1. evidence-richness gate: refine (and the rare rescue) only
-    #      run in blocks whose mean above-threshold match score is
-    #      below refine_richness_max. Dense-evidence corpora (the
+    #   1. evidence-richness gate: refine only runs in blocks whose
+    #      mean above-threshold match score is below
+    #      refine_richness_max. Dense-evidence corpora (the
     #      synthetic fixtures: mean matched score 0.63-0.70) have
     #      complete evidence, so sub-threshold pairs there are true
     #      negatives and refine would over-merge (P 1.0 -> 0.48

@@ -26,14 +26,15 @@ Per new pub the argmax cluster wins (ties to the GREATEST cluster_id)
 iff fused >= ``config.assign_threshold``; else cluster_id and fused
 are NULL (a new entity, pending the next full resolution).
 
-Scale notes: the snapshot is indexed once, JVM-side, into one profile
-frame partitioned by block_key (``cluster_profiles``). Authors/venues
-in more than ``assign_hot_key_clusters`` clusters of a block are
-dropped from it (no identity signal, like the hot-token cap), bounding
-each new pub's candidate fan-out. Blocks never interact, so a batch
-narrows the profile to its blocks with a broadcast semi-join and runs
-one cogroup kernel per touched block that scores and picks: one
-shuffle of the new pubs, work that scales with the batch.
+Scale notes: the snapshot side is its own rows, projected and
+partitioned by block_key once (``cluster_profiles``). Each block's
+kernel indexes its snapshot rows in memory: authors/venues in more than
+``assign_hot_key_clusters`` clusters of the block are dropped (no
+identity signal, like the hot-token cap), bounding each new pub's
+candidate fan-out. Blocks never interact, so a batch narrows the
+snapshot to its blocks with a broadcast semi-join and runs one cogroup
+kernel per touched block that indexes, scores and picks: one shuffle of
+the new pubs, and no Spark job spent on the index.
 """
 
 from __future__ import annotations
@@ -45,116 +46,69 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
-
-
-def _hot_capped(index: DataFrame, key: str, cap: int) -> DataFrame:
-    """Drop (block, key) values present in more than ``cap`` distinct
-    clusters — no identity signal, unbounded fan-out."""
-    counts = index.groupBy("block_key", key).agg(
-        F.count(F.lit(1)).alias("_n_clusters")
-    )
-    return (
-        index.join(counts, ["block_key", key])
-        .where(F.col("_n_clusters") <= cap)
-        .drop("_n_clusters")
-    )
+from . import scoring
 
 
 def cluster_profiles(
     clustered: DataFrame, config: PipelineConfig = DEFAULT_CONFIG
 ) -> dict[str, DataFrame]:
     """The snapshot side, built once per snapshot and reused across
-    micro-batches: ``{"profile": (block_key, kind, key, cluster_id, w)}``,
-    hash-partitioned by block_key, with one row per
-      - ``size``: the block's snapshot row count n_block, in ``w``;
-      - ``author`` / ``venue``: a distinct (key, cluster_id) pair that
-        survives the hot-key cap;
-      - ``token``: a distinct (tok, cluster_id) pair of a non-hot token,
-        its idf in ``w`` (``token_idf_index``'s ln((n_block+1)/df), df
-        over distinct snapshot pub ids);
-      - ``hot``: a token with df > ``max_token_df_per_block`` — dropped
-        from both sides, which an unseen token is not;
-      - ``norm``: a cluster's token norm sqrt(sum idf²) over its
-        distinct non-hot tokens, in ``w``."""
-    cap = config.assign_hot_key_clusters
-    authors = _hot_capped(clustered.select(
-        "block_key", F.explode("authors").alias("author"), "cluster_id"
-    ).distinct(), "author", cap)
-    null_venue = F.lower(F.coalesce(F.col("venue"), F.lit(""))).isin(
-        *config.venue_null_values
-    )
-    venues = _hot_capped(clustered.where(~null_venue).select(
-        "block_key", "venue", "cluster_id"
-    ).distinct(), "venue", cap)
-    block_sizes = clustered.groupBy("block_key").agg(
-        F.count(F.lit(1)).alias("n_block")
-    )
-    idx = clustered.select(
-        "block_key", "pub_id", "cluster_id",
-        F.explode("title_toks").alias("tok"),
-    ).where(F.col("tok").isNotNull())
-    block_idf = (
-        idx.groupBy("block_key", "tok")
-        .agg(F.countDistinct("pub_id").alias("df"))
-        .join(block_sizes, "block_key")
-        .withColumn("idf", F.log((F.col("n_block") + 1.0) / F.col("df")))
-    )
-    hot = F.col("df") > config.max_token_df_per_block
-    tokens = (
-        idx.select("block_key", "tok", "cluster_id")
-        .distinct()
-        .join(block_idf.where(~hot).select("block_key", "tok", "idf"),
-              ["block_key", "tok"])
-    )
-    token_norms = tokens.groupBy("block_key", "cluster_id").agg(
-        F.sqrt(F.sum(F.col("idf") * F.col("idf"))).alias("c_norm")
-    )
-    cid_type = clustered.schema["cluster_id"].dataType
-
-    def rows(df, kind, key=None, cid=None, w=None):
-        cols = [(key, "string", "key"), (cid, cid_type, "cluster_id"),
-                (w, "double", "w")]
-        return df.select("block_key", F.lit(kind).alias("kind"), *[
-            (F.col(c) if c else F.lit(None)).cast(t).alias(name)
-            for c, t, name in cols
-        ])
-
-    profile = (
-        rows(block_sizes, "size", w="n_block")
-        .unionByName(rows(authors, "author", "author", "cluster_id"))
-        .unionByName(rows(venues, "venue", "venue", "cluster_id"))
-        .unionByName(rows(tokens, "token", "tok", "cluster_id", "idf"))
-        .unionByName(rows(block_idf.where(hot), "hot", "tok"))
-        .unionByName(rows(token_norms, "norm", cid="cluster_id", w="c_norm"))
-        .repartition("block_key")
-    )
-    return {"profile": profile}
+    micro-batches: ``{"profile": (block_key, pub_id, cluster_id,
+    authors, venue, title_toks)}``, the snapshot's own rows
+    hash-partitioned by block_key. The per-block kernel builds the
+    block's index from them (``_score_block``)."""
+    return {"profile": clustered.select(
+        "block_key", "pub_id", "cluster_id", "authors", "venue", "title_toks"
+    ).repartition("block_key")}
 
 
 def _score_block(
-    new: pd.DataFrame, prof: pd.DataFrame, weights: tuple[float, ...]
+    new: pd.DataFrame, prof: pd.DataFrame, config: PipelineConfig
 ) -> list[tuple[object, object, dict]]:
     """One block's scoring: new pubs (pub_id, authors, venue,
-    title_toks) against the block's profile rows ->
+    title_toks) against the block's snapshot rows ->
     [(block_key, pub_id, {cluster_id: (a, t, v, fused)})], one per distinct
     new pub, holding every cluster that shares a coauthor, a venue or a
-    non-hot token with it."""
-    w_a, w_t, w_v, norm = weights
-    n_block, hot, idf, c_norm = 0.0, set(), {}, {}
+    non-hot token with it.
+
+    The block's index: n_block is its snapshot row count; an author or
+    venue in more than ``assign_hot_key_clusters`` distinct clusters is
+    dropped, and a venue in ``venue_null_values`` never counts; a
+    token's df counts distinct snapshot pub ids, its idf is
+    ln((n_block+1)/df), and with df > ``max_token_df_per_block`` it is
+    hot, dropped from both sides (an unseen token is not); a cluster's
+    norm is sqrt(sum idf²) over its distinct non-hot tokens."""
+    nulls = set(config.venue_null_values)
     index = {k: defaultdict(set) for k in ("author", "venue", "token")}
-    for kind, key, cid, w in zip(
-        prof["kind"], prof["key"], prof["cluster_id"], prof["w"]
+    holders: dict = defaultdict(set)
+    for pid, cid, authors, venue, toks in zip(
+        prof["pub_id"], prof["cluster_id"], prof["authors"], prof["venue"],
+        prof["title_toks"],
     ):
-        if kind == "size":
-            n_block = w
-        elif kind == "hot":
-            hot.add(key)
-        elif kind == "norm":
-            c_norm[cid] = w
-        else:
-            index[kind][key].add(cid)
-            if kind == "token":
-                idf[key] = w
+        for x in authors if authors is not None else ():
+            if x is not None:
+                index["author"][x].add(cid)
+        if venue is not None and venue.lower() not in nulls:
+            index["venue"][venue].add(cid)
+        for x in toks if toks is not None else ():
+            if x is not None:
+                index["token"][x].add(cid)
+                holders[x].add(pid)
+    for kind in ("author", "venue"):
+        index[kind] = {k: cs for k, cs in index[kind].items()
+                       if len(cs) <= config.assign_hot_key_clusters}
+    n_block = len(prof)
+    hot = {x for x, p in holders.items()
+           if len(p) > config.max_token_df_per_block}
+    idf = {x: math.log((n_block + 1.0) / len(p))
+           for x, p in holders.items() if x not in hot}
+    sq: dict = defaultdict(list)
+    for x in idf:
+        for c in index["token"][x]:
+            sq[c].append(idf[x] ** 2)
+    # fsum: equal idf multisets give bit-equal norms and scores, in any
+    # row order (exact ties)
+    c_norm = {c: math.sqrt(math.fsum(v)) for c, v in sq.items()}
     unseen = math.log(n_block + 1.0)
     pubs: dict[object, tuple[set, set, set]] = {}
     for pid, authors, venue, toks in zip(
@@ -168,7 +122,6 @@ def _score_block(
     for pid, (authors, venues, toks) in pubs.items():
         a_hit = set().union(*(index["author"].get(x, ()) for x in authors))
         v_hit = set().union(*(index["venue"].get(x, ()) for x in venues))
-        # fsum: equal idf multisets give bit-equal scores (exact ties)
         p_norm = math.sqrt(math.fsum(idf.get(x, unseen) ** 2 for x in toks))
         shared: dict = defaultdict(list)
         for x in toks:
@@ -179,29 +132,30 @@ def _score_block(
             a, v = float(c in a_hit), float(c in v_hit)
             t = (math.fsum(shared[c]) / (p_norm * c_norm[c])
                  if c in shared and p_norm > 0 and c_norm[c] > 0 else 0.0)
-            cands[c] = (a, t, v, (w_a * a + w_t * t + w_v * v) / norm)
+            cands[c] = (a, t, v, scoring.fuse_scores(a, t, v, 0.0, config))
         out.append((new["block_key"].iloc[0], pid, cands))
     return out
 
 
-def _score_kernel(new, prof, weights, threshold):
+def _score_kernel(new, prof, config):
     """Cogroup kernel: every candidate (block_key, pub_id, cluster_id,
-    a, t, v, fused) of one block; ``threshold`` is not applied."""
+    a, t, v, fused) of one block; ``assign_threshold`` is not applied."""
     return pd.DataFrame(
-        [(bk, pid, c, *s) for bk, pid, cands in _score_block(new, prof, weights)
+        [(bk, pid, c, *s) for bk, pid, cands in _score_block(new, prof, config)
          for c, s in cands.items()],
         columns=["block_key", "pub_id", "cluster_id", "a", "t", "v", "fused"],
     )
 
 
-def _assign_kernel(new, prof, weights, threshold):
+def _assign_kernel(new, prof, config):
     """Cogroup kernel: one (block_key, pub_id, cluster_id, fused) row
     per new pub of one block — the best (fused, cluster_id) that clears
-    ``threshold`` (ties to the greatest cluster_id), else NULLs."""
+    ``assign_threshold`` (ties to the greatest cluster_id), else NULLs."""
     rows = []
-    for bk, pid, cands in _score_block(new, prof, weights):
+    for bk, pid, cands in _score_block(new, prof, config):
         fused, cid = max(
-            ((s[3], c) for c, s in cands.items() if s[3] >= threshold),
+            ((s[3], c) for c, s in cands.items()
+             if s[3] >= config.assign_threshold),
             default=(None, None),
         )
         rows.append((bk, pid, cid, fused))
@@ -213,22 +167,21 @@ def _assign_kernel(new, prof, weights, threshold):
 def _per_block(new_pubs, profiles, config, kernel, cols) -> DataFrame:
     """Run ``kernel`` over each block the batch touches: the profile is
     narrowed to those blocks by a broadcast semi-join (no shuffle: it is
-    already partitioned by block_key), the new pubs are shuffled once."""
-    new = new_pubs.select("block_key", "pub_id", "authors", "venue",
-                          "title_toks")
+    already partitioned by block_key), the new pubs are shuffled once.
+    The new side's columns are re-aliased, so new pubs and a snapshot
+    drawn from the same frame do not read as an ambiguous self-join."""
+    new = new_pubs.select(*[F.col(c).alias(c) for c in (
+        "block_key", "pub_id", "authors", "venue", "title_toks")])
     prof = profiles["profile"].join(
         F.broadcast(new.select("block_key")), "block_key", "left_semi"
     )
     types = {f.name: f.dataType.simpleString()
              for f in [*new.schema, prof.schema["cluster_id"]]}
-    weights = (config.w_coauthor, config.w_title, config.w_venue,
-               config.weight_norm)
-    threshold = config.assign_threshold
     return (
         new.groupBy("block_key")
         .cogroup(prof.groupBy("block_key"))
         .applyInPandas(
-            lambda n, p: kernel(n, p, weights, threshold),
+            lambda n, p: kernel(n, p, config),
             schema=", ".join(f"{c} {types.get(c, 'double')}" for c in cols),
         )
     )

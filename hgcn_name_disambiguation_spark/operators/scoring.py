@@ -90,7 +90,6 @@ def match_flags(
     w_coauthor: float,
     w_title: float,
     title_cos: float,
-    w_venue: float,
     w_org: float,
     config: PipelineConfig = DEFAULT_CONFIG,
 ) -> tuple[bool, bool]:
@@ -107,30 +106,13 @@ def match_flags(
     shared token can dominate two short titles' idf mass and fake a
     strong cosine — one word is never enough to merge on alone.
 
-    Corroboration gates (config.exclude_single_coauthor_only /
-    exclude_venue_only): evidence signatures whose measured precision
-    on the reference's labeled corpus is too low for transitive
-    closure (one false edge merges two whole entities) are excluded
-    even when the fused score clears tau — see config for the
-    measured numbers.
-
     ``is_weak``: the pair's evidence is venue-only in fused terms — no
     coauthor, no org, and title cosine below the strong bar. Weak
     matches clear tau only through the venue term; under the ambiguity
     gate they corroborate but may not bridge.
     """
-    cond = score > config.match_threshold
-    no_title = title_cos <= 0
-    if config.exclude_single_coauthor_only:
-        cond = cond and not (
-            w_coauthor == 1 and w_venue <= 0 and w_org <= 0 and no_title
-        )
-    if config.exclude_venue_only:
-        cond = cond and not (
-            w_venue > 0 and w_coauthor <= 0 and w_org <= 0 and no_title
-        )
     strong = title_cos >= config.strong_title_cos and w_title > 0
     weak = (
         w_coauthor <= 0 and w_org <= 0 and title_cos < config.strong_title_cos
     )
-    return cond or strong, weak
+    return score > config.match_threshold or strong, weak

@@ -20,8 +20,7 @@ numbers):
    contradict (operators.name_constraints),
 2. per-block ambiguity tiers (functions.names.name_tier) gate how
    weak (venue-only) evidence may act: in fragmented common-name
-   blocks it corroborates but cannot bridge components; in rare-name
-   blocks modest title similarity is accepted as a match,
+   blocks it corroborates but cannot bridge components,
 3. an evidence-richness gate turns the recall levers OFF in
    dense-evidence corpora where they would over-merge,
 4. clustering is connected components of the match graph, one
@@ -93,8 +92,8 @@ class MatchContext:
     @property
     def matches(self) -> DataFrame:
         """The match edges (block_key, id_a, id_b, score) after the
-        constraints, the ambiguity gate and the rare-tier rescue, with
-        the score the match threshold read."""
+        constraints and the ambiguity gate, with the score the match
+        threshold read."""
         cols = self.frame.columns
         score = "score_enriched" if "score_enriched" in cols else "score"
         return (
@@ -155,9 +154,7 @@ def _match_block(
         )
         score = out["score_enriched"].tolist()
     flags = [
-        scoring.match_flags(
-            score[i], co[i], wt[i], tc[i], ve[i], og[i], config
-        )
+        scoring.match_flags(score[i], co[i], wt[i], tc[i], og[i], config)
         for i in range(n)
     ]
     is_match = [f[0] for f in flags]
@@ -196,21 +193,8 @@ def _match_block(
             max(sizes.values()) / len(members) < config.amb_gate_bigfrac
             and len(members) >= config.amb_gate_min_n
         )
-    rescue = config.rare_rescue_cos < 1.0 and tier == "rare" and sparse
     in_match = [
-        strong[i]
-        or (keep[i] and is_weak[i] and not gated)
-        or (
-            rescue
-            and not cut[i]
-            and not is_match[i]
-            and tc[i] >= config.rare_rescue_cos
-            # >= min_title_overlap shared tokens (w_title zeroed below):
-            # a single shared token faking a modest cosine is exactly
-            # the false-merge channel measured on xiaoyan li-type
-            # blocks — one word is never enough to merge on alone.
-            and wt[i] > 0
-        )
+        strong[i] or (keep[i] and is_weak[i] and not gated)
         for i in range(n)
     ]
     out = out.assign(

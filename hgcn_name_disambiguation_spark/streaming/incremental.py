@@ -160,11 +160,12 @@ class StreamingClusterAssigner:
     bounded-latency complement to :class:`IncrementalDisambiguator`
     (which re-resolves touched blocks and is the heavier, exact path).
 
-    The snapshot-side profile is built ONCE at construction and
-    persisted; each micro-batch pays a broadcast semi-join to its
-    blocks and one per-block cogroup kernel (``assign_with_profiles``,
-    as ``assign_to_clusters`` runs it: batch and stream agree BY
-    CONSTRUCTION). foreachBatch, because a cogroup does not run on a
+    The snapshot-side profile (the snapshot's own rows, partitioned by
+    block) is built ONCE at construction and persisted; each
+    micro-batch pays a broadcast semi-join to its blocks and one
+    per-block cogroup kernel that indexes the block's rows, scores and
+    picks (``assign_with_profiles``, as ``assign_to_clusters`` runs it:
+    batch and stream agree BY CONSTRUCTION). foreachBatch, because a cogroup does not run on a
     streaming DataFrame. Exactly-once on ``batch_id``: each micro-batch
     overwrites its own ``assignments/batch_id=<id>``, so a replayed
     call replaces that batch's rows.

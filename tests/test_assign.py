@@ -1,7 +1,8 @@
 """Incremental cluster assignment (operators/assign.py +
 streaming.StreamingClusterAssigner): hand-computed channel math,
 threshold/NULL semantics, hot-key capping, edge cases, fixture-accuracy,
-the batch == stream contract and exactly-once replay."""
+bit-exact scores under any partitioning, the batch == stream contract,
+exactly-once replay and the assigner's Spark job counts."""
 
 from __future__ import annotations
 
@@ -254,11 +255,20 @@ def test_streaming_matches_batch(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_assignment_partitioning_invariance(spark, tiny):
+def test_assignment_partitioning_invariance(spark, tiny, fixture_repo_files):
     """The assignment is a pure function of the DATA: repartitioning
     either side (and scrambling row order) must not change any
     (pub, cluster, fused) — the determinism property the max(struct)
-    tie-break and the hash-free scoring exist to guarantee."""
+    tie-break and the hash-free scoring exist to guarantee. Compared
+    bit for bit: exact ties decide the greatest-cluster_id rule, so a
+    last-bit drift in t or fused is a different answer. The fixture
+    snapshot has multi-member, multi-token clusters, so a cluster's
+    norm sums many idf terms; its arrivals and snapshot are split from
+    one parsed frame, as a caller holding one corpus would split it."""
+    from hgcn_name_disambiguation_spark.operators.parse import (
+        parse_publications,
+    )
+
     new = spark.createDataFrame(
         [
             _pub("b", "n1", ["alpha", "zeta"], ["ann"], "vX"),
@@ -268,13 +278,10 @@ def test_assignment_partitioning_invariance(spark, tiny):
         PUB_SCHEMA,
     )
     base = sorted(
-        (r.block_key, r.pub_id, r.cluster_id, None if r.fused is None
-         else round(r.fused, 12))
-        for r in assign_to_clusters(new, tiny, DEFAULT_CONFIG).collect()
+        tuple(r) for r in assign_to_clusters(new, tiny, DEFAULT_CONFIG).collect()
     )
     scrambled = sorted(
-        (r.block_key, r.pub_id, r.cluster_id, None if r.fused is None
-         else round(r.fused, 12))
+        tuple(r)
         for r in assign_to_clusters(
             new.repartition(7, "pub_id").sortWithinPartitions(
                 F.desc("pub_id")
@@ -284,6 +291,28 @@ def test_assignment_partitioning_invariance(spark, tiny):
         ).collect()
     )
     assert base == scrambled
+
+    pubs = parse_publications(
+        fixture_repo_files, DEFAULT_CONFIG, observe_name=None
+    )
+    held = F.xxhash64("pub_id") % 7 == 0
+    arrivals = pubs.where(held).cache()
+    snap = pubs.where(~held).withColumn(
+        "cluster_id", F.col("label").cast("string")
+    ).cache()
+
+    def scores(snapshot):
+        return sorted(
+            tuple(r) for r in score_against_clusters(
+                arrivals, cluster_profiles(snapshot, DEFAULT_CONFIG),
+                DEFAULT_CONFIG,
+            ).collect()
+        )
+
+    want = scores(snap)
+    assert len(want) > arrivals.count() > 0
+    assert scores(snap.repartition(1)) == want
+    assert scores(snap.repartition(9, "pub_id")) == want
 
 
 def test_edge_cases_one_row_per_pub(spark):
@@ -328,9 +357,10 @@ def test_edge_cases_one_row_per_pub(spark):
     assert {(r.pub_id, r.cluster_id) for r in scored} == {("m4", "c1")}
 
 
-def test_assigner_replay_is_exactly_once(spark, tmp_path):
-    """A replayed foreachBatch call (same batch_id) replaces that
-    batch's assignments instead of appending them a second time."""
+@pytest.fixture(scope="module")
+def labelled_split(spark):
+    """A labelled snapshot (cluster_id = the true entity) and the raw
+    rows it never saw, split in two micro-batches."""
     import zlib
 
     from hgcn_name_disambiguation_spark.fixtures.generator import (
@@ -340,9 +370,6 @@ def test_assigner_replay_is_exactly_once(spark, tmp_path):
     from hgcn_name_disambiguation_spark.operators.parse import (
         parse_publications,
     )
-    from hgcn_name_disambiguation_spark.streaming.incremental import (
-        StreamingClusterAssigner,
-    )
 
     rows = generate_repo_files(seed=5, blocks=2, pubs_per_block=12, skew_factor=1)
     new_rows = [r for r in rows if zlib.crc32(r["path"].encode()) % 4 == 0]
@@ -351,9 +378,27 @@ def test_assigner_replay_is_exactly_once(spark, tmp_path):
         spark.createDataFrame(snap_rows, REPO_FILES_SCHEMA), observe_name=None
     ).withColumn("cluster_id", F.col("label").cast("string"))
     half = max(1, len(new_rows) // 2)
-    df = spark.createDataFrame(new_rows[:half], REPO_FILES_SCHEMA)
-    df2 = spark.createDataFrame(new_rows[half:], REPO_FILES_SCHEMA)
+    batches = [
+        spark.createDataFrame(b, REPO_FILES_SCHEMA)
+        for b in (new_rows[:half], new_rows[half:])
+    ]
+    return snap, batches, new_rows
 
+
+def test_assigner_replay_is_exactly_once(spark, tmp_path, labelled_split):
+    """A replayed foreachBatch call (same batch_id) replaces that
+    batch's assignments instead of appending them a second time."""
+    from hgcn_name_disambiguation_spark.fixtures.generator import (
+        REPO_FILES_SCHEMA,
+    )
+    from hgcn_name_disambiguation_spark.operators.parse import (
+        parse_publications,
+    )
+    from hgcn_name_disambiguation_spark.streaming.incremental import (
+        StreamingClusterAssigner,
+    )
+
+    snap, (df, df2), new_rows = labelled_split
     assigner = StreamingClusterAssigner(spark, snap, str(tmp_path / "out"))
     assigner.process_batch(df, 1)
     assigner.process_batch(df, 1)  # replay
@@ -365,3 +410,43 @@ def test_assigner_replay_is_exactly_once(spark, tmp_path):
     ).count()
     assert got.count() == got.select("block_key", "pub_id").distinct().count()
     assert got.count() == n_pubs > 0
+
+
+# Spark jobs the streaming assigner launches on the labelled split, as
+# measured: counting the snapshot profile, the snapshot's own parse
+# included (the profile is a projection of its rows; a JVM index build
+# took 21), and one hand-off (parse, the per-block assign kernel,
+# the write).
+PROFILE_JOBS = 5
+HANDOFF_JOBS = 4
+
+
+def test_assigner_job_count(spark, tmp_path, labelled_split):
+    """The profile costs its own materialisation and a hand-off its
+    parse, kernel and write: no JVM index build or extra hand-off job
+    may creep back in."""
+    from hgcn_name_disambiguation_spark.streaming.incremental import (
+        StreamingClusterAssigner,
+    )
+
+    snap, (df, df2), _ = labelled_split
+    sc = spark.sparkContext
+    spark.catalog.clearCache()  # an earlier assigner may hold this profile
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assigner = StreamingClusterAssigner(spark, snap, str(tmp_path / "out"))
+    profile_jobs = jobs("assign_profile", lambda: [
+        p.count() for p in assigner.profiles.values()
+    ])
+    assigner.process_batch(df, 1)  # warm-up
+    handoff_jobs = jobs("assign_handoff",
+                        lambda: assigner.process_batch(df2, 2))
+    assert profile_jobs <= PROFILE_JOBS
+    assert handoff_jobs <= HANDOFF_JOBS

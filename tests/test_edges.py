@@ -109,9 +109,9 @@ def test_title_single_token_cos_edge(spark):
 
     for cos in (r.title_cos, 0.95):
         score = fuse_scores(0.0, cos, 0.0, 0.0)
-        assert not match_flags(score, 0.0, r.w_title, cos, 0.0, 0.0)[0]
+        assert not match_flags(score, 0.0, r.w_title, cos, 0.0)[0]
     # two shared tokens at the same cosine do match
-    assert match_flags(fuse_scores(0.0, 0.95, 0.0), 0.0, 2.0, 0.95, 0.0, 0.0)[0]
+    assert match_flags(fuse_scores(0.0, 0.95, 0.0), 0.0, 2.0, 0.95, 0.0)[0]
 
     # legacy behavior restorable: min_title_cos_overlap=2 drops the row
     cfg = PipelineConfig(min_title_cos_overlap=2)

@@ -286,7 +286,7 @@ def main(argv=None) -> int:
             f"Non-default PipelineConfig fields: {nd}. Effective adaptive "
             f"layer for THIS run: name_constraints="
             f"{cfg.name_constraints}, weak_bridge_gate={cfg.weak_bridge_gate}, "
-            f"rare_rescue_cos={cfg.rare_rescue_cos}, cluster_refine_rounds="
+            f"cluster_refine_rounds="
             f"{cfg.cluster_refine_rounds}, refine taus r/c/a="
             f"{cfg.refine_tau_rare}/{cfg.refine_tau_common}/"
             f"{cfg.refine_tau_amb}, min-edges "
