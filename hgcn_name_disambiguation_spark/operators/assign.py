@@ -49,9 +49,7 @@ from ..config import DEFAULT_CONFIG, PipelineConfig
 from . import scoring
 
 
-def cluster_profiles(
-    clustered: DataFrame, config: PipelineConfig = DEFAULT_CONFIG
-) -> dict[str, DataFrame]:
+def cluster_profiles(clustered: DataFrame) -> dict[str, DataFrame]:
     """The snapshot side, built once per snapshot and reused across
     micro-batches: ``{"profile": (block_key, pub_id, cluster_id,
     authors, venue, title_toks)}``, the snapshot's own rows
@@ -224,6 +222,4 @@ def assign_to_clusters(
     """``assign_with_profiles`` against a clustered snapshot, indexed
     on the fly. Deterministic: ties on fused break toward the greatest
     cluster_id."""
-    return assign_with_profiles(
-        new_pubs, cluster_profiles(clustered, config), config
-    )
+    return assign_with_profiles(new_pubs, cluster_profiles(clustered), config)

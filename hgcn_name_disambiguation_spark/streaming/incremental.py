@@ -161,11 +161,12 @@ class StreamingClusterAssigner:
     (which re-resolves touched blocks and is the heavier, exact path).
 
     The snapshot-side profile (the snapshot's own rows, partitioned by
-    block) is built ONCE at construction and persisted; each
-    micro-batch pays a broadcast semi-join to its blocks and one
-    per-block cogroup kernel that indexes the block's rows, scores and
-    picks (``assign_with_profiles``, as ``assign_to_clusters`` runs it:
-    batch and stream agree BY CONSTRUCTION). foreachBatch, because a cogroup does not run on a
+    block) is built ONCE at construction and persisted until
+    :meth:`close`; each micro-batch pays a broadcast semi-join to its
+    blocks and one per-block cogroup kernel that indexes the block's
+    rows, scores and picks (``assign_with_profiles``, as
+    ``assign_to_clusters`` runs it: batch and stream agree BY
+    CONSTRUCTION). foreachBatch, because a cogroup does not run on a
     streaming DataFrame. Exactly-once on ``batch_id``: each micro-batch
     overwrites its own ``assignments/batch_id=<id>``, so a replayed
     call replaces that batch's rows.
@@ -184,9 +185,15 @@ class StreamingClusterAssigner:
         self.config = config
         self.out_dir = out_dir
         self.profiles = {
-            name: df.persist() for name, df in
-            cluster_profiles(clustered, config).items()
+            name: df.persist() for name, df in cluster_profiles(clustered).items()
         }
+
+    def close(self) -> None:
+        """Release the persisted profile. Until then the same profile,
+        built again over the same snapshot (by another assigner, say),
+        reads this cached copy."""
+        for df in self.profiles.values():
+            df.unpersist()
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.assign import assign_with_profiles

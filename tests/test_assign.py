@@ -70,7 +70,7 @@ def test_channel_math_hand_computed(spark, tiny):
         [_pub("b", "n1", ["alpha", "zeta"], ["ann"], "vX")], PUB_SCHEMA
     )
     scored = score_against_clusters(
-        new, cluster_profiles(tiny, DEFAULT_CONFIG), DEFAULT_CONFIG
+        new, cluster_profiles(tiny), DEFAULT_CONFIG
     ).collect()
     by_cluster = {r.cluster_id: r for r in scored}
     assert set(by_cluster) == {"c1"}  # no shared anything with c2
@@ -223,17 +223,20 @@ def test_streaming_matches_batch(spark, tmp_path):
         1
     ).write.mode("append").parquet(src)
 
-    assigner = StreamingClusterAssigner(spark, clustered, out_dir)
     stream = (
         spark.readStream.schema(REPO_FILES_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = assigner.attach(stream).start()
+    assigner = StreamingClusterAssigner(spark, clustered, out_dir)
     try:
-        q.processAllAvailable()
+        q = assigner.attach(stream).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     finally:
-        q.stop()
+        assigner.close()
 
     got = sorted(
         (r.block_key, r.pub_id, r.cluster_id)
@@ -304,8 +307,7 @@ def test_assignment_partitioning_invariance(spark, tiny, fixture_repo_files):
     def scores(snapshot):
         return sorted(
             tuple(r) for r in score_against_clusters(
-                arrivals, cluster_profiles(snapshot, DEFAULT_CONFIG),
-                DEFAULT_CONFIG,
+                arrivals, cluster_profiles(snapshot), DEFAULT_CONFIG
             ).collect()
         )
 
@@ -352,7 +354,7 @@ def test_edge_cases_one_row_per_pub(spark):
     assert out["m4"].cluster_id == "c1"
     assert out["m4"].fused == pytest.approx(1.0, abs=1e-12)
     scored = score_against_clusters(
-        new, cluster_profiles(snap, cfg), cfg
+        new, cluster_profiles(snap), cfg
     ).collect()
     assert {(r.pub_id, r.cluster_id) for r in scored} == {("m4", "c1")}
 
@@ -400,9 +402,12 @@ def test_assigner_replay_is_exactly_once(spark, tmp_path, labelled_split):
 
     snap, (df, df2), new_rows = labelled_split
     assigner = StreamingClusterAssigner(spark, snap, str(tmp_path / "out"))
-    assigner.process_batch(df, 1)
-    assigner.process_batch(df, 1)  # replay
-    assigner.process_batch(df2, 2)
+    try:
+        assigner.process_batch(df, 1)
+        assigner.process_batch(df, 1)  # replay
+        assigner.process_batch(df2, 2)
+    finally:
+        assigner.close()
     got = assigner.assignments()
     assert got.columns == ["block_key", "pub_id", "cluster_id", "fused"]
     n_pubs = parse_publications(
@@ -431,7 +436,6 @@ def test_assigner_job_count(spark, tmp_path, labelled_split):
 
     snap, (df, df2), _ = labelled_split
     sc = spark.sparkContext
-    spark.catalog.clearCache()  # an earlier assigner may hold this profile
 
     def jobs(group, fn):
         sc.setJobGroup(group, group)
@@ -442,11 +446,15 @@ def test_assigner_job_count(spark, tmp_path, labelled_split):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     assigner = StreamingClusterAssigner(spark, snap, str(tmp_path / "out"))
-    profile_jobs = jobs("assign_profile", lambda: [
-        p.count() for p in assigner.profiles.values()
-    ])
-    assigner.process_batch(df, 1)  # warm-up
-    handoff_jobs = jobs("assign_handoff",
-                        lambda: assigner.process_batch(df2, 2))
+    try:
+        profile_jobs = jobs("assign_profile", lambda: [
+            p.count() for p in assigner.profiles.values()
+        ])
+        assigner.process_batch(df, 1)  # warm-up
+        handoff_jobs = jobs("assign_handoff",
+                            lambda: assigner.process_batch(df2, 2))
+    finally:
+        assigner.close()
+    assert not any(p.is_cached for p in assigner.profiles.values())
     assert profile_jobs <= PROFILE_JOBS
     assert handoff_jobs <= HANDOFF_JOBS

@@ -1,6 +1,11 @@
 """Structured Streaming tests: file source -> memory/foreachBatch sink,
 driven synchronously with processAllAvailable()."""
 
+import json
+
+import pytest
+
+from hgcn_name_disambiguation_spark.config import PipelineConfig
 from hgcn_name_disambiguation_spark.fixtures.generator import (
     REPO_FILES_SCHEMA,
     generate_repo_files,
@@ -81,6 +86,40 @@ def test_incremental_replay_is_exactly_once(spark, tmp_path):
             clean.clusters().select("block_key", "pub_id", "cluster_id").collect(),
         )
     )
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="ROADMAP item 9: each micro-batch names repeated raw pub_ids "
+    "on its own, so a re-harvest in a later batch keeps the raw id",
+)
+def test_incremental_repeated_raw_id_matches_batch(spark, tmp_path):
+    """A row in batch 1 that reuses a batch-0 row's raw pub_id and block
+    with an edited title (a re-harvest): incremental ER still keeps one
+    row per (block_key, pub_id) and the clusters of the batch pipeline
+    on the union, which names the row with the greater content_sha
+    ``<id>#1``."""
+    cfg = PipelineConfig(semantic_merge=False)
+    rows = generate_repo_files(seed=11, blocks=2, pubs_per_block=12, skew_factor=2)
+    record = json.loads(rows[0]["content"])
+    record["title"] += " revisited"
+    reharvest = dict(
+        rows[0], content=json.dumps(record, sort_keys=True, separators=(",", ":"))
+    )
+    half = len(rows) // 2
+    batches = [rows[:half], rows[half:] + [reharvest]]
+
+    inc = IncrementalDisambiguator(spark, str(tmp_path / "store"), cfg)
+    for batch_id, batch in enumerate(batches):
+        inc.process_batch(spark.createDataFrame(batch, REPO_FILES_SCHEMA), batch_id)
+
+    got = inc.clusters().select("block_key", "pub_id", "cluster_id")
+    assert got.count() == got.select("block_key", "pub_id").distinct().count()
+    batch = run_pipeline(
+        spark.createDataFrame(rows + [reharvest], REPO_FILES_SCHEMA), cfg
+    ).clustered
+    want = batch.select("block_key", "pub_id", "cluster_id")
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_streaming_code_curation(spark, tmp_path):
